@@ -1,6 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,9 +32,11 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: the CSV scan parallelizes per file/split; the transform is a
   * narrow projection (whole-stage codegen, no shuffle). The only shuffle is
-  * the optional global sort before an ordered append — at 100 TB the ordered
-  * sink should switch to hour-partitioned writes where order is only enforced
-  * within a partition (see `writeOrderedPartitioned`).
+  * the global sort before an ordered append of a batch that Spark reads as
+  * more than one split; an hourly file (~20 KB) is one split, so its append
+  * sorts in place and writes in a single job (see `writeOrdered`). At 100 TB
+  * the ordered sink should switch to hour-partitioned writes where order is
+  * only enforced within a partition (see `writeOrderedPartitioned`).
   */
 object Purchases {
 
@@ -169,22 +174,60 @@ object Purchases {
     etl(spark, path, failFast).as[Purchase]
   }
 
-  /** A10/A12: ordered append — global sort on the designated timestamp before
+  /** A10/A12: ordered append — sort on the designated timestamp before
     * writing, reproducing QuestDB's in-order append contract (README.md:373).
-    * Reference-fidelity path only: a global sort range-shuffles to give a
-    * totally ordered file set. Do NOT use for the analytic path at scale.
+    *
+    * One-split rule: when [[readsOneSplit]] holds, the scan is one Spark
+    * partition and projections and filters keep it one, so sorting within
+    * that partition is already a total order. The append then writes one
+    * sorted part file in one job, without the range partitioner's sampling
+    * job and shuffle stage. Any other input keeps the global sort, which
+    * range-shuffles to give a totally ordered file set (part files in name
+    * order). Reference-fidelity path only: do NOT use for the analytic path
+    * at scale.
     */
-  def writeOrdered(df: DataFrame, path: String): Unit =
-    df.orderBy("purchase_date").write.mode(SaveMode.Append).parquet(path)
+  def writeOrdered(df: DataFrame, path: String): Unit = {
+    val sorted =
+      if (readsOneSplit(df)) df.sortWithinPartitions("purchase_date")
+      else df.orderBy("purchase_date")
+    sorted.write.mode(SaveMode.Append).parquet(path)
+  }
+
+  /** True when `df` is only projections and filters (no subqueries, which
+    * plan as joins) over a file relation of exactly one file, and that file
+    * is no longer than `FilePartition.maxSplitBytes`, so the scan splits it
+    * once — the bound and the listing Spark's file scan itself uses. Reads
+    * the already-analyzed plan and the relation's file index, which for a
+    * path read serves the listing cached at analysis: no second planning of
+    * the query and no job.
+    */
+  private[etl] def readsOneSplit(df: DataFrame): Boolean = {
+    def oneSplit(plan: LogicalPlan): Boolean = plan match {
+      case p @ (_: Project | _: Filter) =>
+        !p.expressions.exists(SubqueryExpression.hasSubquery) && oneSplit(p.children.head)
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        val listing = fs.location.listFiles(Nil, Nil)
+        listing.flatMap(_.files) match {
+          case Seq(file) => file.getLen <= FilePartition.maxSplitBytes(df.sparkSession, listing)
+          case _ => false
+        }
+      case _ => false
+    }
+    oneSplit(df.queryExecution.analyzed)
+  }
 
   /** Scale path for the designated-timestamp contract: partition by hour,
     * sort within partitions — order holds per partition (what QuestDB's
     * later O3 writes relax to), writes stay parallel at 100 TB.
+    * The sort leads with `hour` because a partitioned write requires its
+    * input ordered by the partition column: a sort on `purchase_date` alone
+    * would be replaced by the writer's own sort on `hour`, which keeps no
+    * order within an hour.
     */
   def writeOrderedPartitioned(df: DataFrame, path: String): Unit =
     df.withColumn("hour", date_trunc("hour", col("purchase_date")))
       .repartition(col("hour"))
-      .sortWithinPartitions("purchase_date")
+      .sortWithinPartitions("hour", "purchase_date")
       .write.mode(SaveMode.Append).partitionBy("hour").parquet(path)
 
   /** A11: per-record error-tolerant sink. The reference catches each INSERT

@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -189,12 +190,22 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A12 scale path: hour-partitioned ordered write keeps per-partition order") {
-    val out = Files.createTempDirectory("purch_part").toFile.getAbsolutePath + "/t"
-    Purchases.writeOrderedPartitioned(Purchases.etl(spark, exampleDir), out)
-    val back = spark.read.parquet(out)
-    assert(back.count() === 909)
+    // three generated hourly files, rows shuffled so the sort has work
+    val (landing, batches) = HourlyBatches.landing(0 until 3)
+    val out = Files.createTempDirectory("purch_part").resolve("t")
+    Purchases.writeOrderedPartitioned(Purchases.etl(spark, landing.toString), out.toString)
+    val back = spark.read.parquet(out.toString)
+    assert(back.count() === batches.map(_.size).sum.toLong)
     // partition column `hour` exists and covers the three hours
     assert(back.select("hour").distinct().count() === 3)
+    // order holds within each part file
+    val parts = Files.walk(out).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.startsWith("part-") && p.getFileName.toString.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      assert(HourlyBatches.nonDecreasing(HourlyBatches.datesInFileOrder(spark, f)),
+        s"purchase_date decreases in $f")
+    }
   }
 
   test("A3/A4: event and object guards mirror the reference predicates") {
