@@ -22,4 +22,15 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
-echo "[precommit] OK - main + test sources compile"
+# The benchmark (perfbench/) is its own sbt build over the root's main
+# sources and calls public store functions: a signature change there
+# compiles above but breaks `python3 perfbench/run.py`. Compile it with the
+# environment run.py builds it with (offline, its SBT_OPTS).
+echo "[precommit] perfbench compile (the benchmark's own build)..."
+repos="$HOME/.sbt/repositories"
+opts="-Dsbt.offline=true -Xmx2g"
+if [ -f "$repos" ]; then
+  opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
+fi
+(cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
+echo "[precommit] OK - main + test sources and the benchmark compile"

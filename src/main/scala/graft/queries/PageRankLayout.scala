@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.{QueryDef, Tables}
 import graft.util.{ArtifactStore, CorpusFingerprint}
@@ -120,7 +120,10 @@ object PageRankLayout {
     * xor-cancellation blind spot in the delete guard AND makes the
     * corpus fingerprint derivable from the ledger alone, so neither the
     * build nor a maintenance commit pays a separate corpus/batch-sized
-    * fingerprint scan. */
+    * fingerprint scan. The store declares the schema of every table it
+    * writes (`layoutMetaSchema`, `edgesSchema`, `nodesSchema`,
+    * `orderkeysSchema`) and reads them only through it, so changing a
+    * column means bumping this version. */
   private val LayoutVer = 3L
 
   def layoutRoot(dataDir: String): String =
@@ -136,16 +139,16 @@ object PageRankLayout {
   /** The committed generation the layout's "pointer" (meta.last_gen)
     * currently resolves to. */
   private[graft] def currentGen(spark: SparkSession, dataDir: String): Long =
-    spark.read.parquet(s"${layoutRoot(dataDir)}/meta").head().getAs[Long]("last_gen")
+    readMeta(spark, dataDir).getAs[Long]("last_gen")
 
   /** Current-generation stored edge frame — declares the table if this
     * session's catalog hasn't seen it yet (fresh JVM over surviving files). */
   private[graft] def currentEdges(spark: SparkSession, dataDir: String): DataFrame = {
     val root = layoutRoot(dataDir)
-    val m = spark.read.parquet(s"$root/meta").head()
+    val m = readMeta(spark, dataDir)
     val g = m.getAs[Long]("last_gen")
-    declare(spark, edgesTable(dataDir, g), s"$root/v=$g/edges", "src",
-      m.getAs[Int]("buckets"))
+    declare(spark, edgesTable(dataDir, g), s"$root/v=$g/edges", edgesSchema,
+      "src", m.getAs[Int]("buckets"))
     spark.table(edgesTable(dataDir, g))
   }
 
@@ -205,24 +208,43 @@ object PageRankLayout {
   /** Re-declare an external bucketed table over already-written files —
     * the fresh-JVM path: files persist across sessions, the in-memory
     * catalog does not. Bucket metadata lives in the declaration, so the
-    * DDL must repeat the layout the files were written with. */
+    * DDL must repeat the layout the files were written with; the columns
+    * come from the table's declared `schema`. */
   private def declare(spark: SparkSession, table: String, loc: String,
-      key: String, buckets: Int): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      val ddl = spark.read.parquet(loc).schema.toDDL
-      spark.sql(s"CREATE TABLE $table ($ddl) USING PARQUET " +
+      schema: StructType, key: String, buckets: Int): Unit =
+    if (!spark.catalog.tableExists(table))
+      spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING PARQUET " +
         s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
         s"LOCATION '$loc'")
-    }
+
+  /** `v=G/edges`, written by [[normalized]] through [[commitGen]]. */
+  private[graft] val edgesSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("w", DoubleType), StructField("wn", DoubleType)))
+
+  /** `v=G/nodes`, written by [[commitGen]]. */
+  private[graft] val nodesSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** `v=G/orderkeys`: the [[orderLedger]] columns, then the `ob`
+    * partition column. */
+  private[graft] val orderkeysSchema = StructType(Seq(
+    StructField("l_orderkey", LongType), StructField("n_rows", LongType),
+    StructField("chash", LongType), StructField("csum", DecimalType(38, 0)),
+    StructField("ob", IntegerType)))
 
   private def writeMeta(spark: SparkSession, root: String, nodeCount: Long,
       buckets: Int, gen: Long, fp: Fp): Unit = {
     import spark.implicits._
     Seq((fp.count, nodeCount, buckets, fp.xorFp, fp.sumFp.toString, gen, LayoutVer))
-      .toDF("lineitem_count", "node_count", "buckets", "fp_xor", "fp_sum",
-        "last_gen", "layout_ver")
+      .toDF(layoutMetaSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
+
+  private[graft] val layoutMetaSchema = StructType(Seq(
+    StructField("lineitem_count", LongType), StructField("node_count", LongType),
+    StructField("buckets", IntegerType), StructField("fp_xor", LongType),
+    StructField("fp_sum", StringType), StructField("last_gen", LongType),
+    StructField("layout_ver", LongType)))
 
   private def metaFp(m: Row): Fp =
     Fp(m.getAs[Long]("lineitem_count"), m.getAs[Long]("fp_xor"),
@@ -415,8 +437,8 @@ object PageRankLayout {
     // commit point: meta (fingerprint + pointer) lands only after every
     // generation table did — a crash before this line leaves the previous
     // generation committed and the half-written one invisible
-    writeMeta(spark, root, nodeCount, buckets, gen,
-      fp.getOrElse(ledgerFp(spark.read.parquet(s"$genRoot/orderkeys"))))
+    writeMeta(spark, root, nodeCount, buckets, gen, fp.getOrElse(ledgerFp(
+      spark.read.schema(orderkeysSchema).parquet(s"$genRoot/orderkeys"))))
     // GC: everything at or below gen-2 is unreachable (readers resolve
     // through meta; the one retained predecessor covers frames resolved
     // just before this commit). Carried files survive their origin
@@ -473,7 +495,7 @@ object PageRankLayout {
     buildLayoutFrom(spark, dataDir, liProjection(spark, dataDir))
 
   private def readMeta(spark: SparkSession, dataDir: String): Row =
-    spark.read.parquet(s"${layoutRoot(dataDir)}/meta").head()
+    ArtifactStore.readMeta(spark, layoutMetaSchema, s"${layoutRoot(dataDir)}/meta")
 
   /** The unified maintenance core — ONE generation commit folding a
     * DELETE leg and an APPEND leg of ORDER-COMPLETE lineitem rows into
@@ -555,7 +577,7 @@ object PageRankLayout {
     // into a batch-proportional one; partition pruning via the isin on
     // the ob directory column)
     val touchedObs: Set[Int] = delL.obs ++ addL.obs
-    val stored = spark.read.parquet(s"$root/v=$last/orderkeys")
+    val stored = spark.read.schema(orderkeysSchema).parquet(s"$root/v=$last/orderkeys")
     val storedTouchedObs =
       if (touchedObs.isEmpty) stored.where(lit(false))
       else stored.where(col("ob").isin(touchedObs.toSeq: _*))
@@ -656,11 +678,10 @@ object PageRankLayout {
     val touchedFiles = bucketFiles(spark, prevEdgesDir)
       .collect { case (b, p) if touched(b) => p }
     val storedTouched =
-      if (touchedFiles.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-          StructField("src", LongType), StructField("dst", LongType),
-          StructField("w", DoubleType))))
-      else spark.read.parquet(touchedFiles: _*).select("src", "dst", "w")
+      (if (touchedFiles.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], edgesSchema)
+      else spark.read.schema(edgesSchema).parquet(touchedFiles: _*))
+        .select("src", "dst", "w")
     // materialized ONCE for its two consumers (negative check + commit).
     // persist, NOT localCheckpoint (round 21): InMemoryRelation preserves
     // the HashPartitioning(src, buckets) the repartition established, so
@@ -755,7 +776,7 @@ object PageRankLayout {
 
   private def batchMeta(spark: SparkSession, dataDir: String, what: String): Row = {
     val root = layoutRoot(dataDir)
-    try spark.read.parquet(s"$root/meta").head()
+    try readMeta(spark, dataDir)
     catch {
       case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
         throw new IllegalStateException(
@@ -832,31 +853,43 @@ object PageRankLayout {
   /** Trust a stored layout only while its fingerprint — row count AND
     * order-independent content hash of (l_orderkey, l_partkey) — matches
     * the live corpus AND its on-disk format version is current; otherwise
-    * rebuild. One meta read; only the expected missing/corrupt-artifact
-    * failures mean "stale" (anything else — a permissions fault, a
-    * concurrent writer — propagates instead of silently triggering a
-    * corpus-sized rebuild). Always leaves this session's catalog holding
-    * the current generation's declarations. */
+    * rebuild. One meta read; only a missing meta or an older format means
+    * "stale" (anything else — a permissions fault, a concurrent writer —
+    * propagates instead of silently triggering a corpus-sized rebuild).
+    * Always leaves this session's catalog holding the current
+    * generation's declarations. */
   def ensureLayout(spark: SparkSession, dataDir: String): Unit = {
+    ensuredLayoutMeta(spark, dataDir)
+    ()
+  }
+
+  /** [[ensureLayout]], returning the meta row it validated or the one its
+    * rebuild wrote. */
+  private def ensuredLayoutMeta(spark: SparkSession, dataDir: String): Row = {
     val root = layoutRoot(dataDir)
-    val stored: Option[(Fp, Int, Long)] =
-      try {
-        val m = spark.read.parquet(s"$root/meta").head()
-        // older format versions (or pre-version metas, whose getAs throws
-        // IllegalArgumentException below) read as stale → rebuild
-        if (m.getAs[Long]("layout_ver") != LayoutVer) None
-        else Some((metaFp(m), m.getAs[Int]("buckets"), m.getAs[Long]("last_gen")))
-      } catch {
-        // missing artifact or a meta row from an older schema: rebuild
+    val stored =
+      try Some(readMeta(spark, dataDir))
+      catch {
         case _: AnalysisException => None
         case _: java.io.FileNotFoundException => None
-        case _: IllegalArgumentException => None
       }
-    stored match {
-      case Some((fp, buckets, gen)) if fp.matches(liFingerprint(liProjection(spark, dataDir))) =>
-        declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges", "src", buckets)
-        declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes", "id", buckets)
-      case _ => buildLayout(spark, dataDir)
+    // an older format, or a meta written before the version column (it
+    // reads as null under the declared schema), is stale
+    val current = stored.filter(m => !m.isNullAt(m.fieldIndex("layout_ver")) &&
+      m.getAs[Long]("layout_ver") == LayoutVer)
+    val li = liProjection(spark, dataDir)
+    current.filter(m => metaFp(m).matches(liFingerprint(li))) match {
+      case Some(m) =>
+        val gen = m.getAs[Long]("last_gen")
+        val buckets = m.getAs[Int]("buckets")
+        declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges",
+          edgesSchema, "src", buckets)
+        declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes",
+          nodesSchema, "id", buckets)
+        m
+      case None =>
+        buildLayoutFrom(spark, dataDir, li)
+        readMeta(spark, dataDir)
     }
   }
 
@@ -892,9 +925,7 @@ object PageRankLayout {
     * instead). */
   def fromLayoutRanks(spark: SparkSession, dataDir: String, iters: Int = 3,
       checkpointDir: Option[String] = None): DataFrame = {
-    ensureLayout(spark, dataDir)
-    val root = layoutRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = ensuredLayoutMeta(spark, dataDir)
     val cnt = meta.getAs[Long]("node_count")
     val buckets = meta.getAs[Int]("buckets")
     val gen = meta.getAs[Long]("last_gen")

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1300,7 +1300,10 @@ object Similarity {
   /** Store-format version; bumping it makes every older on-disk index
     * read as stale (ensureAnnIndex rebuilds) instead of a maintenance op
     * tripping over a missing table. v2 = generational deletes + live-cell
-    * manifest (round 20). */
+    * manifest (round 20). The store declares the schema of every table it
+    * writes (`annMetaSchema`, `cellsSchema`, `codesSchema`, `centsSchema`,
+    * `booksSchema`) and reads them only through it, so changing a column
+    * means bumping this version. */
   private val AnnFmt = 2L
 
   /** On-disk root of the persisted index for a data dir: keyed by the
@@ -1340,10 +1343,18 @@ object Similarity {
     import spark.implicits._
     Seq((fp.count, dims, fp.xorFp, fp.sumFp.toString, sampleN, sampleMax,
       lastGen, AnnFmt))
-      .toDF("corpus_count", "dims", "fp_xor", "fp_sum", "sample_n",
-        "sample_max", "last_gen", "fmt")
+      .toDF(annMetaSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
+
+  private[graft] val annMetaSchema = StructType(Seq(
+    StructField("corpus_count", LongType), StructField("dims", IntegerType),
+    StructField("fp_xor", LongType), StructField("fp_sum", StringType),
+    StructField("sample_n", LongType), StructField("sample_max", LongType),
+    StructField("last_gen", LongType), StructField("fmt", LongType)))
+
+  private def readAnnMeta(spark: SparkSession, root: String): Row =
+    graft.util.ArtifactStore.readMeta(spark, annMetaSchema, s"$root/meta")
 
   /** The live (gen, c_id) code partitions as of generation `gen` — the
     * cell MANIFEST a versioned table format would keep in its snapshot
@@ -1356,19 +1367,22 @@ object Similarity {
     * verdict directive 2). */
   private def readCellManifest(spark: SparkSession, root: String,
       gen: Long): Seq[(Long, Int)] =
-    try spark.read.parquet(s"$root/cells/v=$gen")
-      .collect().map(r => (r.getAs[Long]("gen"), r.getAs[Int]("c_id"))).toSeq
+    try spark.read.schema(cellsSchema).parquet(s"$root/cells/v=$gen")
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
     catch {
-      // an empty-index manifest writes no data files — empty live set
-      case _: org.apache.spark.sql.AnalysisException => Seq.empty
+      // a missing manifest directory is the empty live set
+      case _: AnalysisException => Seq.empty
     }
 
   private def writeCellManifest(spark: SparkSession, root: String, gen: Long,
       live: Seq[(Long, Int)]): Unit = {
     import spark.implicits._
-    live.toDF("gen", "c_id")
+    live.toDF(cellsSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/cells/v=$gen")
   }
+
+  private[graft] val cellsSchema = StructType(Seq(
+    StructField("gen", LongType), StructField("c_id", IntegerType)))
 
   private def annMetaFp(m: org.apache.spark.sql.Row): graft.util.CorpusFingerprint.Fp =
     graft.util.CorpusFingerprint.Fp(m.getAs[Long]("corpus_count"),
@@ -1433,9 +1447,9 @@ object Similarity {
       .write.mode("overwrite").partitionBy("gen", "c_id").parquet(s"$root/codes")
     coarse.flatMap { case (c, vals) =>
       vals.zipWithIndex.map { case (v, d) => (c, d, v) }
-    }.toDF("c", "d", "val")
+    }.toDF(centsSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/cents")
-    books.toDF("s", "j", "i", "val")
+    books.toDF(booksSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/books")
     // a rebuild restarts the generation clock: drop stale manifests, then
     // record gen 0's live cells from the just-written partition listing
@@ -1449,6 +1463,14 @@ object Similarity {
       sample.map(_._1).max, lastGen = 0L, embFingerprint(emb))
     root
   }
+
+  private[graft] val centsSchema = StructType(Seq(
+    StructField("c", IntegerType), StructField("d", IntegerType),
+    StructField("val", LongType)))
+
+  private[graft] val booksSchema = StructType(Seq(
+    StructField("s", IntegerType), StructField("j", IntegerType),
+    StructField("i", IntegerType), StructField("val", LongType)))
 
   /** Fold an appended batch of embeddings into the stored index — the
     * incremental-maintenance path (round-18 verdict directive 1): the
@@ -1476,17 +1498,23 @@ object Similarity {
   def appendAnnIndex(spark: SparkSession, dataDir: String, batch: DataFrame): Unit =
     if (!batch.isEmpty) {
       val root = annIndexRoot(dataDir)
-      val meta = spark.read.parquet(s"$root/meta").head()
+      val meta = readAnnMeta(spark, root)
       maintainAnnGen(spark, root, meta, emptyEmb(spark), batch,
         gen = meta.getAs[Long]("last_gen") + 1L)
     }
 
-  private val codesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id", LongType),
-    org.apache.spark.sql.types.StructField("s", IntegerType),
-    org.apache.spark.sql.types.StructField("code", IntegerType),
-    org.apache.spark.sql.types.StructField("gen", IntegerType),
-    org.apache.spark.sql.types.StructField("c_id", IntegerType)))
+  /** The code table as read: data columns, then the `gen` and `c_id`
+    * partition columns (typed as partition discovery types them). */
+  private[graft] val codesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("s", IntegerType),
+    StructField("code", IntegerType), StructField("gen", IntegerType),
+    StructField("c_id", IntegerType)))
+
+  /** The stored code partitions `live` (a cell manifest) lists. */
+  private def readCodes(spark: SparkSession, root: String,
+      live: Seq[(Long, Int)]): DataFrame =
+    spark.read.schema(codesSchema).option("basePath", s"$root/codes")
+      .parquet(live.map { case (g, c) => s"$root/codes/gen=$g/c_id=$c" }: _*)
 
   /** Stored code rows READERS may trust: exactly the partitions the
     * committed generation's cell manifest lists, read path-scoped (with
@@ -1494,18 +1522,18 @@ object Similarity {
     * predicate still prunes at the directory level). Uncommitted
     * generations (a crash between the code write and the meta commit) and
     * partitions superseded by a delete's generational rewrite are both
-    * invisible here the moment meta resolves. The manifest collect is
-    * bounded: one row per live partition (≤ commits × [[IdxC]]). */
+    * invisible here the moment meta resolves. `live` is the committed
+    * generation's manifest ([[readCellManifest]]; a bounded collect, one
+    * row per live partition, ≤ commits × [[IdxC]]). */
   private def committedCodes(spark: SparkSession, root: String,
-      meta: org.apache.spark.sql.Row): DataFrame = {
-    val live = readCellManifest(spark, root, meta.getAs[Long]("last_gen"))
+      live: Seq[(Long, Int)]): DataFrame =
     if (live.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], codesSchema)
-    else
-      spark.read.option("basePath", s"$root/codes")
-        .parquet(live.map { case (g, c) => s"$root/codes/gen=$g/c_id=$c" }: _*)
-  }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], codesSchema)
+    else readCodes(spark, root, live)
+
+  /** The committed generation's cell manifest. */
+  private def liveCells(spark: SparkSession, root: String, meta: Row): Seq[(Long, Int)] =
+    readCellManifest(spark, root, meta.getAs[Long]("last_gen"))
 
   private def emptyEmb(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -1625,7 +1653,10 @@ object Similarity {
     val nAdd = addLeg.n
     require(addLeg.nDistinct == nAdd,
       "appendAnnIndex: the append batch repeats vec_ids")
-    val committed = committedCodes(spark, root, meta)
+    // the committed manifest, read once: it scopes the locate pass below
+    // and is the base of this commit's manifest
+    val prevLive = liveCells(spark, root, meta)
+    val committed = committedCodes(spark, root, prevLive)
     val delIds = del.select("vec_id")
     val addIds = add.select("vec_id")
     // ONE column-pruned pass over the committed codes' s=0 rows (batch id
@@ -1687,8 +1718,7 @@ object Similarity {
     // survivors of the touched partitions, rewritten into THIS generation
     val survivors: Option[DataFrame] =
       if (touched.isEmpty) None
-      else Some(spark.read.option("basePath", s"$root/codes")
-        .parquet(touched.map { case (g, c) => s"$root/codes/gen=$g/c_id=$c" }: _*)
+      else Some(readCodes(spark, root, touched)
         .join(broadcast(delIds), Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("s"), col("code"), col("c_id")))
     // append leg encoded with the stored models — the same fused per-row
@@ -1698,9 +1728,10 @@ object Similarity {
     val appended: Option[DataFrame] =
       if (nAdd == 0) None
       else {
-        val cents = centVectorsFromDf(spark.read.parquet(s"$root/cents"))
-        val bookVs = bookVectorsFromDf(spark.read.parquet(s"$root/books"),
-          IdxM, IdxK)
+        val cents = centVectorsFromDf(
+          spark.read.schema(centsSchema).parquet(s"$root/cents"))
+        val bookVs = bookVectorsFromDf(
+          spark.read.schema(booksSchema).parquet(s"$root/books"), IdxM, IdxK)
         Some(add
           .select(col("vec_id"),
             element_at(graft.functions.VectorExprs.intNearestCells(
@@ -1731,8 +1762,6 @@ object Similarity {
         cells
     }
     // commit: manifest (live = previous − touched + written), then meta
-    val last = meta.getAs[Long]("last_gen")
-    val prevLive = readCellManifest(spark, root, last)
     val newLive = prevLive.filterNot(touched.toSet) ++ writtenCells.map(c => (gen, c))
     writeCellManifest(spark, root, gen, newLive)
     // the fingerprint transition folds the leg aggregates already computed
@@ -1787,12 +1816,11 @@ object Similarity {
     * commit); an index already at one live generation is a no-op. */
   def compactAnnIndex(spark: SparkSession, dataDir: String): Unit = {
     val root = annIndexRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
-    val last = meta.getAs[Long]("last_gen")
-    val prevLive = readCellManifest(spark, root, last)
+    val meta = readAnnMeta(spark, root)
+    val prevLive = liveCells(spark, root, meta)
     if (prevLive.map(_._1).distinct.size > 1) {
-      val gen = last + 1L
-      committedCodes(spark, root, meta)
+      val gen = meta.getAs[Long]("last_gen") + 1L
+      committedCodes(spark, root, prevLive)
         .select(col("vec_id"), col("s"), col("code"), col("c_id"))
         .withColumn("gen", lit(gen))
         .repartition(col("c_id"))
@@ -1810,10 +1838,9 @@ object Similarity {
 
   private def streamBatchMeta(spark: SparkSession, root: String,
       what: String): org.apache.spark.sql.Row =
-    try spark.read.parquet(s"$root/meta").head()
+    try readAnnMeta(spark, root)
     catch {
-      case e @ (_: org.apache.spark.sql.AnalysisException |
-                _: java.io.FileNotFoundException) =>
+      case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
         throw new IllegalStateException(
           s"$what: no committed index meta under $root — the " +
             "index must be built (buildAnnIndex) before streaming " +
@@ -1908,7 +1935,7 @@ object Similarity {
   def deleteAnnIndex(spark: SparkSession, dataDir: String, deleted: DataFrame): Unit =
     if (!deleted.isEmpty) {
       val root = annIndexRoot(dataDir)
-      val meta = spark.read.parquet(s"$root/meta").head()
+      val meta = readAnnMeta(spark, root)
       maintainAnnGen(spark, root, meta, deleted, emptyEmb(spark),
         gen = meta.getAs[Long]("last_gen") + 1L)
     }
@@ -1924,7 +1951,7 @@ object Similarity {
   def upsertAnnIndex(spark: SparkSession, dataDir: String,
       deleted: DataFrame, added: DataFrame): Unit = {
     val root = annIndexRoot(dataDir)
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = readAnnMeta(spark, root)
     maintainAnnGen(spark, root, meta, deleted, added,
       gen = meta.getAs[Long]("last_gen") + 1L)
   }
@@ -1936,26 +1963,34 @@ object Similarity {
     * partial-aggregated pass (see [[graft.util.CorpusFingerprint]] for the
     * cost contract and the production-catalog alternative); a stale index
     * can therefore never silently serve a changed corpus, even a
-    * same-count change. Meta is read once; only the expected
-    * missing/old-schema artifact failures mean "stale" — anything else
-    * propagates instead of silently triggering a corpus-sized rebuild. */
+    * same-count change. Meta is read once; a missing meta or an older
+    * format means "stale", and any other failure propagates instead of
+    * silently triggering a corpus-sized rebuild. */
   def ensureAnnIndex(spark: SparkSession, dataDir: String): String = {
-    val root = annIndexRoot(dataDir)
-    val stored: Option[graft.util.CorpusFingerprint.Fp] =
-      try {
-        val m = spark.read.parquet(s"$root/meta").head()
-        // older on-disk formats (or pre-version metas, whose getAs throws
-        // IllegalArgumentException below) read as stale → rebuild
-        if (m.getAs[Long]("fmt") != AnnFmt) None else Some(annMetaFp(m))
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-        case _: java.io.FileNotFoundException => None
-        case _: IllegalArgumentException => None
-      }
-    val live = embFingerprint(
+    ensuredAnnMeta(spark, dataDir,
       Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding")))
-    if (!stored.exists(_.matches(live))) buildAnnIndex(spark, dataDir)
-    root
+    annIndexRoot(dataDir)
+  }
+
+  /** [[ensureAnnIndex]] over the caller's (vec_id, embedding) corpus frame:
+    * returns the meta row it validated, or the one its rebuild wrote. */
+  private def ensuredAnnMeta(spark: SparkSession, dataDir: String,
+      emb: DataFrame): Row = {
+    val root = annIndexRoot(dataDir)
+    val stored =
+      try Some(readAnnMeta(spark, root))
+      catch {
+        case _: AnalysisException => None
+        case _: java.io.FileNotFoundException => None
+      }
+    // an older format, or a meta written before the version column (it
+    // reads as null under the declared schema), is stale
+    val current = stored.filter(m =>
+      !m.isNullAt(m.fieldIndex("fmt")) && m.getAs[Long]("fmt") == AnnFmt)
+    current.filter(m => annMetaFp(m).matches(embFingerprint(emb))).getOrElse {
+      buildAnnIndexFrom(spark, dataDir, emb)
+      readAnnMeta(spark, root)
+    }
   }
 
   /** Answer IVF-PQ queries FROM the persisted index — the 100 TB hot path.
@@ -1972,15 +2007,15 @@ object Similarity {
   def ivfPqFromIndexRows(spark: SparkSession, dataDir: String,
       nQueries: Int, probes: Int, shortlist: Int): DataFrame = {
     import spark.implicits._
-    val root = ensureAnnIndex(spark, dataDir)
     val emb = Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding"))
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = ensuredAnnMeta(spark, dataDir, emb)
+    val root = annIndexRoot(dataDir)
     val dsub = meta.getAs[Int]("dims") / IdxM
-    val booksDf = broadcast(spark.read.parquet(s"$root/books"))
+    val booksDf = broadcast(spark.read.schema(booksSchema).parquet(s"$root/books"))
     // (vec_id, s, code) + (gen, c_id) partitions; only COMMITTED
     // generations — an uncommitted gen left by a crashed append must
     // never leak into answers (its replay will commit it)
-    val codes = committedCodes(spark, root, meta)
+    val codes = committedCodes(spark, root, liveCells(spark, root, meta))
     // query dims: ONLY the query vectors — vec_id pushdown reaches the scan
     val qdims = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
@@ -1994,7 +2029,7 @@ object Similarity {
     // replaced; round 22), so the probe assignment is ONE single-stage
     // collect over the nQueries pushdown scan instead of an
     // explode + broadcast-join + partial-agg + window chain.
-    val cents = centVectorsFromDf(spark.read.parquet(s"$root/cents"))
+    val cents = centVectorsFromDf(spark.read.schema(centsSchema).parquet(s"$root/cents"))
     val probedPairs = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
         explode(graft.functions.VectorExprs.intNearestCells(
@@ -2041,7 +2076,7 @@ object Similarity {
       |ORDER BY vec_id, s""".stripMargin
 
   private def storedCodes(s: SparkSession, root: String): DataFrame =
-    committedCodes(s, root, s.read.parquet(s"$root/meta").head())
+    committedCodes(s, root, liveCells(s, root, readAnnMeta(s, root)))
       .select(col("vec_id"), col("c_id"), col("s"), col("code"))
       .orderBy("vec_id", "s")
 

@@ -2,7 +2,8 @@ package graft.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Filesystem operations for the persisted artifacts (the ANN index and
   * the PageRank edge layout), expressed against the Hadoop `FileSystem`
@@ -26,6 +27,11 @@ import org.apache.spark.sql.SparkSession
   *  `meta` pointer — readers resolve through it, so a crash before the
   *  meta write leaves the previous generation fully readable and the
   *  half-written one invisible. No rename of data files anywhere.
+  *
+  * Each store declares the schema of every table it writes and reads its
+  * own tables only through that schema (no Parquet schema-inference job per
+  * read); changing a column therefore means bumping the store's format
+  * version (`AnnFmt`, `LayoutVer`).
   *
   * Carried (copy-on-write) files: a maintenance commit reuses every
   * bucket file its delta does not touch. On the local filesystem the
@@ -53,6 +59,14 @@ object ArtifactStore {
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
+
+  /** The one row of a store's meta table at `path`, read through its
+    * declared `schema`. A missing path raises AnalysisException; a meta
+    * directory without a row (a crash inside the meta overwrite) raises
+    * FileNotFoundException, like a missing file. */
+  def readMeta(spark: SparkSession, schema: StructType, path: String): Row =
+    spark.read.schema(schema).parquet(path).head(1).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"$path holds no meta row"))
 
   /** Recursive delete; quiet on a missing path. */
   def delete(spark: SparkSession, path: String): Unit = {
