@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 import graft.fuzz.{DedupParamGen, QueryGen}
 import graft.util.JsonStr
@@ -25,11 +24,7 @@ object Fuzz {
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(3).getOrElse("/tmp/graft_fuzz")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       // rule-mode range-join draws differentially test RangeBinJoinRule
       .withExtensions(new GraftExtensions)
       .getOrCreate()

@@ -4,7 +4,6 @@ import java.util.Locale
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB anatomy of ONE registered query: runs it once (noop sink) and
   * prints every Spark job's duration and callsite — the measurement that
@@ -33,11 +32,7 @@ object JobProfile {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val listener = new JobListener

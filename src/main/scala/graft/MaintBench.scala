@@ -49,26 +49,6 @@ object MaintBench {
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** The stored edge table exactly as the layout legs return it. */
-  private def layoutReturn(spark: SparkSession, d: String): DataFrame = {
-    val root = graft.queries.PageRankLayout.layoutRoot(d)
-    val g = spark.read.parquet(s"$root/meta").head().getAs[Long]("last_gen")
-    spark.read.parquet(s"$root/v=$g/edges")
-      .select("src", "dst", "wn").orderBy("src", "dst")
-  }
-
-  /** The stored code table exactly as the ANN legs return it — resolved
-    * through the committed generation's cell manifest like any reader. */
-  private def annReturn(spark: SparkSession, d: String): DataFrame = {
-    val root = graft.similarity.Similarity.annIndexRoot(d)
-    val g = spark.read.parquet(s"$root/meta").head().getAs[Long]("last_gen")
-    val live = spark.read.parquet(s"$root/cells/v=$g")
-      .collect().map(r => (r.getAs[Long]("gen"), r.getAs[Int]("c_id"))).toSeq
-    spark.read.option("basePath", s"$root/codes")
-      .parquet(live.map { case (gg, c) => s"$root/codes/gen=$gg/c_id=$c" }: _*)
-      .select("vec_id", "c_id", "s", "code").orderBy("vec_id", "s")
-  }
-
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     s(s.size / 2)
@@ -80,11 +60,7 @@ object MaintBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -104,12 +80,12 @@ object MaintBench {
           li.where(pmod(col("l_orderkey"), lit(8)) =!= 0)),
         () => PageRankLayout.appendLayout(spark, sfDir,
           li.where(pmod(col("l_orderkey"), lit(8)) === 0)),
-        () => layoutReturn(spark, sfDir)),
+        () => PageRankLayout.storedEdges(spark, sfDir)),
       ("c14_pagerank_layout_delete",
         () => PageRankLayout.buildLayoutFrom(spark, sfDir, li),
         () => PageRankLayout.deleteLayout(spark, sfDir,
           li.where(pmod(col("l_orderkey"), lit(8)) === 0)),
-        () => layoutReturn(spark, sfDir)),
+        () => PageRankLayout.storedEdges(spark, sfDir)),
       ("c14_pagerank_layout_upsert",
         () => PageRankLayout.buildLayoutFrom(spark, sfDir, li),
         () => {
@@ -117,18 +93,18 @@ object MaintBench {
           PageRankLayout.upsertLayout(spark, sfDir, old,
             old.withColumn("l_partkey", pmod(col("l_partkey"), lit(maxPk)) + lit(1L)))
         },
-        () => layoutReturn(spark, sfDir)),
+        () => PageRankLayout.storedEdges(spark, sfDir)),
       ("c18_ann_index_append",
         () => { Similarity.buildAnnIndexFrom(spark, sfDir,
           emb.where(pmod(col("vec_id"), lit(4)) =!= 3)); () },
         () => Similarity.appendAnnIndex(spark, sfDir,
           emb.where(pmod(col("vec_id"), lit(4)) === 3)),
-        () => annReturn(spark, sfDir)),
+        () => Similarity.storedCodes(spark, Similarity.annIndexRoot(sfDir))),
       ("c18_ann_index_delete",
         () => { Similarity.buildAnnIndexFrom(spark, sfDir, emb); () },
         () => Similarity.deleteAnnIndex(spark, sfDir,
           emb.where(pmod(col("vec_id"), lit(16)) === 5)),
-        () => annReturn(spark, sfDir)),
+        () => Similarity.storedCodes(spark, Similarity.annIndexRoot(sfDir))),
       ("c18_ann_index_upsert",
         () => { Similarity.buildAnnIndexFrom(spark, sfDir, emb); () },
         () => {
@@ -136,7 +112,7 @@ object MaintBench {
           Similarity.upsertAnnIndex(spark, sfDir, old,
             old.withColumn("embedding", reverse(col("embedding"))))
         },
-        () => annReturn(spark, sfDir))
+        () => Similarity.storedCodes(spark, Similarity.annIndexRoot(sfDir)))
     )
 
     // one warmup build pair so the first timed rep is not paying JIT

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-review utility: dumps the formatted physical plan of the headline
   * queries to PLANS.md so plan shape changes show up in review diffs
@@ -43,11 +42,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder("8")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query formatted-plan dump for optimization-round evidence: writes
   * `<outDir>/<query>_<suffix>.txt` holding `.explain("formatted")` of each
@@ -12,11 +11,7 @@ object PlanDumpEach {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

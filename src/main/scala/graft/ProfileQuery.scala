@@ -4,7 +4,6 @@ import java.util.Locale
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query CPU anatomy: runs ONE registered query (args(0), default
   * c14_pagerank) `SPARK_GRAFT_PROF_REPS` times (default 3) in one JVM and
@@ -66,11 +65,7 @@ object ProfileQuery {
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "3").toInt
     val q = Registry.defs.find(_.name == name)
       .getOrElse(sys.error(s"unknown query $name"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new TaskCpuListener

@@ -79,11 +79,7 @@ object SkewBench {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1skew"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new TaskTimes

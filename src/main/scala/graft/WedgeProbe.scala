@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SKEWCHECK wedge probe (dev tool, SKEWCHECK.md round 17): quantify what
@@ -30,11 +29,7 @@ object WedgeProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-wedge-probe").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus).appName("graft-wedge-probe")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

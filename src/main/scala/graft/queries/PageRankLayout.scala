@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -61,18 +61,13 @@ import graft.util.CorpusFingerprint.Fp
   *  - `meta` (at the root, one row) carries the staleness fingerprint —
   *    row count PLUS an order-independent content hash over the
   *    derivation columns (l_orderkey, l_partkey), see
-  *    [[graft.util.CorpusFingerprint]] — and `last_gen`, the highest
-  *    COMMITTED generation: readers resolve the current snapshot through
-  *    it (the "pointer" of a versioned table format), so a crash that
-  *    leaves a half-written next generation on disk can never leak into
-  *    answers — the replayed batch rewrites and then commits it.
-  *  - maintenance writes the NEXT generation while the current one stays
-  *    fully readable (a frame resolved before an append keeps scanning
-  *    the retained previous generation after it — asserted in
-  *    PageRankLayoutSpec), then commits meta and GARBAGE-COLLECTS only
-  *    generations two or more behind. Carried files survive GC of their
-  *    original generation (hardlinks share the inode; copies are
-  *    independent).
+  *    [[graft.util.CorpusFingerprint]] — and `last_gen`, the committed
+  *    generation `v=G` readers resolve. Commit order, the streaming
+  *    batchId replay contract and GC depth 2 are the shared protocol of
+  *    [[graft.util.ArtifactStore]] (a frame resolved before an append
+  *    keeps scanning the retained previous generation after it — asserted
+  *    in PageRankLayoutSpec). Carried files survive GC of their original
+  *    generation (hardlinks share the inode; copies are independent).
   *
   * All store I/O goes through the Hadoop FileSystem API
   * ([[graft.util.ArtifactStore]]) — `file:`, `hdfs:` and `s3a:` roots all
@@ -178,18 +173,11 @@ object PageRankLayout {
     ()
   }
 
-  /** A frame whose optimized plan is a LITERALLY EMPTY local relation —
-    * the statically-empty legs ([[emptyLi]]) the pure append/delete paths
-    * pass. Driver-side plan inspection only: no Spark job, unlike
-    * `df.isEmpty`. A runtime-empty distributed frame (e.g. a CDC leg whose
-    * filter matched nothing) correctly reports false and pays its one
-    * stats job. */
-  private def isStaticallyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
+  /** Drop generation `g`'s edge and node declarations. */
+  private def dropGenTables(spark: SparkSession, dataDir: String, g: Long): Unit = {
+    dropTable(spark, edgesTable(dataDir, g))
+    dropTable(spark, nodesTable(dataDir, g))
+  }
 
   /** Drop any stale declaration, clear the location, write `df` bucketed
     * (and per-file sorted) by `key` as an EXTERNAL parquet table at `loc`.
@@ -232,23 +220,11 @@ object PageRankLayout {
     StructField("chash", LongType), StructField("csum", DecimalType(38, 0)),
     StructField("ob", IntegerType)))
 
-  private def writeMeta(spark: SparkSession, root: String, nodeCount: Long,
-      buckets: Int, gen: Long, fp: Fp): Unit = {
-    import spark.implicits._
-    Seq((fp.count, nodeCount, buckets, fp.xorFp, fp.sumFp.toString, gen, LayoutVer))
-      .toDF(layoutMetaSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-  }
-
   private[graft] val layoutMetaSchema = StructType(Seq(
     StructField("lineitem_count", LongType), StructField("node_count", LongType),
     StructField("buckets", IntegerType), StructField("fp_xor", LongType),
     StructField("fp_sum", StringType), StructField("last_gen", LongType),
     StructField("layout_ver", LongType)))
-
-  private def metaFp(m: Row): Fp =
-    Fp(m.getAs[Long]("lineitem_count"), m.getAs[Long]("fp_xor"),
-      new java.math.BigDecimal(m.getAs[String]("fp_sum")))
 
   /** Normalize an aggregated raw-weight edge frame: per-src total, one
     * w/tw division — exact small-integer doubles, so grouping order
@@ -286,12 +262,9 @@ object PageRankLayout {
     * pays a second corpus/batch-sized hash scan: the ledger the commit
     * writes anyway IS the fingerprint's partial aggregate. */
   private def ledgerFp(ledger: DataFrame): Fp = {
-    val r = ledger.agg(
+    Fp.fromRow(ledger.agg(
       sum(col("n_rows")).as("n"), expr("bit_xor(chash)").as("x"),
-      sum(col("csum")).as("s")).head()
-    Fp(if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1),
-      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
+      sum(col("csum")).as("s")).head(), 0)
   }
 
   /** Scale-adaptive bucket count for a NEW layout build (round 22; guide
@@ -437,21 +410,13 @@ object PageRankLayout {
     // commit point: meta (fingerprint + pointer) lands only after every
     // generation table did — a crash before this line leaves the previous
     // generation committed and the half-written one invisible
-    writeMeta(spark, root, nodeCount, buckets, gen, fp.getOrElse(ledgerFp(
-      spark.read.schema(orderkeysSchema).parquet(s"$genRoot/orderkeys"))))
-    // GC: everything at or below gen-2 is unreachable (readers resolve
-    // through meta; the one retained predecessor covers frames resolved
-    // just before this commit). Carried files survive their origin
-    // generation's GC: hardlinks share the inode, copies are independent.
-    ArtifactStore.list(spark, root)
-      .filter(_.getPath.getName.startsWith("v="))
-      .flatMap(st => st.getPath.getName.stripPrefix("v=").toLongOption.map(_ -> st))
-      .filter(_._1 <= gen - 2)
-      .foreach { case (g, st) =>
-        dropTable(spark, edgesTable(dataDir, g))
-        dropTable(spark, nodesTable(dataDir, g))
-        ArtifactStore.delete(spark, st.getPath.toString)
-      }
+    val fpNew = fp.getOrElse(ledgerFp(
+      spark.read.schema(orderkeysSchema).parquet(s"$genRoot/orderkeys")))
+    ArtifactStore.writeMeta(spark, layoutMetaSchema, root, (fpNew.count, nodeCount,
+      buckets, fpNew.xorFp, fpNew.sumFp.toString, gen, LayoutVer))
+    // carried files survive their origin generation's GC: hardlinks share
+    // the inode, copies are independent
+    ArtifactStore.gcBehind(spark, root, "v", gen)(dropGenTables(spark, dataDir, _))
   }
 
   /** One corpus-sized build pass over a CALLER-SUPPLIED (l_orderkey,
@@ -467,13 +432,8 @@ object PageRankLayout {
     val root = layoutRoot(dataDir)
     // a rebuild starts the generation clock over: drop every declared
     // generation table and clear the root
-    ArtifactStore.list(spark, root)
-      .filter(_.getPath.getName.startsWith("v="))
-      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
-      .foreach { g =>
-        dropTable(spark, edgesTable(dataDir, g))
-        dropTable(spark, nodesTable(dataDir, g))
-      }
+    ArtifactStore.generations(spark, root, "v")
+      .foreach { case (g, _) => dropGenTables(spark, dataDir, g) }
     ArtifactStore.delete(spark, root)
     val buckets = layoutBuckets(spark, li)
     val raw = Relational.coPurchaseEdgesFrom(li)
@@ -495,7 +455,7 @@ object PageRankLayout {
     buildLayoutFrom(spark, dataDir, liProjection(spark, dataDir))
 
   private def readMeta(spark: SparkSession, dataDir: String): Row =
-    ArtifactStore.readMeta(spark, layoutMetaSchema, s"${layoutRoot(dataDir)}/meta")
+    ArtifactStore.readMeta(spark, layoutMetaSchema, layoutRoot(dataDir))
 
   /** The unified maintenance core — ONE generation commit folding a
     * DELETE leg and an APPEND leg of ORDER-COMPLETE lineitem rows into
@@ -548,9 +508,8 @@ object PageRankLayout {
         nOrders: Long, fp: Fp, obs: Set[Int])
     def legLedger(li: DataFrame): LegLedger = {
       val ledger = orderLedger(li)
-      if (isStaticallyEmpty(li))
-        LegLedger(ledger, cached = false, 0L,
-          Fp(0L, 0L, java.math.BigDecimal.ZERO), Set.empty)
+      if (ArtifactStore.isStaticallyEmpty(li))
+        LegLedger(ledger, cached = false, 0L, Fp.zero, Set.empty)
       else {
         val cached = ledger.persist()
         val r = cached.agg(
@@ -558,10 +517,7 @@ object PageRankLayout {
           sum(col("n_rows")).as("n"), expr("bit_xor(chash)").as("x"),
           sum(col("csum")).as("s"),
           collect_set(bucketOf(col("l_orderkey"), buckets)).as("obs")).head()
-        LegLedger(cached, cached = true, r.getLong(0),
-          Fp(if (r.isNullAt(1)) 0L else r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            Option(r.getDecimal(3)).getOrElse(java.math.BigDecimal.ZERO)),
+        LegLedger(cached, cached = true, r.getLong(0), Fp.fromRow(r, 1),
           r.getSeq[Int](4).toSet)
       }
     }
@@ -719,7 +675,7 @@ object PageRankLayout {
     // batch-sized hash scans
     commitGen(spark, dataDir, gen, normalized(merged.where(col("w") > 0)),
       ledgerTouched, buckets,
-      Some(metaFp(meta).unfold(delL.fp).fold(addL.fp)),
+      Some(ArtifactStore.metaFp(meta, "lineitem_count").unfold(delL.fp).fold(addL.fp)),
       cow = Some(Cow(last, touched, touchedObs)))
     // the commit is durable: release the maintenance caches' blocks now
     // instead of leaving them to a driver GC cycle (the CC/maintenance
@@ -774,56 +730,18 @@ object PageRankLayout {
       gen = meta.getAs[Long]("last_gen") + 1L)
   }
 
-  private def batchMeta(spark: SparkSession, dataDir: String, what: String): Row = {
-    val root = layoutRoot(dataDir)
-    try readMeta(spark, dataDir)
-    catch {
-      case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
-        throw new IllegalStateException(
-          s"$what: no committed layout meta under $root — the layout must " +
-            "be built (buildLayout) before streaming maintenance can fold " +
-            "batches into it, and a missing meta under a surviving " +
-            "checkpoint means the store was wiped or repointed; refusing " +
-            "to guess", e)
-    }
-  }
-
-  /** batchId → generation mapping shared by the streaming maintenance
-    * entries (the build is generation 0): gen == last is a REPLAY of the
-    * committed batch — a complete no-op (neither fingerprint fold nor
-    * file write; asserted byte-for-byte in StreamingSpec); gen == last+1
-    * is the next expected batch; anything else means the checkpoint and
-    * the store diverged. Structured Streaming only ever re-delivers the
-    * most recent uncommitted batch under one checkpoint, so gen < last
-    * can only come from a recreated/swapped checkpoint — those batches'
-    * rows would be silently dropped by a blanket `<=` no-op (round-19
-    * ADVICE), so they FAIL FAST like the too-far-ahead case. Returns
-    * None for the replay no-op, Some(gen) to apply. */
-  private def streamGen(what: String, root: String, meta: Row,
-      batchId: Long): Option[Long] = {
-    val gen = batchId + 1L
-    val last = meta.getAs[Long]("last_gen")
-    if (gen == last) None
-    else if (gen == last + 1L) Some(gen)
-    else throw new IllegalStateException(
-      s"$what: layout at $root is at generation $last but the stream " +
-        s"delivered batchId=$batchId (gen $gen; valid: $last = replay, " +
-        s"${last + 1} = next): the streaming checkpoint was recreated or " +
-        "swapped against this layout; refusing to fork")
-  }
-
   /** Streaming maintenance entry — fold one micro-batch of ORDER-COMPLETE
-    * (l_orderkey, l_partkey) rows into the stored layout with REPLAY
-    * IDEMPOTENCE (see [[streamGen]] for the batchId → generation
-    * contract). An empty micro-batch still commits its (carried-through)
-    * generation so the mapping never desynchronizes. */
+    * (l_orderkey, l_partkey) rows into the stored layout under the
+    * batchId replay contract of [[graft.util.ArtifactStore]] (a replayed
+    * batch is a byte-for-byte no-op, asserted in StreamingSpec). An empty
+    * micro-batch still commits its (carried-through) generation so the
+    * mapping never desynchronizes. */
   def mergeLayoutBatch(spark: SparkSession, dataDir: String,
-      batchLi: DataFrame, batchId: Long): Unit = {
-    val meta = batchMeta(spark, dataDir, "mergeLayoutBatch")
-    streamGen("mergeLayoutBatch", layoutRoot(dataDir), meta, batchId).foreach {
-      gen => maintainLayoutGen(spark, dataDir, meta, emptyLi(spark), batchLi, gen)
+      batchLi: DataFrame, batchId: Long): Unit =
+    ArtifactStore.streamCommit(spark, layoutMetaSchema, layoutRoot(dataDir), "layout",
+        "buildLayout", "mergeLayoutBatch", batchId) { (meta, gen) =>
+      maintainLayoutGen(spark, dataDir, meta, emptyLi(spark), batchLi, gen)
     }
-  }
 
   /** Streaming CDC maintenance entry (round-19 verdict directive 4): one
     * micro-batch of MIXED (op, l_orderkey, l_partkey) rows — op `I`
@@ -835,20 +753,12 @@ object PageRankLayout {
     * DELETE batch, which round 19 refused fail-loud) is a complete
     * no-op. */
   def mergeLayoutCdcBatch(spark: SparkSession, dataDir: String,
-      batch: DataFrame, batchId: Long): Unit = {
-    val meta = batchMeta(spark, dataDir, "mergeLayoutCdcBatch")
-    streamGen("mergeLayoutCdcBatch", layoutRoot(dataDir), meta, batchId).foreach { gen =>
-      // isNull disjunct: `!isin` is NULL (not true) for a null op under
-      // three-valued logic, so a null-op row would otherwise bypass the
-      // tripwire and silently drop from both legs (round-20 ADVICE)
-      val bad = batch.where(col("op").isNull || !col("op").isin("I", "D"))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"mergeLayoutCdcBatch: unknown op '${bad.headOption.map(_.getAs[String]("op")).getOrElse("")}' — the CDC feed carries only I (insert) and D (delete)")
-      maintainLayoutGen(spark, dataDir, meta,
-        batch.where(col("op") === "D"), batch.where(col("op") === "I"), gen)
+      batch: DataFrame, batchId: Long): Unit =
+    ArtifactStore.streamCommit(spark, layoutMetaSchema, layoutRoot(dataDir), "layout",
+        "buildLayout", "mergeLayoutCdcBatch", batchId) { (meta, gen) =>
+      val (del, add) = ArtifactStore.cdcLegs(batch, "mergeLayoutCdcBatch")
+      maintainLayoutGen(spark, dataDir, meta, del, add, gen)
     }
-  }
 
   /** Trust a stored layout only while its fingerprint — row count AND
     * order-independent content hash of (l_orderkey, l_partkey) — matches
@@ -867,30 +777,18 @@ object PageRankLayout {
     * rebuild wrote. */
   private def ensuredLayoutMeta(spark: SparkSession, dataDir: String): Row = {
     val root = layoutRoot(dataDir)
-    val stored =
-      try Some(readMeta(spark, dataDir))
-      catch {
-        case _: AnalysisException => None
-        case _: java.io.FileNotFoundException => None
-      }
-    // an older format, or a meta written before the version column (it
-    // reads as null under the declared schema), is stale
-    val current = stored.filter(m => !m.isNullAt(m.fieldIndex("layout_ver")) &&
-      m.getAs[Long]("layout_ver") == LayoutVer)
     val li = liProjection(spark, dataDir)
-    current.filter(m => metaFp(m).matches(liFingerprint(li))) match {
-      case Some(m) =>
-        val gen = m.getAs[Long]("last_gen")
-        val buckets = m.getAs[Int]("buckets")
-        declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges",
-          edgesSchema, "src", buckets)
-        declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes",
-          nodesSchema, "id", buckets)
-        m
-      case None =>
-        buildLayoutFrom(spark, dataDir, li)
-        readMeta(spark, dataDir)
-    }
+    val m = ArtifactStore.ensuredMeta(spark, layoutMetaSchema, root, "layout_ver",
+      LayoutVer, "lineitem_count")(liFingerprint(li))(buildLayoutFrom(spark, dataDir, li))
+    // a rebuild declared its tables; a trusted store from an earlier
+    // session may not be declared in this one yet
+    val gen = m.getAs[Long]("last_gen")
+    val buckets = m.getAs[Int]("buckets")
+    declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges",
+      edgesSchema, "src", buckets)
+    declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes",
+      nodesSchema, "id", buckets)
+    m
   }
 
   /** Write one iteration's rank vector bucketed by id — the zero-Exchange
@@ -980,7 +878,7 @@ object PageRankLayout {
 
   private val layoutEdgesOracle: String = layoutEdgesOracleFrom("lineitem")
 
-  private def storedEdges(s: SparkSession, d: String): DataFrame =
+  private[graft] def storedEdges(s: SparkSession, d: String): DataFrame =
     currentEdges(s, d).select("src", "dst", "wn").orderBy("src", "dst")
 
   /** Layout build as a registered, full-oracle query: builds + persists

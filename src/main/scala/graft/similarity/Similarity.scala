@@ -1330,22 +1330,14 @@ object Similarity {
   private def embFingerprint(emb: DataFrame): graft.util.CorpusFingerprint.Fp =
     graft.util.CorpusFingerprint.of(emb, col("vec_id"), col("embedding"))
 
-  /** Persist the one-row meta table. `lastGen` is the highest COMMITTED
-    * generation: readers resolve the live (gen, c_id) partition set
-    * through generation `lastGen`'s cell manifest ([[readCellManifest]]),
-    * so a crash that leaves an uncommitted generation's files on disk
-    * cannot leak half-committed codes into answers — the replayed batch
-    * simply rewrites that generation and then commits it here (meta is
-    * the commit record; see [[mergeAnnIndexBatch]]). */
+  /** Commit the one-row meta table ([[graft.util.ArtifactStore]]'s
+    * protocol). Readers resolve the live (gen, c_id) partition set through
+    * generation `lastGen`'s cell manifest ([[readCellManifest]]). */
   private def writeAnnMeta(spark: SparkSession, root: String, dims: Int,
       sampleN: Long, sampleMax: Long, lastGen: Long,
-      fp: graft.util.CorpusFingerprint.Fp): Unit = {
-    import spark.implicits._
-    Seq((fp.count, dims, fp.xorFp, fp.sumFp.toString, sampleN, sampleMax,
-      lastGen, AnnFmt))
-      .toDF(annMetaSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-  }
+      fp: graft.util.CorpusFingerprint.Fp): Unit =
+    graft.util.ArtifactStore.writeMeta(spark, annMetaSchema, root,
+      (fp.count, dims, fp.xorFp, fp.sumFp.toString, sampleN, sampleMax, lastGen, AnnFmt))
 
   private[graft] val annMetaSchema = StructType(Seq(
     StructField("corpus_count", LongType), StructField("dims", IntegerType),
@@ -1354,7 +1346,7 @@ object Similarity {
     StructField("last_gen", LongType), StructField("fmt", LongType)))
 
   private def readAnnMeta(spark: SparkSession, root: String): Row =
-    graft.util.ArtifactStore.readMeta(spark, annMetaSchema, s"$root/meta")
+    graft.util.ArtifactStore.readMeta(spark, annMetaSchema, root)
 
   /** The live (gen, c_id) code partitions as of generation `gen` — the
     * cell MANIFEST a versioned table format would keep in its snapshot
@@ -1383,10 +1375,6 @@ object Similarity {
 
   private[graft] val cellsSchema = StructType(Seq(
     StructField("gen", LongType), StructField("c_id", IntegerType)))
-
-  private def annMetaFp(m: org.apache.spark.sql.Row): graft.util.CorpusFingerprint.Fp =
-    graft.util.CorpusFingerprint.Fp(m.getAs[Long]("corpus_count"),
-      m.getAs[Long]("fp_xor"), new java.math.BigDecimal(m.getAs[String]("fp_sum")))
 
   /** Build the integer IVF-PQ index for a corpus and persist it
     * (overwrite). One pass of corpus-sized work — the cost a 100 TB
@@ -1540,19 +1528,6 @@ object Similarity {
     Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
   }
 
-  /** A frame whose optimized plan is a LITERALLY EMPTY local relation —
-    * the statically-empty legs ([[emptyEmb]]) the pure append/delete paths
-    * pass. Driver-side plan inspection only (no Spark job): a pure append
-    * or delete skips its empty leg's stats aggregate entirely, while a
-    * runtime-empty distributed frame (a CDC leg whose filter matched
-    * nothing) correctly reports false and pays its one stats job. */
-  private def isStaticallyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
-
   /** The unified maintenance core — ONE generation commit folding a
     * DELETE leg and an APPEND leg of (vec_id, embedding) rows into the
     * stored index (either leg may be empty: pure append, pure delete, or
@@ -1574,9 +1549,8 @@ object Similarity {
     *  - the fingerprint transitions as stored ⊖ delete-batch ⊕
     *    append-batch — ONE transition per commit, so an upsert is one
     *    maintenance op;
-    *  - meta (fingerprint + last_gen) commits LAST; GC then removes code
-    *    partitions referenced by neither the new nor the retained
-    *    previous manifest, and manifests two or more generations behind.
+    *  - meta (fingerprint + last_gen) commits LAST; GC then runs
+    *    ([[gcAnn]]).
     *
     * Idempotence: the code write targets exactly the (gen, c_id)
     * partitions the batch's deterministic encode/survivor-rewrite
@@ -1626,21 +1600,18 @@ object Similarity {
     final case class Leg(n: Long, nDistinct: Long,
         fp: graft.util.CorpusFingerprint.Fp, nInSample: Long)
     def legStats(df: DataFrame): Leg =
-      if (isStaticallyEmpty(df))
-        Leg(0L, 0L, graft.util.CorpusFingerprint.Fp(0L, 0L,
-          java.math.BigDecimal.ZERO), 0L)
+      if (graft.util.ArtifactStore.isStaticallyEmpty(df))
+        Leg(0L, 0L, graft.util.CorpusFingerprint.Fp.zero, 0L)
       else {
         val r = df
           .select(col("vec_id"), xxhash64(col("vec_id"), col("embedding")).as("h"))
-          .agg(count(lit(1)).as("n"), count_distinct(col("vec_id")).as("nd"),
+          .agg(count_distinct(col("vec_id")).as("nd"), count(lit(1)).as("n"),
             expr("bit_xor(h)").as("x"),
             sum(col("h").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"),
             sum(when(inSample(col("vec_id")), 1L).otherwise(0L)).as("off"))
           .head()
-        Leg(r.getLong(0), r.getLong(1),
-          graft.util.CorpusFingerprint.Fp(r.getLong(0),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            Option(r.getDecimal(3)).getOrElse(java.math.BigDecimal.ZERO)),
+        Leg(r.getLong(1), r.getLong(0),
+          graft.util.CorpusFingerprint.Fp.fromRow(r, 1),
           if (r.isNullAt(4)) 0L else r.getLong(4))
       }
     val delLeg = legStats(del)
@@ -1768,32 +1739,25 @@ object Similarity {
     // above — no further batch-sized hash scans
     writeAnnMeta(spark, root, meta.getAs[Int]("dims"), sampleN, sampleMax,
       lastGen = gen,
-      annMetaFp(meta).unfold(delLeg.fp).fold(addLeg.fp))
+      graft.util.ArtifactStore.metaFp(meta, "corpus_count").unfold(delLeg.fp).fold(addLeg.fp))
     gcAnn(spark, root, (newLive ++ prevLive).toSet, gen)
   }
 
   /** GC shared by every commit: code partitions referenced by neither the
     * new manifest nor the retained predecessor (covers readers that
-    * resolved meta just before this commit), and manifests two or more
-    * generations behind. */
+    * resolved meta just before this commit) — a `gen=G` directory left
+    * with no referenced cell goes whole, so later walks do not list it
+    * again — and manifests two or more generations behind. */
   private def gcAnn(spark: SparkSession, root: String,
       referenced: Set[(Long, Int)], gen: Long): Unit = {
-    graft.util.ArtifactStore.list(spark, s"$root/codes")
-      .flatMap(st => st.getPath.getName.stripPrefix("gen=").toLongOption.map(_ -> st))
-      .foreach { case (g, genDir) =>
-        graft.util.ArtifactStore.list(spark, genDir.getPath.toString)
-          .flatMap(st => st.getPath.getName.stripPrefix("c_id=").toIntOption.map(_ -> st))
-          .foreach { case (c, cellDir) =>
-            if (!referenced.contains((g, c)))
-              graft.util.ArtifactStore.delete(spark, cellDir.getPath.toString)
-          }
-      }
-    graft.util.ArtifactStore.list(spark, s"$root/cells")
-      .flatMap(st => st.getPath.getName.stripPrefix("v=").toLongOption.map(_ -> st))
-      .filter(_._1 <= gen - 2)
-      .foreach { case (_, st) =>
-        graft.util.ArtifactStore.delete(spark, st.getPath.toString)
-      }
+    import graft.util.ArtifactStore
+    ArtifactStore.generations(spark, s"$root/codes", "gen").foreach { case (g, genDir) =>
+      val (kept, dropped) = ArtifactStore.generations(spark, genDir.getPath.toString, "c_id")
+        .partition { case (c, _) => referenced.contains((g, c.toInt)) }
+      (if (kept.isEmpty) Seq(genDir) else dropped.map(_._2))
+        .foreach(st => ArtifactStore.delete(spark, st.getPath.toString))
+    }
+    ArtifactStore.gcBehind(spark, s"$root/cells", "v", gen)(_ => ())
   }
 
   /** Rewrite the live cell set into ONE fresh generation and let the
@@ -1831,59 +1795,23 @@ object Similarity {
       writeCellManifest(spark, root, gen, newLive)
       writeAnnMeta(spark, root, meta.getAs[Int]("dims"),
         meta.getAs[Long]("sample_n"), meta.getAs[Long]("sample_max"),
-        lastGen = gen, annMetaFp(meta))
+        lastGen = gen, graft.util.ArtifactStore.metaFp(meta, "corpus_count"))
       gcAnn(spark, root, (newLive ++ prevLive).toSet, gen)
     }
   }
 
-  private def streamBatchMeta(spark: SparkSession, root: String,
-      what: String): org.apache.spark.sql.Row =
-    try readAnnMeta(spark, root)
-    catch {
-      case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
-        throw new IllegalStateException(
-          s"$what: no committed index meta under $root — the " +
-            "index must be built (buildAnnIndex) before streaming " +
-            "maintenance can fold batches into it, and a missing meta " +
-            "under a surviving checkpoint means the index store was " +
-            "wiped or repointed; refusing to guess", e)
-    }
-
-  /** batchId → generation mapping shared by the streaming maintenance
-    * entries (the build is generation 0): gen == last_gen is a REPLAY of
-    * the committed batch — a complete no-op (fingerprint, meta, manifest
-    * and code files all untouched, asserted byte-for-byte in
-    * StreamingSpec); gen == last_gen + 1 is the next expected batch.
-    * Structured Streaming only re-delivers the most recent uncommitted
-    * batch under one checkpoint, so gen < last_gen can only come from a
-    * recreated/swapped checkpoint — a blanket `<=` no-op would silently
-    * drop those batches' rows (round-19 ADVICE), so they FAIL FAST like
-    * the too-far-ahead case. */
-  private def annStreamGen(what: String, root: String,
-      meta: org.apache.spark.sql.Row, batchId: Long): Option[Long] = {
-    val gen = batchId + 1L
-    val last = meta.getAs[Long]("last_gen")
-    if (gen == last) None
-    else if (gen == last + 1L) Some(gen)
-    else throw new IllegalStateException(
-      s"$what: index at $root is at generation $last but the " +
-        s"stream delivered batchId=$batchId (gen $gen; valid: $last = " +
-        s"replay, ${last + 1} = next): the streaming checkpoint was " +
-        "recreated or swapped against this index; refusing to fork")
-  }
-
   /** Streaming maintenance entry (round-18 verdict directive 1): fold one
     * micro-batch of (vec_id, embedding) APPEND rows into the stored index
-    * with REPLAY IDEMPOTENCE (see [[annStreamGen]] for the batchId →
-    * generation contract; [[maintainAnnGen]]'s dynamic-overwrite write +
-    * meta-last commit make the crash windows replay-safe). An empty
-    * micro-batch still commits its (carried-through) generation so the
-    * mapping never desynchronizes. */
+    * under the batchId replay contract of [[graft.util.ArtifactStore]]
+    * ([[maintainAnnGen]]'s dynamic-overwrite write + meta-last commit make
+    * the crash windows replay-safe). An empty micro-batch still commits
+    * its (carried-through) generation so the mapping never
+    * desynchronizes. */
   def mergeAnnIndexBatch(spark: SparkSession, dataDir: String,
       batch: DataFrame, batchId: Long): Unit = {
     val root = annIndexRoot(dataDir)
-    val meta = streamBatchMeta(spark, root, "mergeAnnIndexBatch")
-    annStreamGen("mergeAnnIndexBatch", root, meta, batchId).foreach { gen =>
+    graft.util.ArtifactStore.streamCommit(spark, annMetaSchema, root, "index",
+        "buildAnnIndex", "mergeAnnIndexBatch", batchId) { (meta, gen) =>
       maintainAnnGen(spark, root, meta, emptyEmb(spark), batch, gen)
     }
   }
@@ -1899,17 +1827,10 @@ object Similarity {
   def mergeAnnCdcBatch(spark: SparkSession, dataDir: String,
       batch: DataFrame, batchId: Long): Unit = {
     val root = annIndexRoot(dataDir)
-    val meta = streamBatchMeta(spark, root, "mergeAnnCdcBatch")
-    annStreamGen("mergeAnnCdcBatch", root, meta, batchId).foreach { gen =>
-      // isNull disjunct: `!isin` is NULL (not true) for a null op under
-      // three-valued logic, so a null-op row would otherwise bypass the
-      // tripwire and silently drop from both legs (round-20 ADVICE)
-      val bad = batch.where(col("op").isNull || !col("op").isin("I", "D"))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"mergeAnnCdcBatch: unknown op '${bad.headOption.map(_.getAs[String]("op")).getOrElse("")}' — the CDC feed carries only I (insert) and D (delete)")
-      maintainAnnGen(spark, root, meta,
-        batch.where(col("op") === "D"), batch.where(col("op") === "I"), gen)
+    graft.util.ArtifactStore.streamCommit(spark, annMetaSchema, root, "index",
+        "buildAnnIndex", "mergeAnnCdcBatch", batchId) { (meta, gen) =>
+      val (del, add) = graft.util.ArtifactStore.cdcLegs(batch, "mergeAnnCdcBatch")
+      maintainAnnGen(spark, root, meta, del, add, gen)
     }
   }
 
@@ -1963,9 +1884,8 @@ object Similarity {
     * partial-aggregated pass (see [[graft.util.CorpusFingerprint]] for the
     * cost contract and the production-catalog alternative); a stale index
     * can therefore never silently serve a changed corpus, even a
-    * same-count change. Meta is read once; a missing meta or an older
-    * format means "stale", and any other failure propagates instead of
-    * silently triggering a corpus-sized rebuild. */
+    * same-count change. Meta is read once
+    * ([[graft.util.ArtifactStore.ensuredMeta]]). */
   def ensureAnnIndex(spark: SparkSession, dataDir: String): String = {
     ensuredAnnMeta(spark, dataDir,
       Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding")))
@@ -1975,23 +1895,9 @@ object Similarity {
   /** [[ensureAnnIndex]] over the caller's (vec_id, embedding) corpus frame:
     * returns the meta row it validated, or the one its rebuild wrote. */
   private def ensuredAnnMeta(spark: SparkSession, dataDir: String,
-      emb: DataFrame): Row = {
-    val root = annIndexRoot(dataDir)
-    val stored =
-      try Some(readAnnMeta(spark, root))
-      catch {
-        case _: AnalysisException => None
-        case _: java.io.FileNotFoundException => None
-      }
-    // an older format, or a meta written before the version column (it
-    // reads as null under the declared schema), is stale
-    val current = stored.filter(m =>
-      !m.isNullAt(m.fieldIndex("fmt")) && m.getAs[Long]("fmt") == AnnFmt)
-    current.filter(m => annMetaFp(m).matches(embFingerprint(emb))).getOrElse {
-      buildAnnIndexFrom(spark, dataDir, emb)
-      readAnnMeta(spark, root)
-    }
-  }
+      emb: DataFrame): Row =
+    graft.util.ArtifactStore.ensuredMeta(spark, annMetaSchema, annIndexRoot(dataDir),
+      "fmt", AnnFmt, "corpus_count")(embFingerprint(emb))(buildAnnIndexFrom(spark, dataDir, emb))
 
   /** Answer IVF-PQ queries FROM the persisted index — the 100 TB hot path.
     * Corpus-sized inputs touched: the probed cells' partitions of the
@@ -2075,7 +1981,7 @@ object Similarity {
       |FROM codes cd JOIN final_assign f USING (vec_id)
       |ORDER BY vec_id, s""".stripMargin
 
-  private def storedCodes(s: SparkSession, root: String): DataFrame =
+  private[graft] def storedCodes(s: SparkSession, root: String): DataFrame =
     committedCodes(s, root, liveCells(s, root, readAnnMeta(s, root)))
       .select(col("vec_id"), col("c_id"), col("s"), col("code"))
       .orderBy("vec_id", "s")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -39,11 +38,7 @@ object CurationStreamBench {
     val sfDir = args.headOption.getOrElse("/tmp/sf1skew")
     val batchDocs = args.lift(1).map(_.toInt).getOrElse(2500)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.LocalSession.builder(cpus)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()

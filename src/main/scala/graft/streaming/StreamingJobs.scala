@@ -503,90 +503,22 @@ object StreamingJobs {
       df: DataFrame,
       stateDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeRollupBatch(batch, batchId, stateDir)
-      }
-      .start()
+    foreachBatchSink(df, checkpoint)(mergeRollupBatch(_, _, stateDir))
 
-  /** Streaming maintenance of the persisted ANN index (round-18 verdict
-    * directive 1) — the artifact twin of [[rollupMaintenanceSink]]: each
-    * micro-batch of (vec_id, embedding) rows is folded into the stored
-    * index via [[graft.similarity.Similarity.mergeAnnIndexBatch]], whose
-    * batchId-versioned code generations make a REPLAYED micro-batch a
-    * complete no-op (fingerprint, meta and code files untouched) instead
-    * of a double-fold that would force a corpus-sized rebuild. The index
-    * must be built once (gen 0) before the stream starts — a missing
-    * index under a live checkpoint fails fast. */
-  def annIndexMaintenanceSink(
-      df: DataFrame,
-      dataDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+  /** Start a streaming query that hands every micro-batch and its batchId
+    * to `merge` under `checkpoint`. The artifact stores' streaming entries
+    * plug in here — `Similarity.mergeAnnIndexBatch` / `mergeAnnCdcBatch`,
+    * `PageRankLayout.mergeLayoutBatch` / `mergeLayoutCdcBatch` — and their
+    * batchId replay contract ([[graft.util.ArtifactStore]]) makes a
+    * redelivered micro-batch, a pure-DELETE CDC batch included, a complete
+    * no-op instead of a double fold. Such a store must be built (generation
+    * 0) before the stream starts; a missing store under a live checkpoint
+    * fails fast. */
+  def foreachBatchSink(df: DataFrame, checkpoint: String)(
+      merge: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Similarity.mergeAnnIndexBatch(
-          batch.sparkSession, dataDir, batch, batchId)
-      }
-      .start()
-
-  /** Streaming maintenance of the persisted PageRank edge layout — the
-    * graph twin of [[annIndexMaintenanceSink]]: each micro-batch of
-    * ORDER-COMPLETE (l_orderkey, l_partkey) rows is aggregate-merged into
-    * the stored layout via
-    * [[graft.queries.PageRankLayout.mergeLayoutBatch]], with the same
-    * batchId-versioned replay-no-op contract. */
-  def layoutMaintenanceSink(
-      df: DataFrame,
-      dataDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.PageRankLayout.mergeLayoutBatch(
-          batch.sparkSession, dataDir, batch, batchId)
-      }
-      .start()
-
-  /** Streaming CDC maintenance of the persisted ANN index (round-19
-    * verdict directive 4): each micro-batch carries MIXED
-    * (op, vec_id, embedding) rows — op `I` inserts, op `D` deletes (full
-    * deleted rows, the CDC delete shape), an id under both ops in one
-    * batch is an upsert — applied as ONE generation commit via
-    * [[graft.similarity.Similarity.mergeAnnCdcBatch]]. Replay contract is
-    * identical to [[annIndexMaintenanceSink]]: a redelivered micro-batch
-    * (including a pure-DELETE batch, which round 19 refused fail-loud) is
-    * a complete no-op, so a mixed append+delete CDC feed runs through
-    * `foreachBatch` unattended. */
-  def annCdcMaintenanceSink(
-      df: DataFrame,
-      dataDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Similarity.mergeAnnCdcBatch(
-          batch.sparkSession, dataDir, batch, batchId)
-      }
-      .start()
-
-  /** Streaming CDC maintenance of the persisted PageRank edge layout —
-    * the graph twin of [[annCdcMaintenanceSink]]: each micro-batch of
-    * MIXED (op, l_orderkey, l_partkey) rows (order-complete per op; an
-    * order under both ops is an upsert) is applied as ONE generation
-    * commit via [[graft.queries.PageRankLayout.mergeLayoutCdcBatch]],
-    * with the same replay-no-op contract. */
-  def layoutCdcMaintenanceSink(
-      df: DataFrame,
-      dataDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.PageRankLayout.mergeLayoutCdcBatch(
-          batch.sparkSession, dataDir, batch, batchId)
-      }
+      .foreachBatch(merge)
       .start()
 
   /** C8-streaming: as-of enrichment of a streaming event feed against a

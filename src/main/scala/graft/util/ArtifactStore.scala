@@ -2,8 +2,14 @@ package graft.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.util.CorpusFingerprint.Fp
 
 /** Filesystem operations for the persisted artifacts (the ANN index and
   * the PageRank edge layout), expressed against the Hadoop `FileSystem`
@@ -21,12 +27,41 @@ import org.apache.spark.sql.types.StructType
   *    between delete and rename.
   *  - `s3a:`: rename is a non-atomic client-side copy+delete — any
   *    rename-committed layout is corruptible mid-flight.
-  *  Both artifact stores therefore commit GENERATIONALLY: every write
-  *  lands under a fresh generation directory (or a fresh batchId-keyed
-  *  partition), and the single commit point is overwriting the small
-  *  `meta` pointer — readers resolve through it, so a crash before the
-  *  meta write leaves the previous generation fully readable and the
-  *  half-written one invisible. No rename of data files anywhere.
+  *  Both artifact stores therefore commit GENERATIONALLY, and this object
+  *  holds the one copy of that protocol both follow:
+  *
+  *  - Commit order. A commit writes generation G's files (for the ANN
+  *    index, also its cell manifest) under fresh `…=G` directories, then
+  *    overwrites the one-row `root/meta` table ([[writeMeta]]) whose
+  *    `last_gen` column becomes G — the single commit point. Readers resolve the current snapshot through meta
+  *    ([[readMeta]]), so a crash before the meta write leaves the previous
+  *    generation fully readable and the half-written one invisible. No
+  *    rename of data files anywhere. The build is generation 0.
+  *  - Replay contract. A streaming micro-batch `batchId` commits
+  *    generation `batchId + 1` ([[streamCommit]]): gen == last_gen is a
+  *    REPLAY of the committed batch and a complete no-op (no fingerprint
+  *    fold, no file written); gen == last_gen + 1 is the next batch;
+  *    anything else means the checkpoint and the store diverged and fails
+  *    with "refusing to fork". Structured Streaming only re-delivers the
+  *    most recent uncommitted batch under one checkpoint, so gen <
+  *    last_gen can only come from a recreated or swapped checkpoint — a
+  *    blanket `<=` no-op would silently drop those batches' rows. A
+  *    missing meta under a live stream means the store was "wiped" or
+  *    repointed and fails loud too; re-running a batch at the same gen
+  *    rewrites the same files, so each crash window is replay-safe.
+  *  - GC depth 2. After committing G, generations G − 2 and older are
+  *    deleted ([[gcBehind]]); G − 1 is retained, so a reader that resolved
+  *    meta just before the commit keeps scanning valid files. The ANN
+  *    index's code partitions outlive their generation while the G or
+  *    G − 1 manifest still lists them.
+  *  - Staleness. Meta carries the corpus fingerprint
+  *    ([[graft.util.CorpusFingerprint]]) and a store-format version; a
+  *    reader trusts the store only while both are current
+  *    ([[ensuredMeta]]) and rebuilds otherwise.
+  *
+  *  Each store keeps its own commit core (what a generation holds and
+  *  which files it carries) and passes its meta schema, version column,
+  *  noun and build hint to these functions.
   *
   * Each store declares the schema of every table it writes and reads its
   * own tables only through that schema (no Parquet schema-inference job per
@@ -60,13 +95,122 @@ object ArtifactStore {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** The one row of a store's meta table at `path`, read through its
-    * declared `schema`. A missing path raises AnalysisException; a meta
+  /** The one row of the meta table under a store's `root`, read through
+    * its declared `schema`. A missing path raises AnalysisException; a meta
     * directory without a row (a crash inside the meta overwrite) raises
     * FileNotFoundException, like a missing file. */
-  def readMeta(spark: SparkSession, schema: StructType, path: String): Row =
-    spark.read.schema(schema).parquet(path).head(1).headOption
-      .getOrElse(throw new java.io.FileNotFoundException(s"$path holds no meta row"))
+  def readMeta(spark: SparkSession, schema: StructType, root: String): Row =
+    spark.read.schema(schema).parquet(s"$root/meta").head(1).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"$root/meta holds no meta row"))
+
+  /** Commit point: overwrite the meta table under `root` with one row,
+    * its columns named after the store's meta `schema`. */
+  def writeMeta[T <: Product : TypeTag](spark: SparkSession, schema: StructType,
+      root: String, row: T): Unit = {
+    import spark.implicits._
+    Seq(row).toDF(schema.fieldNames.toIndexedSeq: _*)
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+  }
+
+  /** The corpus fingerprint a meta row carries; `countCol` names its row
+    * count. */
+  def metaFp(m: Row, countCol: String): Fp =
+    Fp(m.getAs[Long](countCol), m.getAs[Long]("fp_xor"),
+      new java.math.BigDecimal(m.getAs[String]("fp_sum")))
+
+  /** The meta row a reader may trust, or the one a rebuild wrote. Only a
+    * missing meta, a null or other `versionCol` than `version` (a meta
+    * written before the column reads as null under the declared schema),
+    * or a fingerprint other than `liveFp` means stale; any other failure
+    * (a permissions fault, a concurrent writer) propagates instead of
+    * silently triggering a corpus-sized rebuild. `liveFp` is computed only
+    * when the stored meta is current. */
+  def ensuredMeta(spark: SparkSession, schema: StructType, root: String,
+      versionCol: String, version: Long, countCol: String)(liveFp: => Fp)(
+      rebuild: => Unit): Row = {
+    val stored =
+      try Some(readMeta(spark, schema, root))
+      catch {
+        case _: AnalysisException | _: java.io.FileNotFoundException => None
+      }
+    stored
+      .filter(m => !m.isNullAt(m.fieldIndex(versionCol)) && m.getAs[Long](versionCol) == version)
+      .filter(m => metaFp(m, countCol).matches(liveFp))
+      .getOrElse {
+        rebuild
+        readMeta(spark, schema, root)
+      }
+  }
+
+  /** One streaming micro-batch under the replay contract (see above):
+    * reads the committed meta — failing loud if the `noun` store under
+    * `root` has none — and runs `commit(meta, gen)` unless `batchId` is a
+    * replay. `what` names the entry in error messages; `buildHint` names
+    * the build call. */
+  def streamCommit(spark: SparkSession, schema: StructType, root: String,
+      noun: String, buildHint: String, what: String, batchId: Long)(
+      commit: (Row, Long) => Unit): Unit = {
+    val meta =
+      try readMeta(spark, schema, root)
+      catch {
+        case e @ (_: AnalysisException | _: java.io.FileNotFoundException) =>
+          throw new IllegalStateException(
+            s"$what: no committed $noun meta under $root — the $noun must " +
+              s"be built ($buildHint) before streaming maintenance can fold " +
+              "batches into it, and a missing meta under a surviving " +
+              "checkpoint means the store was wiped or repointed; refusing " +
+              "to guess", e)
+      }
+    val gen = batchId + 1L
+    val last = meta.getAs[Long]("last_gen")
+    if (gen == last + 1L) commit(meta, gen)
+    else if (gen != last) throw new IllegalStateException(
+      s"$what: $noun at $root is at generation $last but the stream " +
+        s"delivered batchId=$batchId (gen $gen; valid: $last = replay, " +
+        s"${last + 1} = next): the streaming checkpoint was recreated or " +
+        s"swapped against this $noun; refusing to fork")
+  }
+
+  /** The (delete, insert) legs of a CDC micro-batch whose `op` column
+    * carries `D` or `I`; any other op, null included, is refused before
+    * anything is written. */
+  def cdcLegs(batch: DataFrame, what: String): (DataFrame, DataFrame) = {
+    // isNull disjunct: `!isin` is NULL (not true) for a null op under
+    // three-valued logic, so a null-op row would otherwise bypass the
+    // tripwire and silently drop from both legs
+    val bad = batch.where(col("op").isNull || !col("op").isin("I", "D"))
+      .limit(1).collect()
+    require(bad.isEmpty,
+      s"$what: unknown op '${bad.headOption.map(_.getAs[String]("op")).getOrElse("")}' — the CDC feed carries only I (insert) and D (delete)")
+    (batch.where(col("op") === "D"), batch.where(col("op") === "I"))
+  }
+
+  /** A frame whose optimized plan is a LITERALLY EMPTY local relation —
+    * the empty leg a pure append or delete passes to a store's commit
+    * core. Driver-side plan inspection only, no Spark job (unlike
+    * `df.isEmpty`); a runtime-empty distributed frame (a CDC leg whose
+    * filter matched nothing) correctly reports false and pays its one
+    * stats job. */
+  def isStaticallyEmpty(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.isEmpty
+      case _ => false
+    }
+
+  /** The generation directories `prefix=G` directly under `dir`. */
+  def generations(spark: SparkSession, dir: String, prefix: String): Seq[(Long, FileStatus)] =
+    list(spark, dir).filter(_.getPath.getName.startsWith(s"$prefix="))
+      .flatMap(st => st.getPath.getName.stripPrefix(s"$prefix=").toLongOption.map(_ -> st))
+
+  /** GC depth 2 after committing `gen`: delete every `prefix=G` directory
+    * under `dir` with G ≤ gen − 2, calling `drop(G)` first (a store drops
+    * its catalog declarations there). */
+  def gcBehind(spark: SparkSession, dir: String, prefix: String, gen: Long)(
+      drop: Long => Unit): Unit =
+    generations(spark, dir, prefix).filter(_._1 <= gen - 2).foreach { case (g, st) =>
+      drop(g)
+      delete(spark, st.getPath.toString)
+    }
 
   /** Recursive delete; quiet on a missing path. */
   def delete(spark: SparkSession, path: String): Unit = {

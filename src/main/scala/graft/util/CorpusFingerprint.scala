@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -57,16 +57,26 @@ object CorpusFingerprint {
         sumFp.compareTo(other.sumFp) == 0
   }
 
+  object Fp {
+    /** The fingerprint of no rows — the unit of [[Fp.fold]]. */
+    val zero: Fp = Fp(0L, 0L, java.math.BigDecimal.ZERO)
+
+    /** The (count, xor, sum) fold columns at `r(i)`, `r(i + 1)`, `r(i + 2)`
+      * of an aggregate row. `sum` and `bit_xor` over ZERO rows return
+      * null — an empty input has the identity fingerprint [[zero]], not an
+      * NPE out of `Row.getLong`. */
+    def fromRow(r: Row, i: Int): Fp =
+      Fp(if (r.isNullAt(i)) 0L else r.getLong(i),
+        if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1),
+        Option(r.getDecimal(i + 2)).getOrElse(java.math.BigDecimal.ZERO))
+  }
+
   /** Compute the fingerprint of `df` over `keyCols` — one aggregate job. */
   def of(df: DataFrame, keyCols: Column*): Fp = {
     val r = df.select(xxhash64(keyCols: _*).as("h"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"),
         sum(col("h").cast(DecimalType(38, 0))).as("s"))
       .head()
-    // bit_xor/sum over ZERO rows both return null — an empty corpus has
-    // the well-defined identity fingerprint (0, 0, 0), consistent with
-    // Fp.fold's unit, not an NPE out of Row.getLong
-    Fp(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
+    Fp.fromRow(r, 0)
   }
 }

@@ -186,6 +186,19 @@ class AnnIndexSpec extends SparkSpec {
     // an already-compact index: complete no-op (no generation bump)
     Similarity.compactAnnIndex(spark, key)
     assert(meta.getAs[Long]("last_gen") === g1, "no-op compaction bumped a generation")
+    // one more commit: its GC retires the generations compaction superseded,
+    // and a retired generation's directory must go with its cells — an
+    // empty `gen=G` directory would be listed by every later commit's GC
+    val up = src.where(pmod(col("vec_id"), lit(4)) === 3).orderBy("vec_id").limit(2)
+    Similarity.upsertAnnIndex(spark, key, up, up)
+    val genDirs = new java.io.File(s"$root/codes").listFiles()
+      .filter(_.getName.startsWith("gen=")).toSeq
+    genDirs.foreach { g =>
+      assert(g.list().exists(_.startsWith("c_id=")),
+        s"${g.getName} holds no c_id partition after GC")
+    }
+    assert(genDirs.map(_.getName).toSet === Set(s"gen=$g1", s"gen=${g1 + 1}"),
+      "GC must keep exactly the committed generation and its predecessor")
     // the from-index query path answers identically over the compacted store
     org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }

@@ -8,9 +8,9 @@ import graft.SparkSpec
 /** Seeded random-sequence fuzz of the STREAMING maintenance sinks
   * (round-19 verdict directive 8): the lifecycle fuzzes drive the batch
   * APIs; this drives the real `foreachBatch` path — MemoryStream micro-
-  * batches through [[StreamingJobs.annCdcMaintenanceSink]] /
-  * [[StreamingJobs.layoutCdcMaintenanceSink]] under a real streaming
-  * checkpoint — with random interleavings of:
+  * batches through [[StreamingJobs.foreachBatchSink]] into
+  * `Similarity.mergeAnnCdcBatch` / `PageRankLayout.mergeLayoutCdcBatch`
+  * under a real streaming checkpoint — with random interleavings of:
   *
   *  - INSERT batches (new rows/orders outside the training stratum),
   *  - DELETE batches (existing non-training rows / whole orders),
@@ -64,8 +64,9 @@ class SinkFuzzSpec extends SparkSpec {
     import spark.implicits._
     val in = MemoryStream[(String, Long, Array[Float])]
     val ckpt = java.nio.file.Files.createTempDirectory("ann_sinkfuzz_ckpt").toString
-    def startSink() = StreamingJobs.annCdcMaintenanceSink(
-      in.toDF().toDF("op", "vec_id", "embedding"), dir, ckpt)
+    def startSink() = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("op", "vec_id", "embedding"), ckpt)(
+      (b, id) => Similarity.mergeAnnCdcBatch(b.sparkSession, dir, b, id))
     var q = startSink()
     var delivered = 0L
     var lastBatch: Seq[(String, Long, Array[Float])] = Seq.empty
@@ -172,8 +173,9 @@ class SinkFuzzSpec extends SparkSpec {
     import spark.implicits._
     val in = MemoryStream[(String, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("pr_sinkfuzz_ckpt").toString
-    def startSink() = StreamingJobs.layoutCdcMaintenanceSink(
-      in.toDF().toDF("op", "l_orderkey", "l_partkey"), dir, ckpt)
+    def startSink() = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("op", "l_orderkey", "l_partkey"), ckpt)(
+      (b, id) => PageRankLayout.mergeLayoutCdcBatch(b.sparkSession, dir, b, id))
     var q = startSink()
     var delivered = 0L
     var lastBatch: Seq[(String, Long, Long)] = Seq.empty

@@ -818,8 +818,9 @@ class StreamingSpec extends SparkSpec {
     val b1 = rowsOf(emb.where(pmod(col("vec_id"), lit(8)) === 7))
     val in = MemoryStream[(Long, Array[Float])]
     val ckpt = java.nio.file.Files.createTempDirectory("ann_sink_ckpt").toString
-    val q = StreamingJobs.annIndexMaintenanceSink(
-      in.toDF().toDF("vec_id", "embedding"), dir, ckpt)
+    val q = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("vec_id", "embedding"), ckpt)(
+      (b, id) => Similarity.mergeAnnIndexBatch(b.sparkSession, dir, b, id))
     in.addData(b0: _*); q.processAllAvailable()
     in.addData(b1: _*); q.processAllAvailable()
     q.stop()
@@ -879,8 +880,9 @@ class StreamingSpec extends SparkSpec {
     val b1 = rowsOf(li.where(pmod(col("l_orderkey"), lit(8)) === 4))
     val in = MemoryStream[(Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("pr_sink_ckpt").toString
-    val q = StreamingJobs.layoutMaintenanceSink(
-      in.toDF().toDF("l_orderkey", "l_partkey"), dir, ckpt)
+    val q = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("l_orderkey", "l_partkey"), ckpt)(
+      (b, id) => PageRankLayout.mergeLayoutBatch(b.sparkSession, dir, b, id))
     in.addData(b0: _*); q.processAllAvailable()
     in.addData(b1: _*); q.processAllAvailable()
     q.stop()
@@ -945,8 +947,9 @@ class StreamingSpec extends SparkSpec {
     val bDel = cdcRows(bDf, "D")
     val in = MemoryStream[(String, Long, Array[Float])]
     val ckpt = java.nio.file.Files.createTempDirectory("ann_cdc_ckpt").toString
-    val q = StreamingJobs.annCdcMaintenanceSink(
-      in.toDF().toDF("op", "vec_id", "embedding"), dir, ckpt)
+    val q = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("op", "vec_id", "embedding"), ckpt)(
+      (b, id) => Similarity.mergeAnnCdcBatch(b.sparkSession, dir, b, id))
     // batch 0: pure insert of A; batch 1: mixed — insert B, UPSERT A
     // (delete old rows + insert reversed replacements in ONE batch);
     // batch 2: pure delete of B — the shape round 19 refused fail-loud
@@ -1015,8 +1018,9 @@ class StreamingSpec extends SparkSpec {
       df.collect().map(r => (op, r.getLong(0), r.getLong(1))).toSeq
     val in = MemoryStream[(String, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("pr_cdc_ckpt").toString
-    val q = StreamingJobs.layoutCdcMaintenanceSink(
-      in.toDF().toDF("op", "l_orderkey", "l_partkey"), dir, ckpt)
+    val q = StreamingJobs.foreachBatchSink(
+      in.toDF().toDF("op", "l_orderkey", "l_partkey"), ckpt)(
+      (b, id) => PageRankLayout.mergeLayoutCdcBatch(b.sparkSession, dir, b, id))
     // batch 0: insert the %8=0 orders; batch 1: mixed — UPSERT them
     // (retire originals + insert partkey-remapped corrections, the
     // reference's fix-errors-later workflow) and append the %8=4 orders;
