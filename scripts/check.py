@@ -76,5 +76,12 @@ for name in sorted(os.listdir(out_dir)):
         failed.append(name)
         print(f"  X {name}: ORACLE ERROR {e}")
 
+# A query Verify could not run leaves no dump directory, only a line on
+# stderr: count it here, or it silently drops out of the oracle count.
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(out_dir, name)):
+        failed.append(name)
+        print(f"  X {name}: NO OUTPUT (Verify did not dump it)")
+
 print(f"\n{len(passed)} passed, {len(failed)} failed")
 sys.exit(1 if failed else 0)

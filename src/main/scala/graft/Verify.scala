@@ -25,6 +25,7 @@ object Verify {
     }
     import graft.util.JsonStr.{quote => q}
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -61,6 +61,12 @@ object Purchases {
       buyer: String, item_id: Int, quantity: Int, price: Int,
       purchase_date: java.time.LocalDateTime)
 
+  /** The committed hourly example CSVs, `example/` at the repo root
+    * (FIXTURES.md §1), resolved against the working directory to an
+    * absolute path so the DuckDB oracle SQL that `Verify` writes opens the
+    * same files from any directory. */
+  val exampleDir: String = java.nio.file.Paths.get("example").toAbsolutePath.toString
+
   /** A3: event-validity guard — the trigger event must carry all required
     * keys (cloud_function.py:29–38); run BEFORE any data is fetched,
     * cheapest predicate first (cloud_function.py:103–104). */

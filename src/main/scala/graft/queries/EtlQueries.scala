@@ -6,8 +6,11 @@ import graft.QueryDef
 import graft.etl.Purchases
 
 /** The reference pipeline's own query surface (SURVEY.md §2 Tier A/B) run
-  * over the reference's example CSVs under /root/reference/example — the
-  * golden fixtures the tutorial ships (README.md:352–368).
+  * over the committed hourly example CSVs, `Purchases.exampleDir`
+  * (FIXTURES.md §1): three headerless files for 2021-03-21 11:00–13:59 UTC
+  * written by the in-repo generator, laid out like the example directory
+  * the tutorial ships (README.md:352–368). The reference's own example
+  * files (318+178+413 rows) are not in the repo.
   *
   * DuckDB has no sha1() (v1.0), so queries whose output contains the
   * anonymized buyer hash are registered rows-only (noOracle) and their
@@ -28,7 +31,7 @@ import graft.etl.Purchases
   */
 object EtlQueries {
 
-  private val exampleDir = "/root/reference/example"
+  private val exampleDir = Purchases.exampleDir
 
   /** DuckDB-side equivalent of readCsv: positional headerless CSV. */
   private val duckCsv =

@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Hourly purchase batches from the in-repo generator (A15–A17), written
@@ -35,6 +37,21 @@ object HourlyBatches {
     }
     Files.write(dir.resolve(name), lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
   }
+
+  /** Hours of the committed example fixture, `Purchases.exampleDir`:
+    * `write(dir, name(h), rows(h))` for each rewrites it byte for byte. */
+  val exampleHours: Seq[Int] = 0 until 3
+
+  /** The committed example CSVs, in name (hour) order. */
+  def exampleFiles: Seq[Path] =
+    new java.io.File(Purchases.exampleDir).listFiles().toSeq.map(_.toPath)
+      .filter(_.getFileName.toString.endsWith(".csv")).sortBy(_.getFileName.toString)
+
+  /** Every line of the committed example CSVs, read with plain JVM I/O, so
+    * counts and first rows checked against it do not come from the Spark
+    * pipeline under test. */
+  def exampleLines: Seq[String] =
+    exampleFiles.flatMap(f => Files.readAllLines(f, StandardCharsets.UTF_8).asScala)
 
   /** A fresh landing directory holding one shuffled CSV per hour of
     * `hours`; returns it with the rows of each file. */
