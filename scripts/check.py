@@ -77,8 +77,10 @@ for name in sorted(os.listdir(out_dir)):
         print(f"  X {name}: ORACLE ERROR {e}")
 
 # A query Verify could not run leaves no dump directory, only a line on
-# stderr: count it here, or it silently drops out of the oracle count.
-for name in sorted(oracle):
+# stderr: every name Verify listed as attempted without a dump has failed,
+# oracle-checked or rows-only alike.
+attempted = json.load(open(os.path.join(out_dir, "queries.json")))
+for name in sorted(attempted):
     if not os.path.isdir(os.path.join(out_dir, name)):
         failed.append(name)
         print(f"  X {name}: NO OUTPUT (Verify did not dump it)")

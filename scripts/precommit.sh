@@ -20,6 +20,19 @@
 #   ln -sf ../../scripts/precommit.sh .git/hooks/pre-commit
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# One Spark listener: graft.obs.Recorder records every job and task a
+# scoped call causes, with exact listener-bus drains. A listener declared
+# anywhere else under src/ is a copy of it, and a sleep in the mains that
+# fold its records is a guess at listener delivery it makes unneeded.
+echo "[precommit] Spark listeners only in graft/obs/, no sleeps in the bench mains..."
+if grep -rnE "(extends|new) +([A-Za-z_.]*\.)?SparkListener\b" src/ | grep -v "^src/main/scala/graft/obs/"; then
+  echo "[precommit] FAIL: a SparkListener outside src/main/scala/graft/obs/ (use graft.obs.Recorder)"
+  exit 1
+fi
+if grep -n "Thread.sleep" src/main/scala/graft/{Bench,ProfileQuery,SkewBench}.scala; then
+  echo "[precommit] FAIL: Thread.sleep in Bench, ProfileQuery or SkewBench (Recorder.record drains exactly)"
+  exit 1
+fi
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
 # The benchmark (perfbench/) is its own sbt build over the root's main
@@ -33,4 +46,4 @@ if [ -f "$repos" ]; then
   opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
 fi
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
-echo "[precommit] OK - main + test sources and the benchmark compile"
+echo "[precommit] OK - listener gate, main + test sources and the benchmark compile"

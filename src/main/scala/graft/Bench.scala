@@ -2,10 +2,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.Locale
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.obs.Recorder
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Timing uses a noop-format write so the FULL plan
@@ -64,27 +64,6 @@ object Bench {
   private def toJson(entries: Seq[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-
-  /** Task-metric accumulator: per-query shuffle volume and spill, the
-    * quantitative side of every "one shuffle on the key" claim. Listener
-    * delivery is asynchronous, so totals attribute to the query whose reps
-    * were running when the task finished — exact enough at per-query
-    * granularity (queries run serially). */
-  private final class MetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spilled = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spilled.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long, Long) =
-      (shuffleRead.get, shuffleWrite.get, spilled.get)
-  }
 
   /** 1-minute load average — stamped into the output so a contaminated run
     * (concurrent sbt/compile load on the box) is self-labeling instead of
@@ -208,41 +187,37 @@ object Bench {
     // an 11 s median for a 0.6 s query). With interleaving a burst shorter
     // than one full pass inflates at most ONE rep of any query, which the
     // median then discards.
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
     val timesByQuery =
       scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> Vector.empty[Double]): _*)
     val cpuByQuery =
       scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> Vector.empty[Double]): _*)
     val shuffleByQuery =
-      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> (0L, 0L, 0L)): _*)
-    val okRepsByQuery =
-      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> 0): _*)
+      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> (0L, 0L)): _*)
     // ONE rep of one query, shared by the main loop and the adaptive
-    // re-reps so every rep — including extras — runs inside the same
-    // before/after listener snapshot (shuffle/spill from a re-rep counts
-    // toward the record's zero-spill claim) and a THROWN rep appends no
-    // timing: a fast failure (transient OOM) must not become the 5-rep
-    // min and pull the median down (round-14 advice).
+    // re-reps so every rep — including extras — runs inside one recorded
+    // scope, its listener-bus drains untimed (shuffle/spill from a re-rep
+    // counts toward the record's zero-spill claim), and a THROWN rep
+    // appends no timing: a fast failure (transient OOM) must not become
+    // the 5-rep min and pull the median down (round-14 advice).
     def runRep(q: QueryDef, tag: String): Unit = {
-      val before = listener.snapshot
-      val cpu0 = processCpuSec
-      val t0 = System.nanoTime()
-      val ok =
-        try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+      val rec = Recorder.record(spark.sparkContext) {
+        val cpu0 = processCpuSec
+        val t0 = System.nanoTime()
+        try {
+          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some(((System.nanoTime() - t0) / 1e9, processCpuSec - cpu0))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] ${q.name}$tag failed: ${e.getMessage}")
-          false
+          None
         }
-      if (ok) {
-        timesByQuery(q.name) = timesByQuery(q.name) :+ (System.nanoTime() - t0) / 1e9
-        cpuByQuery(q.name) = cpuByQuery(q.name) :+ (processCpuSec - cpu0)
-        okRepsByQuery(q.name) = okRepsByQuery(q.name) + 1
       }
-      val after = listener.snapshot
-      val (r0, w0, s0) = shuffleByQuery(q.name)
-      shuffleByQuery(q.name) = (
-        r0 + after._1 - before._1, w0 + after._2 - before._2, s0 + after._3 - before._3)
+      rec.value.foreach { case (wall, cpu) =>
+        timesByQuery(q.name) = timesByQuery(q.name) :+ wall
+        cpuByQuery(q.name) = cpuByQuery(q.name) :+ cpu
+      }
+      val (w0, s0) = shuffleByQuery(q.name)
+      shuffleByQuery(q.name) =
+        (w0 + rec.tasks.map(_.shuffleWriteBytes).sum, s0 + rec.tasks.map(_.spillBytes).sum)
     }
     (0 until math.max(1, reps)).foreach { _ =>
       defs.foreach(q => runRep(q, ""))
@@ -285,13 +260,13 @@ object Bench {
       }
     }
     // per-query shuffle-write MB averaged over that query's SUCCESSFUL rep
-    // count — extra reps are inside the listener accounting, so the
+    // count — extra reps are inside the recorded scopes, so the
     // divisor is per-query, not the global rep count (read ≈ write
     // locally; spill recorded only if nonzero anywhere)
-    val shuffleMb = shuffleByQuery.toSeq.map { case (n, (_, w, _)) =>
-      "\"" + n + "\":" + fmt(w.toDouble / math.max(1, okRepsByQuery(n)) / 1e6)
+    val shuffleMb = shuffleByQuery.toSeq.map { case (n, (w, _)) =>
+      "\"" + n + "\":" + fmt(w.toDouble / math.max(1, timesByQuery(n).size) / 1e6)
     }.mkString("{", ",", "}")
-    val totalSpill = shuffleByQuery.valuesIterator.map(_._3).sum
+    val totalSpill = shuffleByQuery.valuesIterator.map(_._2).sum
     val loadAfter = loadAvg1
     val medians = results.map { case (n, med, _, _) => n -> med }
     val total = medians.map(_._2).sum

@@ -9,7 +9,8 @@ import graft.util.JsonStr
 /** Differential-fuzz driver: generates `n` seeded random query pairs
   * (Spark plan + DuckDB SQL — see [[graft.fuzz.QueryGen]]), executes the
   * Spark side, and dumps results in the same layout [[Verify]] uses
-  * (`outDir/<name>/…parquet` + `outDir/oracle_sql.json`), so the existing
+  * (`outDir/<name>/…parquet`, `outDir/oracle_sql.json` and
+  * `outDir/queries.json`, the names attempted), so the existing
   * `scripts/check.py` gate compares the two engines unchanged.
   *
   * Usage: `runMain graft.Fuzz [seed] [n] [sfDir] [outDir]`
@@ -59,6 +60,8 @@ object Fuzz {
     val json = qs.map(q => s"${JsonStr.quote(q.name)}: ${JsonStr.quote(q.sql)}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/queries.json"),
+      qs.map(q => JsonStr.quote(q.name)).mkString("[", ",", "]"))
     // human-readable SQL dump for mismatch triage
     Files.writeString(Paths.get(s"$outDir/queries.sql"),
       qs.map(q => s"-- ${q.name}\n${q.sql};\n").mkString("\n"))

@@ -1,9 +1,8 @@
 package graft
 
 import java.util.Locale
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.{Recorder, TaskRecord}
 
 /** Per-query CPU anatomy: runs ONE registered query (args(0), default
   * c14_pagerank) `SPARK_GRAFT_PROF_REPS` times (default 3) in one JVM and
@@ -13,7 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *   proc_cpu    — whole-process CPU delta (what Bench records as cpu_s)
   *   task_cpu    — Σ executor task CPU (TaskMetrics.executorCpuTime): the
   *                 actual distributed work the plan did
-  *   task_deser/ser, task_gc — scheduling + GC time inside tasks
+  *   task_run, task_gc, task_deser — run, GC and deserialize time
+  *                 summed over the rep's tasks (`tasks` of them)
   *   jvm_gc      — collector-reported GC wall across the JVM (×threads ≈
   *                 the GC share of proc_cpu)
   *
@@ -24,26 +24,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * could. This main makes that split a one-command measurement instead of
   * a guess. */
 object ProfileQuery {
-
-  private final class TaskCpuListener extends SparkListener {
-    val cpuNs = new AtomicLong
-    val runNs = new AtomicLong // executorRunTime is millis; stored as ns
-    val gcMs = new AtomicLong
-    val deserMs = new AtomicLong
-    val serNs = new AtomicLong
-    val tasks = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        cpuNs.addAndGet(m.executorCpuTime)
-        runNs.addAndGet(m.executorRunTime * 1000000L)
-        gcMs.addAndGet(m.jvmGCTime)
-        deserMs.addAndGet(m.executorDeserializeTime)
-        serNs.addAndGet(m.resultSerializationTime * 1000000L)
-        tasks.incrementAndGet()
-      }
-    }
-  }
 
   private def procCpu: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -68,28 +48,24 @@ object ProfileQuery {
     val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new TaskCpuListener
-    spark.sparkContext.addSparkListener(listener)
     (1 to reps).foreach { rep =>
       val (gcC0, gcT0) = gcStats
       val cpu0 = procCpu
-      val (tc0, tr0, tg0, td0) =
-        (listener.cpuNs.get, listener.runNs.get, listener.gcMs.get, listener.deserMs.get)
-      val tk0 = listener.tasks.get
-      val t0 = System.nanoTime()
-      q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async; give the queue a beat before reading
-      Thread.sleep(300)
+      val rec = Recorder.record(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       val (gcC1, gcT1) = gcStats
-      println(s"[prof] $name rep=$rep wall=${fmt(wall)}s " +
+      def sum(f: TaskRecord => Long): Long = rec.tasks.map(f).sum
+      println(s"[prof] $name rep=$rep wall=${fmt(rec.value)}s " +
         s"proc_cpu=${fmt(procCpu - cpu0)}s " +
-        s"task_cpu=${fmt((listener.cpuNs.get - tc0) / 1e9)}s " +
-        s"task_run=${fmt((listener.runNs.get - tr0) / 1e9)}s " +
-        s"task_gc=${fmt((listener.gcMs.get - tg0) / 1e3)}s " +
-        s"task_deser=${fmt((listener.deserMs.get - td0) / 1e3)}s " +
+        s"task_cpu=${fmt(sum(_.cpuNs) / 1e9)}s " +
+        s"task_run=${fmt(sum(_.runMs) / 1e3)}s " +
+        s"task_gc=${fmt(sum(_.gcMs) / 1e3)}s " +
+        s"task_deser=${fmt(sum(_.deserializeMs) / 1e3)}s " +
         s"jvm_gc=${fmt(gcT1 - gcT0)}s gc_n=${gcC1 - gcC0} " +
-        s"tasks=${listener.tasks.get - tk0}")
+        s"tasks=${rec.tasks.size}")
     }
     spark.stop()
   }

@@ -1,10 +1,9 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.obs.Recorder
 
 /** SKEWCHECK spot bench (dev tool, SKEWCHECK.md): on a `--skew` corpus
   * (scripts/gen_sf.py — Zipf-redirected o_custkey, top key tens of
@@ -36,7 +35,7 @@ import org.apache.spark.sql.functions._
   * Wall time alone cannot see the hot reducer at sf1 (the top key's
   * partition is ~10 MB ≈ tens of milliseconds of join work inside a
   * ~1 s query), so each variant also reports the per-task runtime shape
-  * of its timed reps — p50 and max task ms via a TaskEnd listener. The
+  * of its timed reps — p50 and max task ms from its task records. The
   * hot reducer IS the max task: on the skewed corpus `plain_noskew`'s
   * max task carries the whole hot key while `salted` caps it at ~1/salt
   * of that, and THAT ratio is what survives a 100× scale-up (the hot
@@ -53,20 +52,6 @@ import org.apache.spark.sql.functions._
   * rewrite. */
 object SkewBench {
 
-  private final class TaskTimes extends SparkListener {
-    // (runtime ms, is-reduce): a task that read shuffle input is a reduce
-    // task — the hot JOIN KEY can only land there, so `max over reduce
-    // tasks` isolates the hot reducer from scan/salt map tasks (salted's
-    // own max task is otherwise its dim-replication map work)
-    val ms = ArrayBuffer.empty[(Long, Boolean)]
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      if (m != null)
-        ms += ((m.executorRunTime, m.shuffleReadMetrics.totalBytesRead > 0))
-    }
-    def snapshot(): Seq[(Long, Boolean)] = synchronized { ms.toSeq }
-  }
-
   private def time(reps: Int)(f: => Unit): Double = {
     val times = (1 to reps).map { _ =>
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -82,8 +67,6 @@ object SkewBench {
     val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new TaskTimes
-    spark.sparkContext.addSparkListener(listener)
 
     // fact-side multiplier (deterministic union of identical copies):
     // at sf1 the hot key is ~12 MB ≈ 250 ms of reducer work, inside
@@ -134,17 +117,16 @@ object SkewBench {
     // (each variant's generated code JITs on first execution — without
     // this, a variant's rep-1 tasks carry compilation and its max-task
     // number lies), then median wall of `reps` + the task-runtime shape
-    // (p50/max ms) across those reps' tasks
+    // (p50/max ms) across those reps' tasks. Max over the tasks that read
+    // shuffle input isolates the hot reducer from scan/salt map tasks
+    // (salted's own max task is otherwise its dim-replication map work).
     def measure(f: => Unit): (Double, Long, Long, Long) = {
       f // per-variant warmup
-      val before = listener.snapshot().size
-      val wall = time(reps)(f)
-      Thread.sleep(300) // listener delivery is async
-      val all = listener.snapshot().drop(before)
-      val ts = all.map(_._1).sorted
-      val red = all.filter(_._2).map(_._1)
-      if (ts.isEmpty) (wall, 0L, 0L, 0L)
-      else (wall, ts(ts.size / 2), ts.last,
+      val rec = Recorder.record(spark.sparkContext)(time(reps)(f))
+      val ts = rec.tasks.map(_.runMs).sorted
+      val red = rec.tasks.filter(_.readsShuffle).map(_.runMs)
+      if (ts.isEmpty) (rec.value, 0L, 0L, 0L)
+      else (rec.value, ts(ts.size / 2), ts.last,
         if (red.isEmpty) 0L else red.max)
     }
 

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare and queries.json,
+  * the names attempted. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,16 +15,18 @@ object Verify {
     // it, so the default full dump is the driver contract.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    import graft.util.JsonStr.{quote => q}
+    val queries = SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) }
+    // written first: scripts/check.py fails every listed name with no dump
+    Files.writeString(Paths.get(s"$outDir/queries.json"),
+      queries.keys.map(q).mkString("[", ",", "]"))
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    import graft.util.JsonStr.{quote => q}
     val json = SparkEntry.oracleSql
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.etl.Purchases
+import graft.util.ArtifactStore
 
 /** C16/B4/C17-streaming — the Structured Streaming surface.
   *
@@ -353,18 +354,16 @@ object StreamingJobs {
     * byte-identical on disk, so at high group cardinality the per-batch
     * write cost is O(touched buckets' groups), not O(all groups) — while
     * the write stays a pure function of (previous state, batch, batchId):
-    * a failure replay re-reads each touched bucket's latest generation
-    * BELOW batchId and rewrites the same v=batchId partitions instead of
-    * double-counting ([[writeBatchIdempotent]] applied per bucket).
+    * a re-run after a crash before the commit re-reads each touched
+    * bucket's latest generation BELOW batchId and rewrites the same
+    * v=batchId partitions instead of double-counting
+    * ([[writeBatchIdempotent]] applied per bucket).
     *
-    * A `_LATEST` marker (written last, after the data commit) records the
-    * highest committed batchId and gates every merge: a batchId more than
-    * one ahead of the marker means the state directory was wiped or
-    * swapped under a surviving checkpoint, and a batchId BEHIND the marker
-    * means the checkpoint was recreated over surviving state — both would
-    * silently corrupt the rollup (the first resets it, the second forks
-    * generations while readers keep seeing pre-fork state), so both
-    * fail fast instead.
+    * A `_LATEST` marker, renamed into place after the data commit, holds
+    * the highest committed batchId and gates every merge under the
+    * stores' one replay rule ([[graft.util.ArtifactStore]], generation =
+    * batchId). Without a marker only batchId 0 may start the rollup: any
+    * other means the state directory was wiped under a live checkpoint.
     *
     * The partial schema is pinned (n: long, tot: DECIMAL(30,2)) so every
     * generation is union-compatible with the next batch's partials;
@@ -381,23 +380,17 @@ object StreamingJobs {
     val statePath = new org.apache.hadoop.fs.Path(stateDir)
     val fs = statePath.getFileSystem(hconf)
     val marker = new org.apache.hadoop.fs.Path(statePath, "_LATEST")
-    val last: Option[Long] =
-      if (!fs.exists(marker)) None
-      else Some(readMarker(fs, marker))
-    last match {
-      case None if batchId != 0 => throw new IllegalStateException(
+    val next =
+      if (fs.exists(marker))
+        ArtifactStore.nextOrReplay(s"rollup state at $stateDir",
+          readMarker(fs, marker), batchId, batchId)
+      else if (batchId == 0) true
+      else throw new IllegalStateException(
         s"rollup state at $stateDir has no _LATEST marker but the stream " +
           s"delivered batchId=$batchId: the state directory was wiped (or " +
           "repointed) under a surviving checkpoint; refusing to silently " +
           "restart the rollup from this batch")
-      case Some(l) if batchId < l || batchId > l + 1 =>
-        throw new IllegalStateException(
-          s"rollup state at $stateDir is at generation $l but the stream " +
-            s"delivered batchId=$batchId (valid: ${l + 1} = next, $l = " +
-            "replay): the streaming checkpoint was recreated or swapped " +
-            "against this state directory; refusing to fork generations")
-      case _ => // fresh start (0), next batch, or a replay of the last
-    }
+    if (!next) return // a replay of the committed batch is a no-op
     val nb = RollupStateBuckets
     def bucketOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(nb.toLong)).cast("int")
     def pinned(df: DataFrame): DataFrame = df.select(
@@ -417,7 +410,7 @@ object StreamingJobs {
         if (gens == null) None
         else gens.map(_.getPath)
           .flatMap(p => p.getName.stripPrefix("v=").toLongOption.map(_ -> p))
-          .filter(_._1 < batchId) // a replay must NOT read its own partial write
+          .filter(_._1 < batchId) // a re-run must NOT read its own partial write
           .sortBy(_._1).lastOption.map(_._2)
       }
       val prevByBucket = touched.map(b => b -> latestGenBelow(b)).toMap

@@ -37,18 +37,20 @@ import graft.util.CorpusFingerprint.Fp
   *    ([[readMeta]]), so a crash before the meta write leaves the previous
   *    generation fully readable and the half-written one invisible. No
   *    rename of data files anywhere. The build is generation 0.
-  *  - Replay contract. A streaming micro-batch `batchId` commits
-  *    generation `batchId + 1` ([[streamCommit]]): gen == last_gen is a
-  *    REPLAY of the committed batch and a complete no-op (no fingerprint
-  *    fold, no file written); gen == last_gen + 1 is the next batch;
-  *    anything else means the checkpoint and the store diverged and fails
-  *    with "refusing to fork". Structured Streaming only re-delivers the
-  *    most recent uncommitted batch under one checkpoint, so gen <
-  *    last_gen can only come from a recreated or swapped checkpoint — a
-  *    blanket `<=` no-op would silently drop those batches' rows. A
-  *    missing meta under a live stream means the store was "wiped" or
-  *    repointed and fails loud too; re-running a batch at the same gen
-  *    rewrites the same files, so each crash window is replay-safe.
+  *  - Replay contract ([[nextOrReplay]]), one rule for all three
+  *    streaming stores: a micro-batch asking a store at committed
+  *    generation `last` to commit `gen` is the next batch if gen ==
+  *    last + 1, a REPLAY and a complete no-op (nothing folded or written)
+  *    if gen == last, and otherwise a recreated or swapped checkpoint that
+  *    fails loud: Structured Streaming re-delivers only the most recent
+  *    uncommitted batch, and a blanket `<=` no-op would silently drop
+  *    rows. The artifact stores commit `batchId + 1` against meta's
+  *    `last_gen` ([[streamCommit]]); the rollup
+  *    (`StreamingJobs.mergeRollupBatch`) commits `batchId` against its
+  *    `_LATEST` marker, renamed into place after every data file, so
+  *    marker == batchId means the batch fully landed. A missing meta or
+  *    marker under a live stream fails loud as "wiped"; a re-run at the
+  *    same gen after a crash rewrites the same files.
   *  - GC depth 2. After committing G, generations G − 2 and older are
   *    deleted ([[gcBehind]]); G − 1 is retained, so a reader that resolved
   *    meta just before the commit keeps scanning valid files. The ANN
@@ -162,14 +164,21 @@ object ArtifactStore {
               "to guess", e)
       }
     val gen = batchId + 1L
-    val last = meta.getAs[Long]("last_gen")
-    if (gen == last + 1L) commit(meta, gen)
-    else if (gen != last) throw new IllegalStateException(
-      s"$what: $noun at $root is at generation $last but the stream " +
-        s"delivered batchId=$batchId (gen $gen; valid: $last = replay, " +
-        s"${last + 1} = next): the streaming checkpoint was recreated or " +
-        s"swapped against this $noun; refusing to fork")
+    if (nextOrReplay(s"$what: $noun at $root", meta.getAs[Long]("last_gen"), gen, batchId))
+      commit(meta, gen)
   }
+
+  /** The replay rule (see above) for a store at generation `last` asked to
+    * commit `gen` for micro-batch `batchId`: true for the next generation,
+    * false for a replay; anything else throws, naming the store `where`. */
+  def nextOrReplay(where: String, last: Long, gen: Long, batchId: Long): Boolean =
+    if (gen == last + 1L) true
+    else if (gen == last) false
+    else throw new IllegalStateException(
+      s"$where is at generation $last but the stream delivered " +
+        s"batchId=$batchId (gen $gen; valid: $last = replay, ${last + 1} = " +
+        "next): the streaming checkpoint was recreated or swapped against " +
+        "it; refusing to fork")
 
   /** The (delete, insert) legs of a CDC micro-batch whose `op` column
     * carries `D` or `I`; any other op, null included, is refused before

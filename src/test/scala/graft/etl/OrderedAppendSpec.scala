@@ -5,8 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.QueryExecution
@@ -15,6 +13,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.obs.Recorder
 import HourlyBatches.Row
 
 /** A10/A12 ordered append (`Purchases.writeOrdered`): a batch Spark reads
@@ -29,10 +28,7 @@ class OrderedAppendSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** Appends `df` to `table` through `writeOrdered`, counting the Spark
     * jobs it starts and the range-partitioning shuffles its plan holds. */
   private def append(df: DataFrame, table: Path): Append = {
-    val jobs, rangeShuffles = new AtomicInteger
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    val rangeShuffles = new AtomicInteger
     val planListener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         rangeShuffles.addAndGet(collect(qe.executedPlan) {
@@ -41,18 +37,15 @@ class OrderedAppendSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val before = partFiles(table).toSet
-    val sc = spark.sparkContext
-    ListenerBusBridge.drain(sc)
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      Purchases.writeOrdered(df, table.toString)
-      ListenerBusBridge.drain(sc)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
-    Append(jobs.get, rangeShuffles.get, partFiles(table).filterNot(before))
+    // registered inside the recorded scope: its events, delivered on the
+    // same listener bus, are drained before and after like the job records
+    val jobs =
+      try Recorder.record(spark.sparkContext) {
+        spark.listenerManager.register(planListener)
+        Purchases.writeOrdered(df, table.toString)
+      }.jobs.size
+      finally spark.listenerManager.unregister(planListener)
+    Append(jobs, rangeShuffles.get, partFiles(table).filterNot(before))
   }
 
   /** Parquet part files of `table`, in name order. */

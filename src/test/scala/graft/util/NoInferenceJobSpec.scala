@@ -1,13 +1,9 @@
 package graft.util
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.obs.Recorder
 import graft.queries.PageRankLayout
 import graft.similarity.Similarity
 
@@ -20,24 +16,10 @@ import graft.similarity.Similarity
   * `parquet at <caller>`, runs over a `ParallelCollectionRDD`. */
 class NoInferenceJobSpec extends SparkSpec {
 
-  private def inferenceJobs(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerBusBridge.drain(sc)
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null) &&
-            e.stageInfos.exists(s => s.name.startsWith("parquet at ") &&
-              s.rddInfos.exists(_.name == "ParallelCollectionRDD")))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      ListenerBusBridge.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def inferenceJobs(f: => Unit): Int =
+    Recorder.record(spark.sparkContext)(f).jobs.count(j => !j.inSqlExecution &&
+      j.stages.exists(s => s.name.startsWith("parquet at ") &&
+        s.rddNames.contains("ParallelCollectionRDD")))
 
   test("one upsert on a built ANN index and on a built layout runs no schema-inference job") {
     Similarity.ensureAnnIndex(spark, sf)
