@@ -13,9 +13,8 @@
 # - SPARK_DRIVER_MEM=32g: the only records captured off the default 8g
 #   heap — 60M-row shuffles at local[32] need the headroom; the canary
 #   pair makes the records comparable to the 8g ones anyway.
-# - SPARK_GRAFT_BENCH_FORCE_CANARY: BENCH_ONLY normally suppresses the
-#   canary (dev-loop partials must not carry one); these committed
-#   subset records need it for drift normalization.
+# - Canary: every run that writes a record file takes the canary pair, so
+#   these committed subset records carry it with no extra switch.
 # - The subset list is THE declared scale-critical set (dedup/similarity/
 #   text/graph families + the relational anchors + the two round-15
 #   watch-item scans); scripts/scalecheck10.py derives its table from
@@ -57,9 +56,9 @@ c14_pagerank_layout_upsert,c18_ann_index_upsert"
 echo "[sf10] compile gate"
 sbt -batch Test/compile
 
-echo "[sf10] in-suite subset (3-rep interleaved medians, forced canary)"
+echo "[sf10] in-suite subset (3-rep interleaved medians, with canary)"
 SPARK_GRAFT_SF_DIR=$SF10 SPARK_DRIVER_MEM=32g \
-  SPARK_GRAFT_BENCH_ONLY=$QUERIES SPARK_GRAFT_BENCH_FORCE_CANARY=1 \
+  SPARK_GRAFT_BENCH_ONLY=$QUERIES \
   SPARK_GRAFT_BENCH_OUT=BENCH_SF10.json \
   sbt -batch "runMain graft.Bench"
 

@@ -14,9 +14,9 @@
 #   count, so the decade compares the same hot-key structure at 10x rows).
 #
 # Protocol matches scripts/bench_sf10.sh: SPARK_DRIVER_MEM=32g on the
-# sf10 end (60M-row shuffles need the headroom), forced canary on every
-# record, 3-rep interleaved medians in-suite, fresh-JVM in-child medians
-# isolated. The subset is THE declared skew-critical set: the salted-join
+# sf10 end (60M-row shuffles need the headroom), the canary on every
+# record (a run that writes its record file takes it), 3-rep interleaved
+# medians in-suite, fresh-JVM in-child medians isolated. The subset is THE declared skew-critical set: the salted-join
 # machinery (the chooser's own queries), the hot-key window shape, the
 # boilerplate-gram dedup path, and the curation pipeline.
 set -euo pipefail
@@ -36,7 +36,7 @@ sbt -batch Test/compile
 
 echo "[sf10skew] skewed sf1 in-suite subset"
 SPARK_GRAFT_SF_DIR=$SF1SKEW \
-  SPARK_GRAFT_BENCH_ONLY=$QUERIES SPARK_GRAFT_BENCH_FORCE_CANARY=1 \
+  SPARK_GRAFT_BENCH_ONLY=$QUERIES \
   SPARK_GRAFT_BENCH_OUT=BENCH_SF1SKEW.json \
   sbt -batch "runMain graft.Bench"
 
@@ -48,7 +48,7 @@ SPARK_GRAFT_SF_DIR=$SF1SKEW \
 
 echo "[sf10skew] skewed sf10 in-suite subset (32g driver)"
 SPARK_GRAFT_SF_DIR=$SF10SKEW SPARK_DRIVER_MEM=32g \
-  SPARK_GRAFT_BENCH_ONLY=$QUERIES SPARK_GRAFT_BENCH_FORCE_CANARY=1 \
+  SPARK_GRAFT_BENCH_ONLY=$QUERIES \
   SPARK_GRAFT_BENCH_OUT=BENCH_SF10SKEW.json \
   sbt -batch "runMain graft.Bench"
 

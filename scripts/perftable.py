@@ -169,6 +169,10 @@ lines += [
     "",
     "## c14_pagerank CPU anatomy (graft.ProfileQuery, measured round 13)",
     "",
+    "`graft.ProfileQuery` was removed after commit `19c141c`, where its",
+    "source can be read; `BENCHFULL.json`'s per-query `task_cpu_s` and",
+    "`jvm_gc_s` now carry the same split. The recorded numbers stay.",
+    "",
     "The round-11 gate asked for isolated sf0.1 proc-cpu <= 50 or a",
     "profile-backed irreducibility note. Fresh-JVM anatomy, 3 reps",
     "(`runMain graft.ProfileQuery c14_pagerank`, sf0.1, local[32]):",

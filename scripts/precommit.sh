@@ -29,8 +29,22 @@ if grep -rnE "(extends|new) +([A-Za-z_.]*\.)?SparkListener\b" src/ | grep -v "^s
   echo "[precommit] FAIL: a SparkListener outside src/main/scala/graft/obs/ (use graft.obs.Recorder)"
   exit 1
 fi
-if grep -n "Thread.sleep" src/main/scala/graft/{Bench,ProfileQuery,SkewBench}.scala; then
-  echo "[precommit] FAIL: Thread.sleep in Bench, ProfileQuery or SkewBench (Recorder.record drains exactly)"
+if grep -n "Thread.sleep" src/main/scala/graft/{Bench,SkewBench}.scala; then
+  echo "[precommit] FAIL: Thread.sleep in Bench or SkewBench (Recorder.record drains exactly)"
+  exit 1
+fi
+# The mains are a reviewed list: a new probe main is a decision, not a
+# file that appears. The bench canary follows from whether a record file
+# is written, and Bench's full record carries the per-query CPU split, so
+# the switches that used to select either must not come back.
+echo "[precommit] mains only from the reviewed list, no removed bench switches..."
+mains="Bench|BenchIsolated|MaintBench|SkewBench|PlanDump|Fuzz|Verify"
+if grep -rn "def main(" src/main | grep -vE "^src/main/scala/graft/($mains)\.scala:"; then
+  echo "[precommit] FAIL: a main outside the reviewed list ($mains)"
+  exit 1
+fi
+if grep -rnE "SPARK_GRAFT_(BENCH_CANARY_ONLY|BENCH_FORCE_CANARY|PROF_REPS)" src/ scripts/ .claude/; then
+  echo "[precommit] FAIL: a removed canary or profiling switch (the canary follows the record file)"
   exit 1
 fi
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
@@ -46,4 +60,4 @@ if [ -f "$repos" ]; then
   opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
 fi
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
-echo "[precommit] OK - listener gate, main + test sources and the benchmark compile"
+echo "[precommit] OK - listener, main and switch gates, main + test sources and the benchmark compile"

@@ -1,11 +1,10 @@
 package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
 
-import graft.obs.Recorder
+import graft.obs.{Recorder, Timing}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Timing uses a noop-format write so the FULL plan
@@ -59,12 +58,6 @@ object Bench {
     "pipeline_span_dedup_apply", "c17_passage_dedup", "c17_containment",
     "c17_editdist_join", "c17_incremental_dedup")
 
-  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", v)
-
-  private def toJson(entries: Seq[(String, Double)]): String =
-    entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-
   /** 1-minute load average — stamped into the output so a contaminated run
     * (concurrent sbt/compile load on the box) is self-labeling instead of
     * reading as a code regression (round-5 verdict: the recorded 61.5 s had
@@ -76,17 +69,10 @@ object Bench {
       s.split("\\s+")(0).toDouble
     } catch { case _: Throwable => -1.0 }
 
-  /** Whole-JVM CPU time in seconds (driver + all local[N] executor threads).
-    * Queries run serially, so the per-rep delta attributes to one query.
-    * The point (round-8 verdict): external load inflates WALL but not OUR
-    * CPU, so a rep whose wall grows while cpu stays flat is contaminated —
-    * the run self-diagnoses instead of reading as a plan regression.
-    * (cpu > wall is normal here: N threads work in parallel.) */
-  private def processCpuSec: Double =
-    try java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      .getProcessCpuTime / 1e9
-    catch { case _: Throwable => -1.0 }
+  /** One successful rep: wall, whole-process CPU, Σ executor task CPU and
+    * JVM GC seconds. Process CPU minus task CPU and GC is the driver
+    * planning, codegen and JIT a plan change cannot remove. */
+  private final case class Rep(wall: Double, cpu: Double, taskCpu: Double, gc: Double)
 
   /** Fixed CANARY pair stamped into every bench record (round-13 verdict
     * directive 1): two pinned queries whose PLAN never changes between
@@ -110,24 +96,16 @@ object Bench {
   private[graft] val canaryScanDir = "/root/testdata/sf0.1"
   private[graft] def runCanary(spark: SparkSession): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
-    def med(f: => Unit): Double = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // 1e9 rows ≈ 1.4 s at local[32] — big enough that scheduler noise is
     // a few % of the reading, small enough to cost ~4 s per record
-    val rangeS = med(force(
+    val rangeS = Timing.medianSeconds(3)(Timing.force(
       spark.range(1000000000L).selectExpr("sum(id % 7) AS s")))
     // the scan canary reads the PINNED sf0.1 dir, not the record's own
     // sfDir; if that dir is missing/unreadable (sf1-only box), emit the
     // record without the pair instead of aborting the whole run —
     // RecordsSpec's canary guard then flags the record as uncommittable
     val scanS =
-      try Some(med(force(
+      try Some(Timing.medianSeconds(3)(Timing.force(
         Tables.lineitem(spark, canaryScanDir)
           .select(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("revenue")))))
@@ -143,33 +121,19 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val recordFile = Timing.recordFile("BENCHFULL.json")
     val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = loadAvg1
-    // Canary-only mode: BenchIsolated's dedicated canary child (its
-    // per-query children skip the canary via BENCH_ONLY below).
-    if (sys.env.contains("SPARK_GRAFT_BENCH_CANARY_ONLY")) {
-      val c = runCanary(spark)
-      println(s"""{"metric":"canary","canary":${toJson(c)},"load1":${fmt(loadAvg1)}}""")
-      spark.stop()
-      return
-    }
     // One warmup pass (JIT + codegen cache) on the flagship query.
-    try SparkEntry.queries("c9_tpch_q1")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    try Timing.force(SparkEntry.queries("c9_tpch_q1")(spark, sfDir))
     catch { case _: Throwable => () }
     // Canary BEFORE the suite (post-warmup, so codegen/JIT constants are
-    // shared with the suite's own steady state). Skipped in BENCH_ONLY
-    // dev-loop/iso-child runs — partial records never carry a canary that
-    // could be mistaken for the committed one — EXCEPT when
-    // SPARK_GRAFT_BENCH_FORCE_CANARY opts in: the SCALECHECK10 subset
-    // records are deliberate committed partials and need the drift
-    // normalizer like any other record.
+    // shared with the suite's own steady state), in exactly the runs that
+    // write a record: smoke, dev-loop and iso-child runs print none.
     val canary: Seq[(String, Double)] =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY") &&
-        !sys.env.contains("SPARK_GRAFT_BENCH_FORCE_CANARY")) Seq.empty
-      else runCanary(spark)
+      if (recordFile.isEmpty) Seq.empty else runCanary(spark)
     // Median-of-reps per query: a single timing right after an sbt compile
     // (or next to any concurrent load) can be several × off — the median
     // absorbs one bad repetition, and the min/max spread in BENCHFULL.json
@@ -187,10 +151,8 @@ object Bench {
     // an 11 s median for a 0.6 s query). With interleaving a burst shorter
     // than one full pass inflates at most ONE rep of any query, which the
     // median then discards.
-    val timesByQuery =
-      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> Vector.empty[Double]): _*)
-    val cpuByQuery =
-      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> Vector.empty[Double]): _*)
+    val repsByQuery =
+      scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> Vector.empty[Rep]): _*)
     val shuffleByQuery =
       scala.collection.mutable.LinkedHashMap(defs.map(q => q.name -> (0L, 0L)): _*)
     // ONE rep of one query, shared by the main loop and the adaptive
@@ -201,19 +163,20 @@ object Bench {
     // the 5-rep min and pull the median down (round-14 advice).
     def runRep(q: QueryDef, tag: String): Unit = {
       val rec = Recorder.record(spark.sparkContext) {
-        val cpu0 = processCpuSec
+        val cpu0 = Timing.processCpuS
+        val gc0 = Timing.jvmGcS
         val t0 = System.nanoTime()
         try {
-          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some(((System.nanoTime() - t0) / 1e9, processCpuSec - cpu0))
+          Timing.force(q.fn(spark, sfDir))
+          Some(((System.nanoTime() - t0) / 1e9, Timing.processCpuS - cpu0,
+            Timing.jvmGcS - gc0))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] ${q.name}$tag failed: ${e.getMessage}")
           None
         }
       }
-      rec.value.foreach { case (wall, cpu) =>
-        timesByQuery(q.name) = timesByQuery(q.name) :+ wall
-        cpuByQuery(q.name) = cpuByQuery(q.name) :+ cpu
+      rec.value.foreach { case (wall, cpu, gc) =>
+        repsByQuery(q.name) :+= Rep(wall, cpu, rec.tasks.map(_.cpuNs).sum / 1e9, gc)
       }
       val (w0, s0) = shuffleByQuery(q.name)
       shuffleByQuery(q.name) =
@@ -222,6 +185,7 @@ object Bench {
     (0 until math.max(1, reps)).foreach { _ =>
       defs.foreach(q => runRep(q, ""))
     }
+    def walls(name: String): Seq[Double] = repsByQuery(name).map(_.wall).sorted
     // Adaptive re-reps (round-13 advice + round-14 verdict finding 1):
     // with 3 reps, ONE load-burst outlier leaves the median between two
     // honest values — but two contamination shapes demand more evidence:
@@ -237,13 +201,13 @@ object Bench {
     // STILL over 2× their min after the extra evidence are flagged
     // "noisy_medians" so a reader never mistakes one for a plan cost.
     def medianOverMin(name: String, factor: Double): Boolean = {
-      val t = timesByQuery(name).sorted
-      t.nonEmpty && t(t.size / 2) > factor * t.head
+      val t = walls(name)
+      t.nonEmpty && Timing.median(t) > factor * t.head
     }
     val extraRepped: Seq[String] = if (reps < 3) Seq.empty else {
       val noisy = defs.filter { q =>
-        val t = timesByQuery(q.name).sorted
-        t.nonEmpty && (t.last > 3 * t(t.size / 2) || medianOverMin(q.name, 2.0))
+        val t = walls(q.name)
+        t.nonEmpty && (t.last > 3 * Timing.median(t) || medianOverMin(q.name, 2.0))
       }
       noisy.foreach { q =>
         (0 until 2).foreach(_ => runRep(q, " extra rep"))
@@ -252,62 +216,64 @@ object Bench {
     }
     val noisyMedians: Seq[String] =
       defs.map(_.name).filter(medianOverMin(_, 2.0))
-    val results = timesByQuery.toSeq.map { case (name, raw) =>
-      if (raw.isEmpty) (name, -1.0, -1.0, -1.0) // every rep threw — flagged, not fabricated
-      else {
-        val times = raw.sorted
-        (name, times(times.size / 2), times.head, times.last)
+    // per-query medians over the successful reps; a query whose every rep
+    // threw reads -1 in each map — flagged, not fabricated
+    def medians(f: Rep => Double): Seq[(String, Double)] =
+      repsByQuery.toSeq.map { case (n, rs) =>
+        n -> (if (rs.isEmpty) -1.0 else Timing.median(rs.map(f)))
       }
-    }
     // per-query shuffle-write MB averaged over that query's SUCCESSFUL rep
     // count — extra reps are inside the recorded scopes, so the
     // divisor is per-query, not the global rep count (read ≈ write
     // locally; spill recorded only if nonzero anywhere)
     val shuffleMb = shuffleByQuery.toSeq.map { case (n, (w, _)) =>
-      "\"" + n + "\":" + fmt(w.toDouble / math.max(1, timesByQuery(n).size) / 1e6)
-    }.mkString("{", ",", "}")
+      n -> w.toDouble / math.max(1, repsByQuery(n).size) / 1e6
+    }
     val totalSpill = shuffleByQuery.valuesIterator.map(_._2).sum
     val loadAfter = loadAvg1
-    val medians = results.map { case (n, med, _, _) => n -> med }
-    val total = medians.map(_._2).sum
+    val wallMedians = medians(_.wall)
+    val total = wallMedians.map(_._2).sum
     // median CPU seconds per query — read next to the wall median: a wall
     // median far above its own earlier record while cpu_s is unchanged is
     // the contamination signature (see README "Benchmarking").
-    val cpuMedians = cpuByQuery.toSeq.map { case (n, raw) =>
-      val c = raw.sorted; n -> c(c.size / 2)
-    }
+    val cpuMedians = medians(_.cpu)
     val cpuTotal = cpuMedians.map(_._2).sum
-    val spread = results.map { case (n, _, mn, mx) =>
-      "\"" + n + "\":[" + fmt(mn) + "," + fmt(mx) + "]"
-    }.mkString("{", ",", "}")
-    val env =
-      s""""reps":$reps,"load1_before":${fmt(loadBefore)},"load1_after":${fmt(loadAfter)}""" +
-        (if (canary.isEmpty) "" else s""","canary":${toJson(canary)}""") +
-        (if (extraRepped.isEmpty) ""
-         else extraRepped.map("\"" + _ + "\"")
-           .mkString(""","extra_repped":[""", ",", "]")) +
-        (if (noisyMedians.isEmpty) ""
-         else noisyMedians.map("\"" + _ + "\"")
-           .mkString(""","noisy_medians":[""", ",", "]"))
-    val fullLine =
-      s"""{"queries":${toJson(medians)},"cpu_s":${toJson(cpuMedians)},"cpu_total":${fmt(cpuTotal)},"spread":$spread,"shuffle_write_mb":$shuffleMb,"spilled_bytes":$totalSpill,"metric":"total_all_queries","value":${fmt(total)},"unit":"sec",$env,"sf":"$sfDir"}"""
+    val spread = repsByQuery.keys.toSeq.map { n =>
+      val t = walls(n)
+      n -> Timing.arr((if (t.isEmpty) Seq(-1.0, -1.0) else Seq(t.head, t.last)).map(Timing.num))
+    }
+    val env = Seq(
+      "reps" -> reps.toString,
+      "load1_before" -> Timing.num(loadBefore),
+      "load1_after" -> Timing.num(loadAfter)) ++
+      (if (canary.isEmpty) Nil else Seq("canary" -> Timing.nums(canary))) ++
+      (if (extraRepped.isEmpty) Nil
+       else Seq("extra_repped" -> Timing.arr(extraRepped.map(Timing.str)))) ++
+      (if (noisyMedians.isEmpty) Nil
+       else Seq("noisy_medians" -> Timing.arr(noisyMedians.map(Timing.str))))
+    val fullLine = Timing.obj(Seq(
+      "queries" -> Timing.nums(wallMedians),
+      "cpu_s" -> Timing.nums(cpuMedians),
+      "cpu_total" -> Timing.num(cpuTotal),
+      "task_cpu_s" -> Timing.nums(medians(_.taskCpu)),
+      "jvm_gc_s" -> Timing.nums(medians(_.gc)),
+      "spread" -> Timing.obj(spread: _*),
+      "shuffle_write_mb" -> Timing.nums(shuffleMb),
+      "spilled_bytes" -> totalSpill.toString,
+      "metric" -> Timing.str("total_all_queries"),
+      "value" -> Timing.num(total),
+      "unit" -> Timing.str("sec")) ++ env ++
+      Seq("sf" -> Timing.str(sfDir)): _*)
     println(fullLine)
-    // Smoke runs (sf0.001, reps=1) set SPARK_GRAFT_BENCH_NOFILE=1 so they
-    // don't clobber the committed clean sf0.1 median-of-3 record.
-    // SPARK_GRAFT_BENCH_OUT redirects the record file (refresh_bench.sh's
-    // sf1/local[8] passes write their own files DIRECTLY — the old
-    // write-then-mv left BENCHFULL.json holding sf1 numbers if the script
-    // died between the two steps; round-14 advice).
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_NOFILE"))
-      try Files.write(
-        Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCHFULL.json")),
-        (fullLine + "\n").getBytes(StandardCharsets.UTF_8))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] BENCHFULL.json write failed: ${e.getMessage}")
-      }
-    val head = medians.filter(r => headline.contains(r._1))
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${medians.size},"cpu_total":${fmt(cpuTotal)},$env,"queries":${toJson(head)},"sf":"$sfDir"}""")
+    recordFile.foreach(Timing.write(_, fullLine))
+    println(Timing.obj(Seq(
+      "metric" -> Timing.str("total"),
+      "value" -> Timing.num(total),
+      "unit" -> Timing.str("sec"),
+      "n_queries" -> wallMedians.size.toString,
+      "cpu_total" -> Timing.num(cpuTotal)) ++ env ++ Seq(
+      "queries" -> Timing.nums(wallMedians.filter(r => headline.contains(r._1))),
+      "sf" -> Timing.str(sfDir)): _*))
     spark.stop()
   }
 }

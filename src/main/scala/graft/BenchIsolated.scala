@@ -1,7 +1,14 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.obs.Timing
 
 /** Isolated per-query benchmark: one FRESH JVM (and therefore a fresh
   * SparkSession, codegen cache, JIT profile, block manager) per headline
@@ -19,38 +26,23 @@ import java.nio.file.{Files, Paths}
   * Mechanics: each child is `java -cp <this classpath> graft.Bench` with
   * `SPARK_GRAFT_BENCH_ONLY=<query>` — the exact committed bench code path,
   * so the two records differ only in process isolation, never in timing
-  * harness. Children inherit the JDK-17 module opens from build.sbt's list
-  * (duplicated here because the child is forked directly, not through
-  * sbt). Results land in BENCHISO.json unless SPARK_GRAFT_BENCH_NOFILE is
-  * set. */
+  * harness. Children start with this JVM's own flags (build.sbt's module
+  * opens and heap). Results land in BENCHISO.json unless
+  * SPARK_GRAFT_BENCH_NOFILE is set; a run that writes its record also
+  * takes the canary, in this JVM once the last child has exited: a fresh
+  * JVM that has run no Spark job, like every child. */
 object BenchIsolated {
 
-  // keep in sync with build.sbt's jdk17AddOpens (same comment there)
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  private val mapper = new ObjectMapper
 
-  private def num(json: String, key: String): Option[Double] = {
-    val m = java.util.regex.Pattern.compile(
-      "\"" + java.util.regex.Pattern.quote(key) + "\":(-?[0-9.]+)").matcher(json)
-    if (m.find()) Some(m.group(1).toDouble) else None
-  }
-
-  /** Fork one `graft.Bench` child with `extraEnv`, return its stdout. */
-  private def runChild(extraEnv: (String, String)*): (Int, String) = {
+  /** Fork one `graft.Bench` child timing `query` alone and return the
+    * query's (wall, cpu) medians from the child's full record. */
+  private def runChild(query: String, jvmFlags: Seq[String]): Option[(Double, Double)] = {
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-cp", sys.props("java.class.path"),
-      "graft.Bench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-    extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
+    val pb = new ProcessBuilder((Seq(javaBin) ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Bench")): _*)
+    pb.environment().put("SPARK_GRAFT_BENCH_ONLY", query)
+    pb.environment().put("SPARK_GRAFT_BENCH_NOFILE", "1")
     // stderr INHERITs (Spark logs are chatty enough to fill a pipe
     // buffer and deadlock the child if left unread)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
@@ -58,7 +50,16 @@ object BenchIsolated {
     val out = new String(
       org.apache.commons.io.IOUtils.toByteArray(p.getInputStream),
       StandardCharsets.UTF_8)
-    (p.waitFor(), out)
+    val code = p.waitFor()
+    val full = out.linesIterator
+      .find(_.contains("\"metric\":\"total_all_queries\"")).map(mapper.readTree)
+    val wall = full.flatMap(r => Option(r.path("queries").get(query))).map(_.asDouble)
+    val cpu = full.flatMap(r => Option(r.path("cpu_s").get(query))).fold(-1.0)(_.asDouble)
+    if (code != 0 || wall.isEmpty)
+      System.err.println(s"[bench-iso] $query FAILED (exit $code)")
+    else
+      System.err.println(s"[bench-iso] $query ${wall.get}s wall, ${cpu}s cpu")
+    wall.map(_ -> cpu)
   }
 
   def main(args: Array[String]): Unit = {
@@ -66,55 +67,32 @@ object BenchIsolated {
     val queries = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Bench.headline)
-    // One dedicated canary child (fresh JVM, like every query child), so
-    // the isolated record is drift-normalizable against any other record
-    // (per-query children run with BENCH_ONLY and skip the canary —
-    // paying the ~4 s canary 36× would be waste, not signal).
-    val canary: Seq[(String, Double)] = {
-      val (code, out) = runChild(
-        "SPARK_GRAFT_BENCH_CANARY_ONLY" -> "1",
-        "SPARK_GRAFT_BENCH_NOFILE" -> "1")
-      val line = out.linesIterator.find(_.contains("\"metric\":\"canary\""))
-      if (code != 0 || line.isEmpty) {
-        System.err.println(s"[bench-iso] canary child FAILED (exit $code)")
-        Seq.empty
-      } else Seq("range_mod_sum_s", "scan_sf01_lineitem_s")
-        .flatMap(k => line.flatMap(num(_, k)).map(k -> _))
-    }
-    val results = queries.flatMap { q =>
-      val (code, out) = runChild(
-        "SPARK_GRAFT_BENCH_ONLY" -> q,
-        "SPARK_GRAFT_BENCH_NOFILE" -> "1")
-      val full = out.linesIterator
-        .find(_.contains("\"metric\":\"total_all_queries\""))
-      val wall = full.flatMap(num(_, q))
-      val cpu = full.flatMap(l => num( // cpu_s map repeats the query key
-        l.substring(l.indexOf("\"cpu_s\"").max(0)), q))
-      if (code != 0 || wall.isEmpty)
-        System.err.println(s"[bench-iso] $q FAILED (exit $code)")
-      else
-        System.err.println(s"[bench-iso] $q ${wall.get}s wall, ${cpu.getOrElse(-1.0)}s cpu")
-      wall.map(w => (q, w, cpu.getOrElse(-1.0)))
-    }
-    def jmap(es: Seq[(String, Double)]) = es
-      .map { case (k, v) => "\"" + k + "\":" + String.format(
-        java.util.Locale.ROOT, "%.3f", v) }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total_isolated","value":${String.format(java.util.Locale.ROOT, "%.3f",
-        results.map(_._2).sum)},"unit":"sec","n_queries":${results.size},""" +
-        (if (canary.isEmpty) "" else s""""canary":${jmap(canary)},""") +
-        s""""queries":${jmap(results.map(r => r._1 -> r._2))},""" +
-        s""""cpu_s":${jmap(results.map(r => r._1 -> r._3))},"sf":"$sfDir"}"""
-    println(line)
-    // SPARK_GRAFT_BENCH_OUT: same direct-write contract as graft.Bench —
-    // the sf1 refresh pass writes BENCHISO_SF1.json itself, no mv window
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_NOFILE"))
-      try Files.write(
-        Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCHISO.json")),
-        (line + "\n").getBytes(StandardCharsets.UTF_8))
+    val recordFile = Timing.recordFile("BENCHISO.json")
+    val jvmFlags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+    System.err.println(s"[bench-iso] child JVM flags: ${jvmFlags.mkString(" ")}")
+    val results = queries.flatMap(q => runChild(q, jvmFlags).map { case (w, c) => (q, w, c) })
+    // the canary is paid once per record, not once per child: per-query
+    // children run with NOFILE and take none
+    val canary: Seq[(String, Double)] = if (recordFile.isEmpty) Seq.empty else {
+      val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        .getOrCreate()
+      spark.sparkContext.setLogLevel("WARN")
+      try Bench.runCanary(spark)
       catch { case e: Throwable =>
-        System.err.println(s"[bench-iso] record write failed: ${e.getMessage}")
-      }
+        System.err.println(s"[bench-iso] canary FAILED: ${e.getMessage}")
+        Seq.empty
+      } finally spark.stop()
+    }
+    val line = Timing.obj(Seq(
+      "metric" -> Timing.str("total_isolated"),
+      "value" -> Timing.num(results.map(_._2).sum),
+      "unit" -> Timing.str("sec"),
+      "n_queries" -> results.size.toString) ++
+      (if (canary.isEmpty) Nil else Seq("canary" -> Timing.nums(canary))) ++ Seq(
+      "queries" -> Timing.nums(results.map(r => r._1 -> r._2)),
+      "cpu_s" -> Timing.nums(results.map(r => r._1 -> r._3)),
+      "sf" -> Timing.str(sfDir)): _*)
+    println(line)
+    recordFile.foreach(Timing.write(_, line))
   }
 }

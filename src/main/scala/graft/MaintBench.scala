@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.obs.Timing
 
 /** Per-phase decomposition of the artifact MAINTENANCE legs (round-19
   * verdict directive 7): the registered delete/upsert/append queries
@@ -32,34 +31,19 @@ import org.apache.spark.sql.functions._
   * the corpus decade for the batch-proportional-commit claim.
   *
   * Emits one JSON line and writes MAINTPHASES*.json (SPARK_GRAFT_BENCH_OUT
-  * overrides; SPARK_GRAFT_BENCH_NOFILE suppresses) with the same pinned
-  * canary pair as every committed record — run it per rung (sf0.1 / sf1 /
+  * overrides; SPARK_GRAFT_BENCH_NOFILE suppresses); a written record
+  * carries the same pinned canary pair as every other — run it per rung (sf0.1 / sf1 /
   * sf10) and `scripts/perftable.py` renders the split. Reps follow
   * SPARK_GRAFT_BENCH_REPS (default 3, median per phase; every rep re-runs
   * the build so the maintain phase always folds into a fresh artifact).
   */
 object MaintBench {
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    s(s.size / 2)
-  }
-
-  private def fmt(d: Double): String = f"$d%.3f"
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val recordFile = Timing.recordFile("MAINTPHASES.json")
     val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -118,17 +102,17 @@ object MaintBench {
     // one warmup build pair so the first timed rep is not paying JIT
     try { PageRankLayout.ensureLayout(spark, sfDir); Similarity.ensureAnnIndex(spark, sfDir) }
     catch { case _: Throwable => () }
-    val canary = Bench.runCanary(spark)
+    val canary = if (recordFile.isEmpty) Seq.empty else Bench.runCanary(spark)
 
     val results = legs.map { case (name, build, maintain, ret) =>
       val phases = (1 to reps).map { _ =>
-        val b = time(build())
-        val m = time(maintain())
-        val r = time(noop(ret()))
+        val b = Timing.seconds(build())
+        val m = Timing.seconds(maintain())
+        val r = Timing.seconds(Timing.force(ret()))
         (b, m, r)
       }
-      name -> (median(phases.map(_._1)), median(phases.map(_._2)),
-        median(phases.map(_._3)))
+      name -> (Timing.median(phases.map(_._1)), Timing.median(phases.map(_._2)),
+        Timing.median(phases.map(_._3)))
     }
 
     // ---- SMALL-BATCH cadence (the production hourly shape) ------------
@@ -157,9 +141,9 @@ object MaintBench {
       .agg(min("l_orderkey")).head().getLong(0)
     val someOrder = li.where(col("l_orderkey") === someKey)
     val layoutSmall = (1 to reps).map { _ =>
-      val a = time(PageRankLayout.appendLayout(spark, sfDir, smallOrder))
-      val d = time(PageRankLayout.deleteLayout(spark, sfDir, smallOrder))
-      val u = time(PageRankLayout.upsertLayout(spark, sfDir, someOrder, someOrder))
+      val a = Timing.seconds(PageRankLayout.appendLayout(spark, sfDir, smallOrder))
+      val d = Timing.seconds(PageRankLayout.deleteLayout(spark, sfDir, smallOrder))
+      val u = Timing.seconds(PageRankLayout.upsertLayout(spark, sfDir, someOrder, someOrder))
       (a, d, u)
     }
     // ANN: 8 fresh ids outside the training stratum, embeddings borrowed
@@ -176,32 +160,33 @@ object MaintBench {
       }, 1), emb.schema)
     val upVecs = emb.where(pmod(col("vec_id"), lit(16)) === 13).limit(4)
     val annSmall = (1 to reps).map { _ =>
-      val a = time(Similarity.appendAnnIndex(spark, sfDir, smallVecs))
-      val d = time(Similarity.deleteAnnIndex(spark, sfDir, smallVecs))
-      val u = time(Similarity.upsertAnnIndex(spark, sfDir, upVecs, upVecs))
+      val a = Timing.seconds(Similarity.appendAnnIndex(spark, sfDir, smallVecs))
+      val d = Timing.seconds(Similarity.deleteAnnIndex(spark, sfDir, smallVecs))
+      val u = Timing.seconds(Similarity.upsertAnnIndex(spark, sfDir, upVecs, upVecs))
       (a, d, u)
     }
     val small = Seq(
       "c14_pagerank_layout_small" ->
-        ((median(layoutSmall.map(_._1)), median(layoutSmall.map(_._2)),
-          median(layoutSmall.map(_._3)), liRows.length)),
+        ((Timing.median(layoutSmall.map(_._1)), Timing.median(layoutSmall.map(_._2)),
+          Timing.median(layoutSmall.map(_._3)), liRows.length)),
       "c18_ann_index_small" ->
-        ((median(annSmall.map(_._1)), median(annSmall.map(_._2)),
-          median(annSmall.map(_._3)), embRows.length)))
+        ((Timing.median(annSmall.map(_._1)), Timing.median(annSmall.map(_._2)),
+          Timing.median(annSmall.map(_._3)), embRows.length)))
 
-    val legsJson = (results.map { case (n, (b, m, r)) =>
-      s""""$n":{"build_s":${fmt(b)},"maintain_s":${fmt(m)},"return_s":${fmt(r)}}"""
+    val legsJson = results.map { case (n, (b, m, r)) =>
+      n -> Timing.nums(Seq("build_s" -> b, "maintain_s" -> m, "return_s" -> r))
     } ++ small.map { case (n, (a, d, u, rows)) =>
-      s""""$n":{"append_s":${fmt(a)},"delete_s":${fmt(d)},"upsert_s":${fmt(u)},"batch_rows":$rows}"""
-    }).mkString(",")
-    val canaryJson = canary.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
-    val json =
-      s"""{"metric":"maint_phases","sf":"$sfDir","reps":$reps,"canary":{$canaryJson},"legs":{$legsJson}}"""
+      n -> Timing.obj("append_s" -> Timing.num(a), "delete_s" -> Timing.num(d),
+        "upsert_s" -> Timing.num(u), "batch_rows" -> rows.toString)
+    }
+    val json = Timing.obj(Seq(
+      "metric" -> Timing.str("maint_phases"),
+      "sf" -> Timing.str(sfDir),
+      "reps" -> reps.toString) ++
+      (if (canary.isEmpty) Nil else Seq("canary" -> Timing.nums(canary))) ++
+      Seq("legs" -> Timing.obj(legsJson: _*)): _*)
     println(json)
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_NOFILE"))
-      Files.write(
-        Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "MAINTPHASES.json")),
-        (json + "\n").getBytes(StandardCharsets.UTF_8))
+    recordFile.foreach(Timing.write(_, json))
     spark.stop()
   }
 }

@@ -22,9 +22,6 @@ object Registry {
   require(defs.map(_.name).distinct.size == defs.size,
     "duplicate query names in Registry")
 
-  /** SURVEY.md §2 rows covered by at least one registered query. */
-  def coveredSurveyRows: Set[String] = defs.flatMap(_.survey.split("\\s+")).toSet
-
   val queries: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
     defs.map(q => q.name -> q.fn).toMap
 

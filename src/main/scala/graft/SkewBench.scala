@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.obs.Recorder
+import graft.obs.{Recorder, Timing}
 
 /** SKEWCHECK spot bench (dev tool, SKEWCHECK.md): on a `--skew` corpus
   * (scripts/gen_sf.py — Zipf-redirected o_custkey, top key tens of
@@ -52,12 +52,8 @@ import graft.obs.Recorder
   * rewrite. */
 object SkewBench {
 
-  private def time(reps: Int)(f: => Unit): Double = {
-    val times = (1 to reps).map { _ =>
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }.sorted
-    times(times.size / 2)
-  }
+  /** One variant's median wall and the runtime shape of its timed reps. */
+  private final case class Measured(wallS: Double, p50Ms: Long, maxMs: Long, maxReduceMs: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
@@ -83,9 +79,8 @@ object SkewBench {
     def customer = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
     def aggAndSink(df: DataFrame): Unit =
-      df.groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("cnt"), sum(col("o_totalprice")).as("price_sum"))
-        .write.format("noop").mode("overwrite").save()
+      Timing.force(df.groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("cnt"), sum(col("o_totalprice")).as("price_sum")))
     // the join is NEVER broadcastable in the scenario under test — at
     // 100 TB the dim is too big; pin that here or local[N] broadcasts
     // the small customer side and no skew is visible at all
@@ -120,14 +115,29 @@ object SkewBench {
     // (p50/max ms) across those reps' tasks. Max over the tasks that read
     // shuffle input isolates the hot reducer from scan/salt map tasks
     // (salted's own max task is otherwise its dim-replication map work).
-    def measure(f: => Unit): (Double, Long, Long, Long) = {
+    def measure(f: => Unit): Measured = {
       f // per-variant warmup
-      val rec = Recorder.record(spark.sparkContext)(time(reps)(f))
+      val rec = Recorder.record(spark.sparkContext)(Timing.medianSeconds(reps)(f))
       val ts = rec.tasks.map(_.runMs).sorted
       val red = rec.tasks.filter(_.readsShuffle).map(_.runMs)
-      if (ts.isEmpty) (rec.value, 0L, 0L, 0L)
-      else (rec.value, ts(ts.size / 2), ts.last,
+      if (ts.isEmpty) Measured(rec.value, 0L, 0L, 0L)
+      else Measured(rec.value, ts(ts.size / 2), ts.last,
         if (red.isEmpty) 0L else red.max)
+    }
+    // one JSON line: the variants' median walls, then their task shapes
+    def report(metric: String, count: (String, Long), variants: (String, Measured)*): Unit = {
+      def shape(f: Measured => Long): String =
+        Timing.obj(variants.map { case (v, m) => v -> f(m).toString }: _*)
+      println(Timing.obj(Seq(
+        "metric" -> Timing.str(metric),
+        "sf" -> Timing.str(sfDir),
+        count._1 -> count._2.toString,
+        "reps" -> reps.toString,
+        "mult" -> mult.toString) ++
+        variants.map { case (v, m) => s"${v}_s" -> Timing.num(m.wallS) } ++ Seq(
+        "task_ms_p50" -> shape(_.p50Ms),
+        "task_ms_max" -> shape(_.maxMs),
+        "task_ms_max_reduce" -> shape(_.maxReduceMs)): _*))
     }
 
     val plain = measure(aggAndSink(plainJoin))
@@ -137,13 +147,8 @@ object SkewBench {
     val hotSalted = measure(aggAndSink(hotSaltedJoin))
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
-    println(
-      f"""{"metric":"skew_join_bench","sf":"$sfDir","rows":$n,"reps":$reps,"mult":$mult,""" +
-      f""""plain_aqe_s":${plain._1}%.3f,"plain_noskewjoin_s":${plainNoSkew._1}%.3f,""" +
-      f""""salted_s":${salted._1}%.3f,"hot_salted_s":${hotSalted._1}%.3f,""" +
-      f""""task_ms_p50":{"plain_aqe":${plain._2},"plain_noskewjoin":${plainNoSkew._2},"salted":${salted._2},"hot_salted":${hotSalted._2}},""" +
-      f""""task_ms_max":{"plain_aqe":${plain._3},"plain_noskewjoin":${plainNoSkew._3},"salted":${salted._3},"hot_salted":${hotSalted._3}},""" +
-      f""""task_ms_max_reduce":{"plain_aqe":${plain._4},"plain_noskewjoin":${plainNoSkew._4},"salted":${salted._4},"hot_salted":${hotSalted._4}}}""")
+    report("skew_join_bench", "rows" -> n, "plain_aqe" -> plain,
+      "plain_noskewjoin" -> plainNoSkew, "salted" -> salted, "hot_salted" -> hotSalted)
 
     // ---- Scenario 2 (round-13 verdict directive 5): aggregate ON the
     // join key — the shape AQE's OptimizeSkewedJoin cannot split.
@@ -157,20 +162,15 @@ object SkewBench {
     // hot key. THIS is the measured case the chooser contract
     // (ScaleOps.hotSaltedJoin scaladoc) routes to salting.
     def aggOnKeySink(df: DataFrame): Unit =
-      df.groupBy("custkey")
-        .agg(count(lit(1)).as("cnt"), sum(col("o_totalprice")).as("price_sum"))
-        .write.format("noop").mode("overwrite").save()
+      Timing.force(df.groupBy("custkey")
+        .agg(count(lit(1)).as("cnt"), sum(col("o_totalprice")).as("price_sum")))
     val n2 = aggOnKeyRows(plainJoin)
     require(aggOnKeyRows(hotSaltedJoin) == n2,
       "hot-salted agg-on-key changed the group count")
     val aggPlain = measure(aggOnKeySink(plainJoin))     // AQE skewJoin ON, declines
     val aggHot = measure(aggOnKeySink(hotSaltedJoin))
-    println(
-      f"""{"metric":"skew_agg_on_join_key_bench","sf":"$sfDir","groups":$n2,"reps":$reps,"mult":$mult,""" +
-      f""""plain_aqe_s":${aggPlain._1}%.3f,"hot_salted_s":${aggHot._1}%.3f,""" +
-      f""""task_ms_p50":{"plain_aqe":${aggPlain._2},"hot_salted":${aggHot._2}},""" +
-      f""""task_ms_max":{"plain_aqe":${aggPlain._3},"hot_salted":${aggHot._3}},""" +
-      f""""task_ms_max_reduce":{"plain_aqe":${aggPlain._4},"hot_salted":${aggHot._4}}}""")
+    report("skew_agg_on_join_key_bench", "groups" -> n2,
+      "plain_aqe" -> aggPlain, "hot_salted" -> aggHot)
     spark.stop()
   }
 

@@ -795,16 +795,6 @@ object Similarity {
       }
   }
 
-  /** A driver-trained integer centroid model as the broadcastable
-    * (c, d, val) table every integer-twin assignment pass joins against. */
-  private def intCentsDf(spark: SparkSession,
-      cents: Seq[(Int, Array[Long])]): DataFrame = {
-    import spark.implicits._
-    broadcast(cents.flatMap { case (cid, vals) =>
-      vals.zipWithIndex.map { case (v, d) => (cid, d, v) }
-    }.toDF("c", "d", "val"))
-  }
-
   /** The same model as cell-ordered centroid vectors — the shape the fused
     * per-row assignment expression ([[graft.functions.IntNearestCells]])
     * carries instead of joining the (c, d, val) table. */
@@ -1086,17 +1076,6 @@ object Similarity {
     src.join(booksDf, Seq("s", "i"))
       .groupBy(col("vec_id"), col("s"), col("j"))
       .agg(sum((col("q") - col("val")) * (col("q") - col("val"))).as("dist"))
-
-  /** PQ encode: argmin codeword per (vector, subspace), ties to the lowest
-    * j — after this the raw embedding is gone from the approximate stage.
-    * min(struct(dist, j)) == "ORDER BY dist, j LIMIT 1" (struct ordering is
-    * lexicographic) but partial-aggregates map-side, so the corpus-sized
-    * encode shuffles n·m rows instead of window-sorting n·m·k. */
-  private def intPqEncode(pdims: DataFrame, booksDf: DataFrame): DataFrame =
-    intCodeDists(pdims, booksDf)
-      .groupBy(col("vec_id"), col("s"))
-      .agg(min(struct(col("dist"), col("j"))).as("best"))
-      .select(col("vec_id"), col("s"), col("best.j").as("code"))
 
   /** Bounded ADC shortlist (smallest integer L2 first) + exact 1e-6-rounded
     * cosine rerank on refetched raw vectors — the tail shared by the IVF-PQ
@@ -1389,8 +1368,8 @@ object Similarity {
     *    [[ensureAnnIndex]] checks before trusting a stored index.
     *
     * All arithmetic is the md5-twin integer pipeline ([[ivfMd5Train]] /
-    * [[pqMd5Train]] / [[intPqEncode]]), so the persisted artifact is
-    * bit-deterministic and the build output is a full-oracle row
+    * [[pqMd5Train]] / [[graft.functions.IntPqCodes]]), so the persisted
+    * artifact is bit-deterministic and the build output is a full-oracle row
     * ([[annIndexBuild]]). Model training collects the same bounded sample
     * as every other trainer here (≤ 4096 × 64 longs, corpus-independent). */
   def buildAnnIndex(spark: SparkSession, dataDir: String): String =

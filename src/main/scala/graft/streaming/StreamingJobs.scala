@@ -543,15 +543,12 @@ object StreamingJobs {
       tie: Option[org.apache.spark.sql.Column],
       outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(
-          graft.operators.ScaleOps.asofJoin(
-            batch, dim, key, tsCol, payload, tie = tie),
-          batchId, outDir)
-      }
-      .start()
+    foreachBatchSink(events, checkpoint) { (batch, batchId) =>
+      writeBatchIdempotent(
+        graft.operators.ScaleOps.asofJoin(
+          batch, dim, key, tsCol, payload, tie = tie),
+        batchId, outDir)
+    }
 
   /** Exactly-once to a non-transactional sink: the idempotent-replay
     * `foreachBatch` recipe. Structured Streaming guarantees a micro-batch
@@ -576,10 +573,5 @@ object StreamingJobs {
       df: DataFrame,
       outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, outDir)
-      }
-      .start()
+    foreachBatchSink(df, checkpoint)(writeBatchIdempotent(_, _, outDir))
 }
