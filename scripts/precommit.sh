@@ -47,6 +47,20 @@ if grep -rnE "SPARK_GRAFT_(BENCH_CANARY_ONLY|BENCH_FORCE_CANARY|PROF_REPS)" src/
   echo "[precommit] FAIL: a removed canary or profiling switch (the canary follows the record file)"
   exit 1
 fi
+# Queries leave no state behind: building a query changes no session conf
+# and injects nothing into the session, and a graft.plans rule rewrites
+# only the plan it is applied to (GraftBridge.withRule), never a plan that
+# a session conf switched on.
+echo "[precommit] no session changes in query construction, no conf-gated rules..."
+if grep -rnE "conf\.set\(|registerInto\(" \
+    src/main/scala/graft/{queries,text,dedup,similarity,pipelines,multimodal,operators}; then
+  echo "[precommit] FAIL: a query module changes its session (apply a rule with GraftBridge.withRule)"
+  exit 1
+fi
+if grep -rnE "(Enabled|BinWidth)Conf" src/; then
+  echo "[precommit] FAIL: a conf-gated rewrite rule (pass the rule to GraftBridge.withRule)"
+  exit 1
+fi
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
 # The benchmark (perfbench/) is its own sbt build over the root's main
@@ -60,4 +74,4 @@ if [ -f "$repos" ]; then
   opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
 fi
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
-echo "[precommit] OK - listener, main and switch gates, main + test sources and the benchmark compile"
+echo "[precommit] OK - listener, main, switch and session-state gates, main + test sources and the benchmark compile"

@@ -25,10 +25,7 @@ object Fuzz {
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(3).getOrElse("/tmp/graft_fuzz")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = LocalSession.builder(cpus)
-      // rule-mode range-join draws differentially test RangeBinJoinRule
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

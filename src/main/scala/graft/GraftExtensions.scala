@@ -13,22 +13,14 @@ import graft.functions.{CosineSim, FeatureHashEmbed, MinHashBands, MinHashSig, S
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`; for a session that ALREADY
   * exists (builder extensions only apply when `getOrCreate` actually
-  * creates one), use [[GraftExtensions.registerInto]].
+  * creates one), use [[GraftExtensions.registerInto]]. No optimizer rule
+  * is injected: the `graft.plans` rules are applied to one plan at a time
+  * with `GraftBridge.withRule`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // Conf-gated (spark.graft.rangeJoin.binWidth): inert until a bin width
-    // is chosen, so injection is always safe.
-    ext.injectOptimizerRule(_ => graft.plans.RangeBinJoinRule)
-    // Conf-gated (spark.graft.asofRewrite.enabled): see the rule's contract.
-    ext.injectOptimizerRule(_ => graft.plans.AsofJoinRule)
-    // Conf-gated (spark.graft.latestByRewrite.enabled). Injected after
-    // AsofJoinRule so the as-of shape (whose window child is a join) gets
-    // rewritten by the more specific rule first.
-    ext.injectOptimizerRule(_ => graft.plans.LatestByRule)
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)
-  }
 }
 
 object GraftExtensions {
@@ -62,24 +54,13 @@ object GraftExtensions {
         "feature_hash_embed(tokens) - 64-dim hashing-trick text embedding, L2-normalized"),
       ((args: Seq[Expression]) => FeatureHashEmbed(args.head, 64)): FunctionBuilder))
 
-  /** Register the SQL functions and the optimizer rule into a session that
-    * was ALREADY built (e.g. the shared test-JVM singleton, where
+  /** Register the SQL functions into a session that was ALREADY built
+    * (e.g. the shared test-JVM singleton, where
     * `builder.withExtensions(...).getOrCreate()` silently returns the
     * pre-existing session and never applies the extensions). Idempotent:
-    * re-registration overwrites with identical builders, and the rule is
-    * appended to `experimental.extraOptimizations` only once. */
-  def registerInto(spark: SparkSession): Unit = {
+    * re-registration overwrites with identical builders. */
+  def registerInto(spark: SparkSession): Unit =
     functions.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeBinJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeBinJoinRule
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.AsofJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.AsofJoinRule
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LatestByRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LatestByRule
-  }
 }

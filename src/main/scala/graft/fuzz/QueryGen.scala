@@ -577,11 +577,6 @@ object QueryGen {
     } else None
   }
 
-  private def groupKey(r: Random, src: FSrc, alias: String): Option[E] =
-    groupKeyRaw(r, src).map { case (c, s) =>
-      E(c.as(alias), s"$s AS $alias")
-    }
-
   // ---- semi/anti, set-op, window shapes --------------------------------
 
   private val baseById: Map[String, FSrc] =
@@ -682,7 +677,7 @@ object QueryGen {
           src.orderKeys.map(k => src.cols.find(_.name == k).get)).distinct
         val sel = ps.zipWithIndex.map { case (c, i) => (s"p$i", c.name) }
         // a third of the draws become rn <= 1 latest-row picks with
-        // LatestByRule enabled (drawn HERE, not in the run lambda — see
+        // LatestByRule applied (drawn HERE, not in the run lambda — see
         // asofQuery). Bare-column keys only: the rule's conservative
         // match wants attribute partition specs. Each latest draw then
         // draws a direction REGIME so the rule's guard conditions are
@@ -731,20 +726,20 @@ object QueryGen {
             .orderBy(sel.zip(dirs).map { case ((_, c), desc) =>
               if (desc) col(c).desc_nulls_last else col(c).asc_nulls_first
             }: _*)
-          val out = df1.select(sel.map { case (a, c) => col(c).as(a) } ++
+          val top = df1.select(sel.map { case (a, c) => col(c).as(a) } ++
               Seq(gRaw.as("k0"), row_number().over(w).as("rn")): _*)
             .where(col("rn") <= k)
-          if (latestDraw) {
-            graft.GraftExtensions.registerInto(s)
-            s.conf.set(graft.plans.LatestByRule.EnabledConf, "true")
+          if (!latestDraw) top
+          else {
+            val out = org.apache.spark.sql.GraftBridge.withRule(top, graft.plans.LatestByRule)
             val rewritten = out.queryExecution.optimizedPlan.toString
               .contains("_graft_latest")
             if (mixed) require(!rewritten,
               s"$qname: mixed-direction draw was rewritten — guard breach")
             else require(rewritten,
               s"$qname: latest-row draw did not route through LatestByRule")
+            out
           }
-          out
         })
     }
   }
@@ -842,8 +837,6 @@ object QueryGen {
         // operator — the rewrite path stays fuzz-covered end-to-end. The
         // require fails loudly if routing silently stops rewriting.
         if (viaRewrite) {
-          graft.GraftExtensions.registerInto(s)
-          s.conf.set(graft.plans.AsofJoinRule.EnabledConf, "true")
           val rightDf = rightDf0.select(col("user_id").as("r_uid"),
             col("ts").as("r_ts"), col("event_id").as("r_id"))
           val cmp =
@@ -853,10 +846,14 @@ object QueryGen {
             leftDf("user_id") === rightDf("r_uid") && cmp, "left_outer")
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(leftDf("p_id")).orderBy(rightDf("r_ts").desc)
-          val out = j.withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1)
-            .select(col("p_id"), col("user_id").as("k"), col("ts").as("p_ts"),
-              col("r_id").as("last_id"), col("r_ts").as("last_ts"))
+          // p_id is the left table's unique key: the rule's soundness
+          // contract, so this plan may take the rewrite
+          val out = org.apache.spark.sql.GraftBridge.withRule(
+            j.withColumn("rn", row_number().over(w))
+              .where(col("rn") === 1)
+              .select(col("p_id"), col("user_id").as("k"), col("ts").as("p_ts"),
+                col("r_id").as("last_id"), col("r_ts").as("last_ts")),
+            graft.plans.AsofJoinRule)
           require(out.queryExecution.optimizedPlan.toString.contains("_graft_asof"),
             s"$name: declarative as-of draw did not route through AsofJoinRule")
           out
@@ -902,8 +899,8 @@ object QueryGen {
         s"ON l_extendedprice >= lo AND l_extendedprice < hi " +
         s"GROUP BY range_id"
     // half the draws go through the explicit operator, half through the
-    // declarative band join + RangeBinJoinRule rewrite (the Fuzz session
-    // installs GraftExtensions) — both against the same binless oracle
+    // declarative band join + RangeBinJoinRule(binWidth) rewrite — both
+    // against the same binless oracle
     val viaRule = r.nextBoolean()
     FuzzQuery(name, sql, (s, d) => {
       val ranges = s.range(0, n).select(
@@ -911,12 +908,14 @@ object QueryGen {
         (col("id") * stride).as("lo"),
         (col("id") * stride + width).as("hi"))
       val joined = if (viaRule) {
-        // conf stays set while THIS query's plan optimizes/executes; the
-        // next rule-mode query overwrites it with its own width
-        s.conf.set(graft.plans.RangeBinJoinRule.BinWidthConf, binWidth.toString)
-        Tables.lineitem(s, d).join(ranges,
-          col("l_extendedprice") >= col("lo") &&
-            col("l_extendedprice") < col("hi"))
+        val binned = org.apache.spark.sql.GraftBridge.withRule(
+          Tables.lineitem(s, d).join(ranges,
+            col("l_extendedprice") >= col("lo") &&
+              col("l_extendedprice") < col("hi")),
+          graft.plans.RangeBinJoinRule(binWidth))
+        require(binned.queryExecution.optimizedPlan.toString.contains("_graft_bin"),
+          s"$name: declarative band join did not route through RangeBinJoinRule")
+        binned
       } else graft.operators.ScaleOps.rangeBinJoin(
         Tables.lineitem(s, d), ranges, "l_extendedprice", "lo", "hi",
         binWidth)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan,
   Project, Union, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Optimizer rule: rewrites the declarative as-of join idiom —
   *
@@ -30,13 +30,13 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * right rows before left at equal ts, strict `<` after; secondary window
   * sort keys become reversed tie-break orderings).
   *
-  * Soundness contract (why the rule is conf-gated rather than always on):
+  * Soundness contract (why the rule is never injected into a session):
   * `rn = 1` picks one row per WINDOW PARTITION, which equals "one row per
   * left row" only when the window's partition key uniquely identifies left
   * rows — the universal as-of idiom (partition by the left table's primary
-  * key), but a property the optimizer cannot verify from the plan. Enabling
-  * [[AsofJoinRule.EnabledConf]] asserts it. Inert otherwise, so injection
-  * ([[graft.GraftExtensions]]) is always safe.
+  * key), but a property the optimizer cannot verify from the plan. The
+  * caller asserts it by applying the rule to its own plan,
+  * `GraftBridge.withRule(df, AsofJoinRule)`; no other plan is touched.
   *
   * Matched shape (conservative by construction, like
   * [[RangeBinJoinRule]]): Filter(rn = 1) over a single-expression
@@ -53,8 +53,6 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * plan's no-match behavior in both join modes.
   */
 object AsofJoinRule extends Rule[LogicalPlan] {
-
-  val EnabledConf = "spark.graft.asofRewrite.enabled"
 
   /** The decomposed join condition. */
   private case class Keys(
@@ -125,18 +123,12 @@ object AsofJoinRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(EnabledConf, "false").toBoolean
-      catch { case _: IllegalArgumentException => false }
-    if (!enabled) plan
-    else plan.transformUp {
-      case f @ Filter(fc,
-          w @ Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
-            partSpec, orderSpec, wchild, _))
-          if isRnOne(fc, al.toAttribute) =>
-        rewrite(f, al, partSpec, orderSpec, wchild).getOrElse(f)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case f @ Filter(fc,
+        Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
+          partSpec, orderSpec, wchild, _))
+        if isRnOne(fc, al.toAttribute) =>
+      rewrite(f, al, partSpec, orderSpec, wchild).getOrElse(f)
   }
 
   private def rewrite(

@@ -40,11 +40,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     rows, rn = 1 is nondeterministic between the tied rows and the
   *     argmax picks one of the same tied set — no new nondeterminism.
   *
-  * Conf-gated like [[AsofJoinRule]] not for soundness (the rewrite is
-  * row-identical) but for plan-stability discipline: an injected rule
-  * that silently replaces Window plans engine-wide changes every
-  * downstream `.explain` contract, so the engine's own registered
-  * queries opt in per session. Matched shape is conservative: a Filter
+  * Applied per plan like [[AsofJoinRule]] (`GraftBridge.withRule`), not
+  * for soundness (the rewrite is row-identical) but for plan stability:
+  * a rule injected into a session would silently replace Window plans in
+  * every later query, so a query opts in for its own plan only. Matched
+  * shape is conservative: a Filter
   * of exactly `rn = 1` (or `rn <= 1`) over a single-expression
   * row_number Window partitioned and ordered on bare attributes, through
   * the WindowGroupLimit Spark's own InferWindowGroupLimit may already
@@ -52,8 +52,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * top-1 sort-filter). Anything else is left untouched.
   */
 object LatestByRule extends Rule[LogicalPlan] {
-
-  val EnabledConf = "spark.graft.latestByRewrite.enabled"
 
   private def isRnOne(cond: Expression, rn: Attribute): Boolean = cond match {
     case EqualTo(a: Attribute, IntegerLiteral(1)) => a.semanticEquals(rn)
@@ -63,24 +61,18 @@ object LatestByRule extends Rule[LogicalPlan] {
   }
 
   /** Strip the WindowGroupLimit the main optimizer batch inserts between
-    * the Window and its child (runs before user-provided rules). */
+    * the Window and its child (the rule runs on the optimized plan). */
   private def stripLimit(p: LogicalPlan): LogicalPlan = p match {
     case WindowGroupLimit(_, _, _, _, child) => child
     case other => other
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(EnabledConf, "false").toBoolean
-      catch { case _: IllegalArgumentException => false }
-    if (!enabled) plan
-    else plan.transformUp {
-      case f @ Filter(fc,
-          Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
-            partSpec, orderSpec, wchild, _))
-          if isRnOne(fc, al.toAttribute) =>
-        rewrite(f, al, partSpec, orderSpec, stripLimit(wchild)).getOrElse(f)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case f @ Filter(fc,
+        Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
+          partSpec, orderSpec, wchild, _))
+        if isRnOne(fc, al.toAttribute) =>
+      rewrite(f, al, partSpec, orderSpec, stripLimit(wchild)).getOrElse(f)
   }
 
   private def rewrite(

@@ -26,16 +26,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
   * This is the [[graft.operators.ScaleOps.rangeBinJoin]] operator as a
   * `Rule[LogicalPlan]`, so a user writing the declarative
   * `fact.join(ranges, v.between(lo, hi))` gets the scale path without
-  * restructuring the query. Gated by [[RangeBinJoinRule.BinWidthConf]]
-  * (bin width in value units; unset or ≤ 0 disables the rewrite — width
-  * is a data-dependent tuning choice the engine cannot infer). Injected
-  * by [[graft.GraftExtensions]]. The rewritten join carries an equi
-  * conjunct, so the rule never re-fires on its own output within the
-  * fixed-point batch.
+  * restructuring the query: `GraftBridge.withRule(df,
+  * RangeBinJoinRule(binWidth))`. `binWidth` is in value units — a
+  * data-dependent tuning choice the engine cannot infer, so the caller
+  * names it for its own plan. The rewritten join carries an equi
+  * conjunct, so the rule never re-fires on its own output.
   */
-object RangeBinJoinRule extends Rule[LogicalPlan] {
-
-  val BinWidthConf = "spark.graft.rangeJoin.binWidth"
+case class RangeBinJoinRule(binWidth: Double) extends Rule[LogicalPlan] {
+  require(binWidth > 0 && !binWidth.isInfinite,
+    s"RangeBinJoinRule: bin width must be positive and finite, got $binWidth")
 
   /** point expr, bounds (both on the opposite side), point-side flag. */
   private case class Band(point: Expression, lo: Expression, hi: Expression, pointOnLeft: Boolean)
@@ -82,37 +81,31 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def binOf(e: Expression, w: Double): Expression =
-    Floor(Divide(Cast(e, DoubleType), Literal(w, DoubleType)))
+  private def binOf(e: Expression): Expression =
+    Floor(Divide(Cast(e, DoubleType), Literal(binWidth, DoubleType)))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val w =
-      try conf.getConfString(BinWidthConf, "0").toDouble
-      catch { case _: NumberFormatException => 0.0 }
-    if (w <= 0 || w.isNaN || w.isInfinite) plan
-    else plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), hint) if cond.deterministic =>
-        matchBand(cond, left, right) match {
-          case Some(band) =>
-            val pointChild = if (band.pointOnLeft) left else right
-            val rangeChild = if (band.pointOnLeft) right else left
-            val binAlias = Alias(binOf(band.point, w), "_graft_bin")()
-            val pointPlan = Project(pointChild.output :+ binAlias, pointChild)
-            val genAttr = AttributeReference("_graft_bin_r", LongType, nullable = false)()
-            val genPlan = Generate(
-              // Sequence is TimeZoneAware; post-analysis rules must fill the
-              // zone themselves or the plan flips back to unresolved.
-              Explode(Sequence(binOf(band.lo, w), binOf(band.hi, w), None,
-                Some(conf.sessionLocalTimeZone))),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(genAttr), child = rangeChild)
-            val newCond = And(EqualTo(binAlias.toAttribute, genAttr), cond)
-            val newJoin =
-              if (band.pointOnLeft) Join(pointPlan, genPlan, Inner, Some(newCond), hint)
-              else Join(genPlan, pointPlan, Inner, Some(newCond), hint)
-            Project(j.output, newJoin)
-          case None => j
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(left, right, Inner, Some(cond), hint) if cond.deterministic =>
+      matchBand(cond, left, right) match {
+        case Some(band) =>
+          val pointChild = if (band.pointOnLeft) left else right
+          val rangeChild = if (band.pointOnLeft) right else left
+          val binAlias = Alias(binOf(band.point), "_graft_bin")()
+          val pointPlan = Project(pointChild.output :+ binAlias, pointChild)
+          val genAttr = AttributeReference("_graft_bin_r", LongType, nullable = false)()
+          val genPlan = Generate(
+            // Sequence is TimeZoneAware; post-analysis rules must fill the
+            // zone themselves or the plan flips back to unresolved.
+            Explode(Sequence(binOf(band.lo), binOf(band.hi), None,
+              Some(conf.sessionLocalTimeZone))),
+            unrequiredChildIndex = Nil, outer = false, qualifier = None,
+            generatorOutput = Seq(genAttr), child = rangeChild)
+          val newCond = And(EqualTo(binAlias.toAttribute, genAttr), cond)
+          val newJoin =
+            if (band.pointOnLeft) Join(pointPlan, genPlan, Inner, Some(newCond), hint)
+            else Join(genPlan, pointPlan, Inner, Some(newCond), hint)
+          Project(j.output, newJoin)
+        case None => j
+      }
   }
 }

@@ -564,9 +564,11 @@ object Relational {
   }
 
   /** C8 through the OPTIMIZER, not the operator: the query is written as
-    * the declarative as-of idiom — inequality join + row_number() over
-    * (partition by left id, order by right ts desc) + rn = 1 — and
-    * [[graft.plans.AsofJoinRule]] rewrites it to the same union+window
+    * the declarative as-of idiom ([[c8AsofIdiom]]) — inequality join +
+    * row_number() over (partition by left id, order by right ts desc) +
+    * rn = 1 — and [[graft.plans.AsofJoinRule]], applied to this plan
+    * alone (the partition key `purchase_id` is unique, which is the
+    * rule's soundness contract), rewrites it to the same union+window
     * plan [[c8AsofJoin]] builds by hand via ScaleOps.asofJoin. The fail-
     * loud require pins that the rewrite actually fired (the unrewritten
     * plan would still be CORRECT, just the quadratic-per-key pair
@@ -586,8 +588,17 @@ object Relational {
       |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
       |    ON c.user_id = p.user_id AND c.ts <= p.ts) t
       |WHERE rn = 1 ORDER BY purchase_id""".stripMargin) { (s, d) =>
-    graft.GraftExtensions.registerInto(s)
-    s.conf.set(graft.plans.AsofJoinRule.EnabledConf, "true")
+    val out = org.apache.spark.sql.GraftBridge.withRule(
+      c8AsofIdiom(s, d), graft.plans.AsofJoinRule)
+    require(out.queryExecution.optimizedPlan.toString.contains("_graft_asof"),
+      "c8_asof_rewrite: AsofJoinRule did not fire on the declarative idiom")
+    out
+  }
+
+  /** The declarative as-of idiom [[c8AsofRewrite]] hands to
+    * [[graft.plans.AsofJoinRule]], as the session plans it without the
+    * rule. */
+  def c8AsofIdiom(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d)
     val p = ev.where(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
@@ -599,13 +610,10 @@ object Relational {
       p("user_id") === c("c_uid") && c("c_ts") <= p("purchase_ts"), "left_outer")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(p("purchase_id")).orderBy(c("c_ts").desc, c("c_id").desc)
-    val out = j.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+    j.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
         col("c_id").as("last_click_id"), col("c_ts").as("last_click_ts"))
       .orderBy("purchase_id")
-    require(out.queryExecution.optimizedPlan.toString.contains("_graft_asof"),
-      "c8_asof_rewrite: AsofJoinRule did not fire on the declarative idiom")
-    out
   }
 
   /** C9: second-moment statistics (stddev, correlation) the hash-matchable
@@ -2901,7 +2909,8 @@ object Relational {
   /** B1 through the OPTIMIZER, not the hand-written aggregate: the query
     * is the textbook latest-row idiom — row_number() over (partition by
     * key order by ts desc, id desc) + rn = 1 — and
-    * [[graft.plans.LatestByRule]] rewrites it into the max_by hash
+    * [[graft.plans.LatestByRule]], applied to this plan alone, rewrites
+    * it into the max_by hash
     * aggregate [[b1LatestOn]] builds by hand (no per-key sort, map-side
     * partial argmax — the 100 TB plan). The fail-loud require pins that
     * the rewrite fired; the oracle runs the SAME declarative SQL in
@@ -2917,18 +2926,16 @@ object Relational {
       |        ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
       |      FROM orders)
       |WHERE rn = 1 ORDER BY o_custkey""".stripMargin) { (s, d) =>
-    graft.GraftExtensions.registerInto(s)
-    s.conf.set(graft.plans.LatestByRule.EnabledConf, "true")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-    val out = orders(s, d)
+    val out = org.apache.spark.sql.GraftBridge.withRule(orders(s, d)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("o_custkey"), col("o_orderkey").as("latest_order"),
         col("o_orderdate").as("latest_ts"),
         col("o_totalprice").as("latest_price"))
-      .orderBy("o_custkey")
+      .orderBy("o_custkey"), graft.plans.LatestByRule)
     require(out.queryExecution.optimizedPlan.toString.contains("_graft_latest"),
       "b1_latest_on_rewrite: LatestByRule did not fire on the declarative idiom")
     out

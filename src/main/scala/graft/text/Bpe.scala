@@ -1,8 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
 import graft.Tables.SpreadOps

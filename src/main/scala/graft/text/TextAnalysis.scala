@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -439,79 +439,27 @@ object TextAnalysis {
       |      ORDER BY round(tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0), 6) DESC, tf.term) AS INT) AS rnk
       |  FROM tf JOIN df USING (term) CROSS JOIN n) t
       |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin) { (s, d) =>
-    tfidfTop(Tables.documents(s, d), topK = 3,
-      counts = Some(sharedTermCounts(s, d))).orderBy("doc_id", "rnk")
+    tfidfTop(Tables.documents(s, d), topK = 3).orderBy("doc_id", "rnk")
   }
 
-  /** Shared unigram count table (doc_id, lang, term, tf): ONE corpus scan
-    * and one shuffle on the (doc, term) key, feeding the whole unigram-C19
-    * family — tfidf (projects lang away), entropy (per-doc aggregate), NB
-    * (per-(term,class) model + the scoring grid), DSIR (distribution
-    * aggregate + scoring join). `lang` is functionally dependent on
-    * `doc_id`, so carrying it adds nothing to the group cardinality. */
+  /** Unigram count table (doc_id, lang, term, tf): ONE corpus scan and
+    * one shuffle on the (doc, term) key. Every unigram-C19 query builds it
+    * inside its own plan — tfidf (projects lang away), entropy (per-doc
+    * aggregate), NB (per-(term,class) model + the scoring grid), DSIR
+    * (distribution aggregate + scoring join), Zipf (per-language term
+    * totals). `lang` is functionally dependent on `doc_id`, so carrying it
+    * adds nothing to the group cardinality. */
   def termCounts(docs: DataFrame): DataFrame =
     docs.select(
         col("doc_id"), col("lang"),
         explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
       .groupBy("doc_id", "lang", "term").agg(count(lit(1)).as("tf"))
 
-  private val tcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, DataFrame)]
-
-  /** Latest modification timestamp under the documents table at `dir` —
-    * the cache-staleness fingerprint (resolved through the session's
-    * Hadoop FileSystem so remote stores fingerprint too). */
-  private def docsFingerprint(s: SparkSession, d: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val listed = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*"))
-    val stats = if (listed != null && listed.nonEmpty) listed
-                else fs.globStatus(p)
-    if (stats == null || stats.isEmpty) 0L
-    else stats.map(_.getModificationTime).max
-  }
-
-  /** Session-cached materialization of [[termCounts]] over the documents
-    * table at `dir`: in pipeline use the four unigram consumers run in the
-    * same session, so the cache collapses four tokenize+count corpus scans
-    * into one (lazy localCheckpoint — built at first use, reused after).
-    * The entry is fingerprinted by the table's latest modification time:
-    * if the corpus at `dir` is rewritten mid-session, the stale
-    * checkpoint's blocks are freed and the counts rebuilt instead of
-    * silently serving the old data. */
-  def sharedTermCounts(s: SparkSession, d: String): DataFrame = {
-    val fp = docsFingerprint(s, d)
-    // Build-and-swap runs under the cache monitor so two threads racing a
-    // rebuild cannot each build (and leak) a checkpoint: the loser of the
-    // race re-reads the winner's entry. Freeing the superseded checkpoint
-    // is still eager — a fingerprint mismatch means the corpus at `d` was
-    // REWRITTEN, so any in-flight reader of the old blocks is already
-    // consuming logically-dead data; the free turns that silent staleness
-    // into a loud block-missing failure rather than deferring it.
-    tcCache.get((s, d)) match {
-      case Some((`fp`, df)) => df
-      case _ => tcCache.synchronized {
-        tcCache.get((s, d)) match {
-          case Some((`fp`, df)) => df // lost the race to a fresh builder
-          case stale =>
-            stale.foreach { case (_, old) =>
-              org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(old)
-            }
-            val fresh = termCounts(Tables.documents(s, d)).localCheckpoint(false)
-            tcCache.put((s, d), (fp, fresh))
-            fresh
-        }
-      }
-    }
-  }
-
   /** documents(doc_id, text) → top-`topK` TF-IDF terms per document
-    * (doc_id, rnk, term, tf, score). See [[tfidfTopTerms]]. `counts`
-    * optionally supplies a pre-materialized [[termCounts]] table. */
-  def tfidfTop(docs: DataFrame, topK: Int,
-      counts: Option[DataFrame] = None): DataFrame = {
+    * (doc_id, rnk, term, tf, score). See [[tfidfTopTerms]]. */
+  def tfidfTop(docs: DataFrame, topK: Int): DataFrame = {
     // materialize once: feeds both the df aggregate and the scoring join
-    val tf = counts.getOrElse(termCounts(docs).localCheckpoint(false))
+    val tf = termCounts(docs).localCheckpoint(false)
       .select(col("doc_id"), col("term"), col("tf"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
@@ -554,17 +502,14 @@ object TextAnalysis {
       |  round(ln(l) - s / l, 6) AS entropy,
       |  round((ln(l) - s / l) / ln(2.0), 6) AS entropy_bits
       |FROM agg ORDER BY doc_id""".stripMargin) { (s, d) =>
-    unigramEntropy(Tables.documents(s, d),
-      counts = Some(sharedTermCounts(s, d))).orderBy("doc_id")
+    unigramEntropy(Tables.documents(s, d)).orderBy("doc_id")
   }
 
   /** documents(doc_id, text) → (doc_id, n_tokens, n_distinct, entropy,
-    * entropy_bits). See [[wordEntropy]]. `counts` optionally supplies a
-    * pre-materialized [[termCounts]] table. */
-  def unigramEntropy(docs: DataFrame,
-      counts: Option[DataFrame] = None): DataFrame = {
-    // single consumer: without a shared table the counts need no checkpoint
-    val tf = counts.getOrElse(termCounts(docs))
+    * entropy_bits). See [[wordEntropy]]. */
+  def unigramEntropy(docs: DataFrame): DataFrame = {
+    // single consumer: the counts need no checkpoint
+    val tf = termCounts(docs)
     val hNats = log(col("l")) - col("s") / col("l")
     tf.groupBy("doc_id")
       .agg(
@@ -636,16 +581,13 @@ object TextAnalysis {
       |JOIN documents dd USING (doc_id)
       |WHERE s.rnk = 1
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    nbClassify(Tables.documents(s, d),
-      counts = Some(sharedTermCounts(s, d))).orderBy("doc_id")
+    nbClassify(Tables.documents(s, d)).orderBy("doc_id")
   }
 
   /** documents(doc_id, text, lang) → (doc_id, pred_lang, score,
-    * actual_lang, correct). See [[nbClassifier]]. `counts` optionally
-    * supplies a pre-materialized [[termCounts]] table. */
-  def nbClassify(docs: DataFrame,
-      counts: Option[DataFrame] = None): DataFrame = {
-    val tf = counts.getOrElse(termCounts(docs).localCheckpoint(false))
+    * actual_lang, correct). See [[nbClassifier]]. */
+  def nbClassify(docs: DataFrame): DataFrame = {
+    val tf = termCounts(docs).localCheckpoint(false)
     // The model table is materialized ONCE (lazy localCheckpoint) and its
     // three consumers — per-class token mass, vocabulary size, and the
     // scoring join — all read the materialization instead of re-running
@@ -732,18 +674,15 @@ object TextAnalysis {
       |  round(SUM(contrib), 6) + 0.0 AS logw,
       |  round(SUM(contrib) / SUM(tf), 6) + 0.0 AS logw_per_tok
       |FROM contrib GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-    dsirWeight(Tables.documents(s, d), targetLang = "en",
-      counts = Some(sharedTermCounts(s, d))).orderBy("doc_id")
+    dsirWeight(Tables.documents(s, d), targetLang = "en").orderBy("doc_id")
   }
 
   /** documents(doc_id, text, lang) → (doc_id, n_tokens, logw,
-    * logw_per_tok). See [[dsirWeights]]. `counts` optionally supplies a
-    * pre-materialized [[termCounts]] table. */
-  def dsirWeight(docs: DataFrame, targetLang: String,
-      counts: Option[DataFrame] = None): DataFrame = {
+    * logw_per_tok). See [[dsirWeights]]. */
+  def dsirWeight(docs: DataFrame, targetLang: String): DataFrame = {
     // materialized once — feeds the distribution aggregate AND the
     // scoring join
-    val tf = counts.getOrElse(termCounts(docs).localCheckpoint(false))
+    val tf = termCounts(docs).localCheckpoint(false)
     val stats = tf.groupBy("term").agg(
       sum(when(col("lang") === targetLang, col("tf")).otherwise(0L)).as("ct"),
       sum(col("tf")).as("cs"))
@@ -777,8 +716,8 @@ object TextAnalysis {
     * rank by frequency (ties broken by term for cross-engine determinism),
     * one window pass, five running sums, closed-form slope/intercept.
     *
-    * Scale shape: term totals ride the shared materialized (doc, term)
-    * count table (no new corpus scan in pipeline use); the per-language
+    * Scale shape: term totals aggregate the (doc, term) count table
+    * ([[termCounts]]) once more by (lang, term); the per-language
     * vocabulary the window sorts is bounded by the token-type space
     * (Heaps' law — ~10⁷ types at web scale), not by corpus row count, so
     * the rank window stays tractable at 100 TB while everything after the
@@ -806,7 +745,7 @@ object TextAnalysis {
       |  round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6) + 0.0 AS intercept
       |FROM agg WHERE n >= 3 ORDER BY lang""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val cnts = sharedTermCounts(s, d)
+    val cnts = termCounts(Tables.documents(s, d))
       .groupBy("lang", "term").agg(sum(col("tf")).as("cnt"))
     val w = Window.partitionBy("lang").orderBy(col("cnt").desc, col("term"))
     val xy = cnts.withColumn("rnk", row_number().over(w))

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Minimal bridge into the `private[sql]` Column↔Expression converters —
   * the supported extension-point surface (classic.ExpressionUtils) is
@@ -20,4 +22,14 @@ object GraftBridge {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** `df` with `rule` applied to its optimized plan, under `df`'s session
+    * (so the rule reads that session's conf). The rule rewrites this one
+    * plan only: nothing is injected into the session, so no later query
+    * sees it. For rewrites whose soundness only the caller can vouch for
+    * (see [[graft.plans.AsofJoinRule]]). */
+  def withRule(df: DataFrame, rule: Rule[LogicalPlan]): DataFrame = {
+    val s = classic.ClassicConversions.castToImpl(df.sparkSession)
+    s.withActive(classic.Dataset.ofRows(s, rule(df.queryExecution.optimizedPlan)))
+  }
 }

@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.withRule
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions: the custom expressions are callable from plain SQL. */
+/** GraftExtensions: the custom expressions are callable from plain SQL.
+  * The `graft.plans` rules: each rewrites the plan it is applied to with
+  * `withRule`, row-identical to the unrewritten plan. */
 class ExtensionsSpec extends AnyFunSuite {
 
   // master must match SparkSpec's: if this suite runs first, getOrCreate
@@ -57,19 +60,17 @@ class ExtensionsSpec extends AnyFunSuite {
       ("low", 0L, 30L), ("mid", 25L, 60L), ("high", 55L, 99L), ("empty", 200L, 210L))
       .toDF("name", "lo", "hi")
     val cond = col("v") >= col("lo") && col("v") <= col("hi")
-    def run() = fact.join(ranges, cond)
+    val rule = graft.plans.RangeBinJoinRule(16)
+    def run(f: DataFrame => DataFrame) = f(fact.join(ranges, cond))
       .select("id", "v", "name").orderBy("id", "name").collect().toSeq
 
-    val baseline = run() // conf unset: rule inert, nested-loop plan
-    spark.conf.set(graft.plans.RangeBinJoinRule.BinWidthConf, "16")
-    try {
-      val rewritten = fact.join(ranges, cond)
-      val optimized = rewritten.queryExecution.optimizedPlan.toString
-      val physical = rewritten.queryExecution.executedPlan.toString
-      assert(optimized.contains("_graft_bin"), optimized)
-      assert(!physical.contains("NestedLoop") && !physical.contains("Cartesian"), physical)
-      assert(run() === baseline)
-    } finally spark.conf.unset(graft.plans.RangeBinJoinRule.BinWidthConf)
+    val baseline = run(identity) // no rule: nested-loop plan
+    val rewritten = withRule(fact.join(ranges, cond), rule)
+    val optimized = rewritten.queryExecution.optimizedPlan.toString
+    val physical = rewritten.queryExecution.executedPlan.toString
+    assert(optimized.contains("_graft_bin"), optimized)
+    assert(!physical.contains("NestedLoop") && !physical.contains("Cartesian"), physical)
+    assert(run(withRule(_, rule)) === baseline)
   }
 
   test("AsofJoinRule rewrites join+row_number as-of idiom to the union+window plan") {
@@ -93,54 +94,54 @@ class ExtensionsSpec extends AnyFunSuite {
       j.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("t_id"), col("t_ts"), col("q_ts"), col("q_px"))
     }
-    def run(inner: Boolean, strict: Boolean) =
-      plan(inner, strict).orderBy("t_id").collect().toSeq.map(_.toSeq)
+    def run(inner: Boolean, strict: Boolean, rewrite: Boolean) = {
+      val p = plan(inner, strict)
+      (if (rewrite) withRule(p, graft.plans.AsofJoinRule) else p)
+        .orderBy("t_id").collect().toSeq.map(_.toSeq)
+    }
 
-    // conf off: rule inert — capture the quadratic plan's answers
-    val base = for (i <- Seq(true, false); s <- Seq(true, false)) yield run(i, s)
-    spark.conf.set(graft.plans.AsofJoinRule.EnabledConf, "true")
-    try {
-      val d = plan(inner = true, strict = false)
-      val optimized = d.queryExecution.optimizedPlan.toString
-      val physical = d.queryExecution.executedPlan.toString
-      assert(optimized.contains("_graft_asof"), optimized)
-      assert(!physical.contains("Join"), physical) // no pair blow-up remains
-      val rewritten = for (i <- Seq(true, false); s <- Seq(true, false)) yield run(i, s)
-      assert(rewritten === base)
-      // spot-check semantics: trade 102 (ts 12) sees the q_id-max quote at
-      // ts 10; inclusive trade 101 sees ts-10 too, strict sees ts 5; trade
-      // 104 (ts 1) has no earlier quote — dropped inner, null left-outer
-      val inclusive = run(inner = true, strict = false)
-      assert(inclusive === Seq(
-        Seq(101L, 10L, 10L, 2.5), Seq(102L, 12L, 10L, 2.5), Seq(103L, 7L, 6L, 9.0)))
-      val strictOuter = run(inner = false, strict = true)
-      assert(strictOuter === Seq(
-        Seq(101L, 10L, 5L, 1.0), Seq(102L, 12L, 10L, 2.5),
-        Seq(103L, 7L, 6L, 9.0), Seq(104L, 1L, null, null)))
-    } finally spark.conf.unset(graft.plans.AsofJoinRule.EnabledConf)
+    // without the rule: the quadratic plan's answers
+    val base = for (i <- Seq(true, false); s <- Seq(true, false)) yield run(i, s, false)
+    val d = withRule(plan(inner = true, strict = false), graft.plans.AsofJoinRule)
+    val optimized = d.queryExecution.optimizedPlan.toString
+    val physical = d.queryExecution.executedPlan.toString
+    assert(optimized.contains("_graft_asof"), optimized)
+    assert(!physical.contains("Join"), physical) // no pair blow-up remains
+    val rewritten = for (i <- Seq(true, false); s <- Seq(true, false)) yield run(i, s, true)
+    assert(rewritten === base)
+    // spot-check semantics: trade 102 (ts 12) sees the q_id-max quote at
+    // ts 10; inclusive trade 101 sees ts-10 too, strict sees ts 5; trade
+    // 104 (ts 1) has no earlier quote — dropped inner, null left-outer
+    val inclusive = run(inner = true, strict = false, rewrite = true)
+    assert(inclusive === Seq(
+      Seq(101L, 10L, 10L, 2.5), Seq(102L, 12L, 10L, 2.5), Seq(103L, 7L, 6L, 9.0)))
+    val strictOuter = run(inner = false, strict = true, rewrite = true)
+    assert(strictOuter === Seq(
+      Seq(101L, 10L, 5L, 1.0), Seq(102L, 12L, 10L, 2.5),
+      Seq(103L, 7L, 6L, 9.0), Seq(104L, 1L, null, null)))
   }
 
   test("AsofJoinRule leaves non-as-of window filters alone") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions.row_number
-    spark.conf.set(graft.plans.AsofJoinRule.EnabledConf, "true")
-    try {
-      val l = Seq((1L, "A", 10L)).toDF("t_id", "sym", "t_ts")
-      val r = Seq(("A", 5L, 1.0)).toDF("q_sym", "q_ts", "q_px")
-      val j = l.join(r, l("sym") === r("q_sym") && r("q_ts") <= l("t_ts"))
-      // rn = 2 is not a latest-row pick — no rewrite
-      val rn2 = j.withColumn("rn",
-          row_number().over(W.partitionBy(l("t_id")).orderBy(r("q_ts").desc)))
-        .where(col("rn") === 2)
-      assert(!rn2.queryExecution.optimizedPlan.toString.contains("_graft_asof"))
-      // ordered by a LEFT column: not the as-of idiom — no rewrite
-      val wrongOrder = j.withColumn("rn",
-          row_number().over(W.partitionBy(l("t_id")).orderBy(l("t_ts").desc)))
-        .where(col("rn") === 1)
-      assert(!wrongOrder.queryExecution.optimizedPlan.toString.contains("_graft_asof"))
-      assert(wrongOrder.count() === 1L) // and still executes
-    } finally spark.conf.unset(graft.plans.AsofJoinRule.EnabledConf)
+    def opt(df: DataFrame) =
+      withRule(df, graft.plans.AsofJoinRule).queryExecution.optimizedPlan.toString
+    val l = Seq((1L, "A", 10L)).toDF("t_id", "sym", "t_ts")
+    val r = Seq(("A", 5L, 1.0)).toDF("q_sym", "q_ts", "q_px")
+    val j = l.join(r, l("sym") === r("q_sym") && r("q_ts") <= l("t_ts"))
+    // rn = 2 is not a latest-row pick — no rewrite
+    val rn2 = j.withColumn("rn",
+        row_number().over(W.partitionBy(l("t_id")).orderBy(r("q_ts").desc)))
+      .where(col("rn") === 2)
+    assert(!opt(rn2).contains("_graft_asof"))
+    // ordered by a LEFT column: not the as-of idiom — no rewrite
+    val wrongOrder = j.withColumn("rn",
+        row_number().over(W.partitionBy(l("t_id")).orderBy(l("t_ts").desc)))
+      .where(col("rn") === 1)
+    assert(!opt(wrongOrder).contains("_graft_asof"))
+    // and still executes
+    assert(withRule(wrongOrder, graft.plans.AsofJoinRule).count() === 1L)
   }
 
   test("LatestByRule rewrites the rn=1 latest-row window into an argmax aggregate") {
@@ -162,70 +163,64 @@ class ExtensionsSpec extends AnyFunSuite {
       t.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select("k", "ts", "tag", "v")
     }
-    def run(desc: Boolean) = plan(desc).orderBy("k").collect().toSeq.map(_.toSeq)
+    def rewritten(desc: Boolean) = withRule(plan(desc), graft.plans.LatestByRule)
+    def rows(df: DataFrame) = df.orderBy("k").collect().toSeq.map(_.toSeq)
 
-    val base = Seq(true, false).map(run) // conf off: window plan's answers
-    spark.conf.set(graft.plans.LatestByRule.EnabledConf, "true")
-    try {
-      val d = plan(desc = true)
-      val optimized = d.queryExecution.optimizedPlan.toString
-      val physical = d.queryExecution.executedPlan.toString
-      assert(optimized.contains("_graft_latest"), optimized)
-      assert(!physical.contains("Window"), physical) // no per-key sort remains
-      assert(Seq(true, false).map(run) === base)
-      // spot-check: desc picks (12,"c") for key 1 (tie broken by tag DESC),
-      // "f" for key 3 (null loses), and key 4's null row survives
-      assert(run(desc = true) === Seq(
-        Seq(1L, 12L, "c", 99.0), Seq(2L, 7L, "d", 50.0),
-        Seq(3L, 5L, "f", 2.0), Seq(4L, null, "g", 3.0)))
-      // asc = min_by: null ts WINS (NULLS FIRST) for key 3
-      assert(run(desc = false) === Seq(
-        Seq(1L, 10L, "a", 100.0), Seq(2L, 7L, "d", 50.0),
-        Seq(3L, null, "e", 1.0), Seq(4L, null, "g", 3.0)))
-    } finally spark.conf.unset(graft.plans.LatestByRule.EnabledConf)
+    val base = Seq(true, false).map(desc => rows(plan(desc))) // window plan's answers
+    val d = rewritten(desc = true)
+    val optimized = d.queryExecution.optimizedPlan.toString
+    val physical = d.queryExecution.executedPlan.toString
+    assert(optimized.contains("_graft_latest"), optimized)
+    assert(!physical.contains("Window"), physical) // no per-key sort remains
+    assert(Seq(true, false).map(desc => rows(rewritten(desc))) === base)
+    // spot-check: desc picks (12,"c") for key 1 (tie broken by tag DESC),
+    // "f" for key 3 (null loses), and key 4's null row survives
+    assert(rows(rewritten(desc = true)) === Seq(
+      Seq(1L, 12L, "c", 99.0), Seq(2L, 7L, "d", 50.0),
+      Seq(3L, 5L, "f", 2.0), Seq(4L, null, "g", 3.0)))
+    // asc = min_by: null ts WINS (NULLS FIRST) for key 3
+    assert(rows(rewritten(desc = false)) === Seq(
+      Seq(1L, 10L, "a", 100.0), Seq(2L, 7L, "d", 50.0),
+      Seq(3L, null, "e", 1.0), Seq(4L, null, "g", 3.0)))
   }
 
   test("LatestByRule leaves non-latest-row shapes alone") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions.row_number
-    spark.conf.set(graft.plans.LatestByRule.EnabledConf, "true")
-    try {
-      val t = Seq((1L, 10L, "a"), (1L, 12L, "b")).toDF("k", "ts", "tag")
-      def opt(df: org.apache.spark.sql.DataFrame) =
-        df.queryExecution.optimizedPlan.toString
-      // mixed directions: struct lexicographic order can't express it
-      val mixed = t.withColumn("rn", row_number().over(
-          W.partitionBy(col("k")).orderBy(col("ts").desc, col("tag").asc)))
-        .where(col("rn") === 1)
-      assert(!opt(mixed).contains("_graft_latest"), opt(mixed))
-      assert(mixed.count() === 1L)
-      // rn = 2: not a latest-row pick
-      val rn2 = t.withColumn("rn", row_number().over(
-          W.partitionBy(col("k")).orderBy(col("ts").desc)))
-        .where(col("rn") === 2)
-      assert(!opt(rn2).contains("_graft_latest"), opt(rn2))
-      // non-default null ordering: argmax nulls land the other way
-      val nullsFirst = t.withColumn("rn", row_number().over(
-          W.partitionBy(col("k")).orderBy(col("ts").desc_nulls_first)))
-        .where(col("rn") === 1)
-      assert(!opt(nullsFirst).contains("_graft_latest"), opt(nullsFirst))
-    } finally spark.conf.unset(graft.plans.LatestByRule.EnabledConf)
+    val t = Seq((1L, 10L, "a"), (1L, 12L, "b")).toDF("k", "ts", "tag")
+    def ruled(df: DataFrame) = withRule(df, graft.plans.LatestByRule)
+    def opt(df: DataFrame) = ruled(df).queryExecution.optimizedPlan.toString
+    // mixed directions: struct lexicographic order can't express it
+    val mixed = t.withColumn("rn", row_number().over(
+        W.partitionBy(col("k")).orderBy(col("ts").desc, col("tag").asc)))
+      .where(col("rn") === 1)
+    assert(!opt(mixed).contains("_graft_latest"), opt(mixed))
+    assert(ruled(mixed).count() === 1L)
+    // rn = 2: not a latest-row pick
+    val rn2 = t.withColumn("rn", row_number().over(
+        W.partitionBy(col("k")).orderBy(col("ts").desc)))
+      .where(col("rn") === 2)
+    assert(!opt(rn2).contains("_graft_latest"), opt(rn2))
+    // non-default null ordering: argmax nulls land the other way
+    val nullsFirst = t.withColumn("rn", row_number().over(
+        W.partitionBy(col("k")).orderBy(col("ts").desc_nulls_first)))
+      .where(col("rn") === 1)
+    assert(!opt(nullsFirst).contains("_graft_latest"), opt(nullsFirst))
   }
 
   test("RangeBinJoinRule leaves equi and same-side-band joins alone") {
     import spark.implicits._
-    spark.conf.set(graft.plans.RangeBinJoinRule.BinWidthConf, "16")
-    try {
-      val a = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
-      val b = Seq((1L, 5L, 15L), (2L, 0L, 3L)).toDF("k", "lo", "hi")
-      // equi conjunct present: the join is already shuffle-able — no rewrite
-      val equi = a.join(b, a("k") === b("k") && a("v") >= b("lo") && a("v") <= b("hi"))
-      assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_bin"))
-      assert(equi.select(a("k")).orderBy(a("k")).as[Long].collect().toSeq === Seq(1L))
-      // both bounds reference the same side: not a band join — no rewrite
-      val sameSide = a.join(b, b("lo") <= b("hi") && a("v") >= b("lo"))
-      assert(!sameSide.queryExecution.optimizedPlan.toString.contains("_graft_bin"))
-    } finally spark.conf.unset(graft.plans.RangeBinJoinRule.BinWidthConf)
+    def ruled(df: DataFrame) = withRule(df, graft.plans.RangeBinJoinRule(16))
+    val a = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
+    val b = Seq((1L, 5L, 15L), (2L, 0L, 3L)).toDF("k", "lo", "hi")
+    // equi conjunct present: the join is already shuffle-able — no rewrite
+    val equi = a.join(b, a("k") === b("k") && a("v") >= b("lo") && a("v") <= b("hi"))
+      .select(a("k"))
+    assert(!ruled(equi).queryExecution.optimizedPlan.toString.contains("_graft_bin"))
+    assert(ruled(equi).orderBy("k").as[Long].collect().toSeq === Seq(1L))
+    // both bounds reference the same side: not a band join — no rewrite
+    val sameSide = a.join(b, b("lo") <= b("hi") && a("v") >= b("lo"))
+    assert(!ruled(sameSide).queryExecution.optimizedPlan.toString.contains("_graft_bin"))
   }
 }

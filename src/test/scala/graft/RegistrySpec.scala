@@ -24,7 +24,8 @@ class RegistrySpec extends SparkSpec {
   test("representative queries are run-to-run deterministic") {
     val sample = Seq(
       "c9_tpch_q1", "c18_knn_brute", "c17_minhash_lsh",
-      "c12_window_funcs", "c15_collect_list", "c19_winnow_fingerprint")
+      "c12_window_funcs", "c15_collect_list", "c19_winnow_fingerprint",
+      "c19_tfidf_topterms", "c19_zipf_slope")
     sample.foreach { name =>
       val a = Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq
       val b = Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq

@@ -41,7 +41,6 @@ class DedupSpec extends SparkSpec {
     // while recall = 1 on the testdata (see the Dedup.minhashLsh scaladoc);
     // this pins that premise so a testdata regeneration that breaks it
     // fails HERE with a clear message instead of reading as an engine bug.
-    import org.apache.spark.sql.functions.{col, lit}
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -264,7 +263,6 @@ class DedupSpec extends SparkSpec {
   test("md5 text-embed twin finds the planted pairs at score ~1, " +
       "is deterministic, and exact copies score exactly 1") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // registered query on real data: planted (id, id+1e6) pairs found
     val r1 = Dedup.textEmbedNearDupMd5.fn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

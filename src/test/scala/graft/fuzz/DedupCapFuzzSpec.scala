@@ -2,8 +2,6 @@ package graft.fuzz
 
 import java.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.dedup.Dedup
 

@@ -72,7 +72,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("PGM parser fails fast on malformed headers instead of zeroing") {
     def parse(bytes: Array[Byte]) = {
-      import spark.implicits._
       Multimodal // route through the same private parser via the public path
       val m = classOf[Multimodal.type].getDeclaredMethods
         .find(_.getName == "decodeOne").get

@@ -144,7 +144,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("asofJoin: equal-ts visibility, no-preceding nulls, atomic payload") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val left = Seq(
       (1L, ts("2024-01-01 10:00:00"), 100L), // right row at SAME ts → visible
@@ -336,7 +335,6 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("z-ordered layout skips second-dimension files a linear sort cannot") {
-    import spark.implicits._
     // 256x256 uniform grid; the linear layout sorts by x only, so every
     // file spans the full y domain and a y-range predicate can prune
     // nothing; the z-ordered layout bounds y per file

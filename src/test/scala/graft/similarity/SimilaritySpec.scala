@@ -27,7 +27,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("codegen CosineSim matches the independent HOF composition bit-for-bit") {
-    import org.apache.spark.sql.types.DoubleType
     val emb = graft.Tables.embeddings(spark, sf).limit(50)
     val pairs = emb.select(col("vec_id").as("ia"), col("embedding").as("ea"))
       .crossJoin(emb.select(col("vec_id").as("ib"), col("embedding").as("eb")))
@@ -240,7 +239,7 @@ class SimilaritySpec extends SparkSpec {
     out.foreach(r => assert(r.getDouble(2) >= 0.3))
     // symmetric sanity: if (q, n) qualifies with q,n < 20 then (n, q) does too
     val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSet
-    pairs.filter { case (q, n) => n < 20 }
+    pairs.filter { case (_, n) => n < 20 }
       .foreach { case (q, n) => assert(pairs.contains((n, q))) }
   }
 

@@ -258,7 +258,7 @@ class StreamingSpec extends SparkSpec {
           java.nio.file.Files.createTempDirectory("ckpt_totals_bounded").toString)
         .start()
       val users = 20
-      val sizes = (0 until 6).map { b =>
+      val sizes = (0 until 6).map { _ =>
         in.addData((0 until 200).map(i =>
           Ev((i % users).toLong, ts("2024-01-01 10:00:00"), "click")): _*)
         q.processAllAvailable()

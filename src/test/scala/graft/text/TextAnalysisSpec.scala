@@ -19,7 +19,6 @@ class TextAnalysisSpec extends SparkSpec {
   test("token counting handles leading/trailing/multiple whitespace") {
     val df = docs((1L, "  a  b \t c  "), (2L, "single"))
     df.createOrReplaceTempView("documents_tmp")
-    import spark.implicits._
     val counts = df.select(col("doc_id"),
       size(split(trim(col("text")), "\\s+")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
