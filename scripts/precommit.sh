@@ -61,6 +61,17 @@ if grep -rnE "(Enabled|BinWidth)Conf" src/; then
   echo "[precommit] FAIL: a conf-gated rewrite rule (pass the rule to GraftBridge.withRule)"
   exit 1
 fi
+# The artifact stores address their bucketed tables by path
+# (ArtifactStore.writeBucketed/readBucketed): nothing under src/main
+# registers, resolves or drops a session-catalog table. Imports are exempt
+# (BucketSpec lives in the catalyst.catalog package), and so is the JDBC
+# DDL of etl/Sinks.scala, which runs on the sink database, not in Spark.
+echo "[precommit] no session-catalog tables in the library..."
+if grep -rnE "saveAsTable\(|spark\.table\(|\.catalog\.|CREATE TABLE" src/main/scala/graft \
+    | grep -vE "^src/main/scala/graft/etl/Sinks\.scala:|^[^:]+:[0-9]+:import "; then
+  echo "[precommit] FAIL: a session-catalog table (write and read by path with ArtifactStore.writeBucketed/readBucketed)"
+  exit 1
+fi
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
 # The benchmark (perfbench/) is its own sbt build over the root's main
@@ -74,4 +85,4 @@ if [ -f "$repos" ]; then
   opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
 fi
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
-echo "[precommit] OK - listener, main, switch and session-state gates, main + test sources and the benchmark compile"
+echo "[precommit] OK - listener, main, switch, session-state and catalog gates, main + test sources and the benchmark compile"

@@ -36,11 +36,6 @@ import graft.obs.Timing
   * sf10) and `scripts/perftable.py` renders the split. Reps follow
   * SPARK_GRAFT_BENCH_REPS (default 3, median per phase; every rep re-runs
   * the build so the maintain phase always folds into a fresh artifact).
-  *
-  * A run keeps its artifact stores in a temp dir of its own, deleted at
-  * exit, unless the `graft.artifacts.root` system property names a root:
-  * two runs on one corpus then never read, or collect, each other's
-  * generations.
   */
 object MaintBench {
 
@@ -49,11 +44,6 @@ object MaintBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val recordFile = Timing.recordFile("MAINTPHASES.json")
-    if (!sys.props.contains("graft.artifacts.root")) {
-      val root = java.nio.file.Files.createTempDirectory("graft_maintbench")
-      sys.props("graft.artifacts.root") = root.toString
-      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile))
-    }
     val spark = LocalSession.builder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   *    Spark's only native plan is BroadcastNestedLoop (every row × every
   *    range). Binning converts it to an equi-join on overlapping bins plus
   *    a residual filter — shuffle-parallel and linear in matches.
-  *  - [[BucketedTables]] — co-located joins via bucketed tables: both sides
-  *    pre-hashed into the same bucket layout at write time join with ZERO
-  *    shuffle at read time (asserted in ScaleOpsSpec).
+  *  - co-located joins are [[graft.util.ArtifactStore.writeBucketed]] and
+  *    `readBucketed`: both sides pre-hashed into the same bucket layout at
+  *    write time join with ZERO shuffle at read time (asserted in
+  *    ScaleOpsSpec).
   *  - [[asofJoin]] — as-of (latest right row at-or-before each left row's
   *    timestamp) via union + one window pass: ONE shuffle on the key, no
   *    inequality join (the naive `ts <=` join is quadratic per key).
@@ -268,21 +269,6 @@ object ScaleOps {
         floor(greatest(col(lLo), col(rLo)) / binWidth).cast(LongType))
       .where(col(lLo) <= col(rHi) && col(rLo) <= col(lHi))
       .drop("_bin")
-  }
-
-  /** Bucketed co-located join support: write both sides bucketed by the join
-    * key into the warehouse, then joins on that key need no shuffle (the
-    * scan reports the hash partitioning). */
-  object BucketedTables {
-    def write(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-      df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-
-    def join(spark: SparkSession, leftTable: String, rightTable: String, key: String): DataFrame =
-      spark.table(leftTable).join(spark.table(rightTable), Seq(key))
   }
 
   /** Z-order (Morton) interleave of two dimension columns — the storage-

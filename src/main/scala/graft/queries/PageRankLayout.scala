@@ -87,16 +87,15 @@ import graft.util.CorpusFingerprint.Fp
   * (sf0.001–sf10, uniform and Zipf) lands bit-identical, and a flip
   * would surface as a loud oracle mismatch, not a silent wrong answer.
   *
-  * On-disk root lives under java.io.tmpdir (overridable via the
-  * `graft.artifacts.root` system property — specs exercise an explicit
-  * `file:` URI through it) keyed by the corpus path — a readable
-  * sanitized tag PLUS a hash of the raw path, so two distinct corpora
-  * whose paths collide after sanitization can never share a layout. On a
-  * real cluster this is a warehouse/object-store URI — the layout
-  * (bucketed parquet + a catalog declaration per generation) is identical
-  * either way. Table declarations are per-session (in-memory catalog):
-  * [[ensureLayout]] re-declares external bucketed tables over the stored
-  * files when a fresh JVM finds them undeclared.
+  * The root lives under [[graft.util.ArtifactStore.artifactsRoot]] keyed
+  * by the corpus path — a readable sanitized tag PLUS a hash of the raw
+  * path, so two distinct corpora whose paths collide after sanitization
+  * can never share a layout. On a real cluster this is a
+  * warehouse/object-store URI. The tables are plain bucketed Parquet
+  * directories, addressed by path: every reader opens them with
+  * [[graft.util.ArtifactStore.readBucketed]], repeating the bucket count
+  * meta records, so no session catalog holds any of them and a new
+  * session reads the surviving files as they are.
   */
 object PageRankLayout {
 
@@ -124,28 +123,26 @@ object PageRankLayout {
   def layoutRoot(dataDir: String): String =
     s"${ArtifactStore.artifactsRoot}/graft_pr_layout/${tag(dataDir)}"
 
-  private[graft] def edgesTable(dataDir: String, gen: Long): String =
-    s"graft_pr_edges_${tag(dataDir)}_v$gen"
-  private[graft] def nodesTable(dataDir: String, gen: Long): String =
-    s"graft_pr_nodes_${tag(dataDir)}_v$gen"
-  private[graft] def rankTable(dataDir: String, side: String): String =
-    s"graft_pr_rank_${side}_${tag(dataDir)}"
-
   /** The committed generation the layout's "pointer" (meta.last_gen)
     * currently resolves to. */
   private[graft] def currentGen(spark: SparkSession, dataDir: String): Long =
     readMeta(spark, dataDir).getAs[Long]("last_gen")
 
-  /** Current-generation stored edge frame — declares the table if this
-    * session's catalog hasn't seen it yet (fresh JVM over surviving files). */
+  /** Current-generation stored edge frame. */
   private[graft] def currentEdges(spark: SparkSession, dataDir: String): DataFrame = {
-    val root = layoutRoot(dataDir)
     val m = readMeta(spark, dataDir)
-    val g = m.getAs[Long]("last_gen")
-    declare(spark, edgesTable(dataDir, g), s"$root/v=$g/edges", edgesSchema,
-      "src", m.getAs[Int]("buckets"))
-    spark.table(edgesTable(dataDir, g))
+    genEdges(spark, dataDir, m.getAs[Long]("last_gen"), m.getAs[Int]("buckets"))
   }
+
+  /** Generation `gen`'s bucketed `edges` and `nodes` tables. */
+  private def genEdges(spark: SparkSession, dataDir: String, gen: Long,
+      buckets: Int): DataFrame =
+    ArtifactStore.readBucketed(spark, s"${layoutRoot(dataDir)}/v=$gen/edges",
+      edgesSchema, "src", buckets)
+  private def genNodes(spark: SparkSession, dataDir: String, gen: Long,
+      buckets: Int): DataFrame =
+    ArtifactStore.readBucketed(spark, s"${layoutRoot(dataDir)}/v=$gen/nodes",
+      nodesSchema, "id", buckets)
 
   /** Fingerprint of the lineitem columns the layout derives from. The
     * graph is a pure function of (l_orderkey, l_partkey), so content
@@ -161,50 +158,6 @@ object PageRankLayout {
     Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey")
   }
 
-  /** DROP TABLE IF EXISTS through the catalog API — the same effect as
-    * `spark.sql("DROP TABLE IF EXISTS …")` without paying a SQL
-    * parse/analyze round-trip per call (round 22: the maintenance legs
-    * issue several drops per commit, and at local[32] their driver-side
-    * latency is part of the per-job fixed cost the composition pays). */
-  private def dropTable(spark: SparkSession, table: String): Unit = {
-    spark.sessionState.catalog.dropTable(
-      org.apache.spark.sql.catalyst.TableIdentifier(table),
-      ignoreIfNotExists = true, purge = false)
-    ()
-  }
-
-  /** Drop generation `g`'s edge and node declarations. */
-  private def dropGenTables(spark: SparkSession, dataDir: String, g: Long): Unit = {
-    dropTable(spark, edgesTable(dataDir, g))
-    dropTable(spark, nodesTable(dataDir, g))
-  }
-
-  /** Drop any stale declaration, clear the location, write `df` bucketed
-    * (and per-file sorted) by `key` as an EXTERNAL parquet table at `loc`.
-    * Inputs already hash-partitioned on `key` with the same count land one
-    * file per bucket (bucketBy uses the same Murmur3 pmod as shuffle
-    * HashPartitioning), so the layout stays one-file-per-bucket. */
-  private def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
-      loc: String, key: String, buckets: Int): Unit = {
-    dropTable(spark, table)
-    ArtifactStore.delete(spark, loc)
-    df.write.format("parquet").option("path", loc)
-      .bucketBy(buckets, key).sortBy(key)
-      .mode("overwrite").saveAsTable(table)
-  }
-
-  /** Re-declare an external bucketed table over already-written files —
-    * the fresh-JVM path: files persist across sessions, the in-memory
-    * catalog does not. Bucket metadata lives in the declaration, so the
-    * DDL must repeat the layout the files were written with; the columns
-    * come from the table's declared `schema`. */
-  private def declare(spark: SparkSession, table: String, loc: String,
-      schema: StructType, key: String, buckets: Int): Unit =
-    if (!spark.catalog.tableExists(table))
-      spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING PARQUET " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-        s"LOCATION '$loc'")
-
   /** `v=G/edges`, written by [[normalized]] through [[commitGen]]. */
   private[graft] val edgesSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType),
@@ -212,6 +165,10 @@ object PageRankLayout {
 
   /** `v=G/nodes`, written by [[commitGen]]. */
   private[graft] val nodesSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** `rank_result`, the last rank vector [[fromLayoutRanks]] wrote. */
+  private[graft] val rankSchema = StructType(Seq(
+    StructField("id", LongType), StructField("r", DoubleType)))
 
   /** `v=G/orderkeys`: the [[orderLedger]] columns, then the `ob`
     * partition column. */
@@ -285,21 +242,22 @@ object PageRankLayout {
     *  - source bytes come from the plan's LEAF stats (file sizes for a
     *    parquet scan, literal bytes for a spec's local relation) —
     *    deterministic, no extra job;
-    *  - `spark.graft.layout.bucketTargetBytes` (default 2 MiB of source
-    *    bytes per bucket) is the scale knob: the default is sized so the
-    *    measured sf0.1→sf1→sf10 decades hold the rewrite unit near-flat;
-    *    a production deployment at 100 TB runs a realistic shuffle width
-    *    (thousands) and sets the target to GiBs, landing bucket files in
-    *    the 100 MB–1 GB range the guide recommends. The cap (×64) bounds
+    *  - `targetBytes` ([[BucketTargetBytes]], 2 MiB of source bytes per
+    *    bucket) is the scale knob: it is sized so the measured
+    *    sf0.1→sf1→sf10 decades hold the rewrite unit near-flat; a
+    *    production deployment at 100 TB runs a realistic shuffle width
+    *    (thousands) and a target in GiBs, landing bucket files in the
+    *    100 MB–1 GB range the guide recommends. The cap (×64) bounds
     *    file-count blowup if someone points a tiny-np session at a huge
     *    corpus. */
-  private[graft] def layoutBuckets(spark: SparkSession, li: DataFrame): Int = {
+  private val BucketTargetBytes = 2L * 1024 * 1024
+
+  private[graft] def layoutBuckets(spark: SparkSession, li: DataFrame,
+      targetBytes: Long): Int = {
     val np = spark.sessionState.conf.numShufflePartitions
-    val target = spark.conf.getOption("spark.graft.layout.bucketTargetBytes")
-      .map(_.toLong).getOrElse(2L * 1024 * 1024)
     val srcBytes = li.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    val mult = (BigDecimal(srcBytes) / BigDecimal(np.toLong * target))
+    val mult = (BigDecimal(srcBytes) / BigDecimal(np.toLong * targetBytes))
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     np * math.max(1L, math.min(64L, mult)).toInt
   }
@@ -312,30 +270,11 @@ object PageRankLayout {
   private def bucketOf(c: org.apache.spark.sql.Column, buckets: Int) =
     pmod(hash(c), lit(buckets))
 
-  // bucketed data files carry their bucket id as the trailing _NNNNN
-  // group of the file name (Spark's BucketingUtils contract)
-  private val BucketFileRe = """.*_(\d+)(?:\..*)?$""".r
-
-  /** (bucketId, absolutePath) of every bucketed data file in `dir`.
-    * Hidden/bookkeeping entries (`.…crc` checksum sidecars, `_SUCCESS`)
-    * are skipped explicitly — a local-FS `.part-….crc` would otherwise
-    * match [[BucketFileRe]] and be located/carried as if it were bucket
-    * data (round-20 ADVICE: the survivor-read path silently depended on
-    * parquet's hidden-file filtering). */
-  private def bucketFiles(spark: SparkSession, dir: String): Seq[(Int, String)] =
-    ArtifactStore.list(spark, dir).flatMap { st =>
-      st.getPath.getName match {
-        case n if n.startsWith(".") || n.startsWith("_") => None
-        case BucketFileRe(b) if st.isFile => Some(b.toInt -> st.getPath.toString)
-        case _ => None
-      }
-    }
-
   /** Carry every bucket file of `srcDir` whose bucket is NOT in `touched`
     * into `dstDir` — the copy-on-write half of a maintenance commit. */
   private def carryBuckets(spark: SparkSession, srcDir: String, dstDir: String,
       touched: Set[Int]): Unit =
-    bucketFiles(spark, srcDir).foreach { case (b, path) =>
+    ArtifactStore.bucketFiles(spark, srcDir).foreach { case (b, path) =>
       if (!touched.contains(b))
         ArtifactStore.carryFile(spark, path,
           s"$dstDir/${new org.apache.hadoop.fs.Path(path).getName}")
@@ -372,18 +311,16 @@ object PageRankLayout {
       cow: Option[Cow]): Unit = {
     val root = layoutRoot(dataDir)
     val genRoot = s"$root/v=$gen"
-    writeBucketed(spark, edgesN, edgesTable(dataDir, gen), s"$genRoot/edges",
-      "src", buckets)
-    // derive nodes from the JUST-WRITTEN edge table — at this point the
+    ArtifactStore.writeBucketed(edgesN, s"$genRoot/edges", "src", buckets)
+    // derive nodes from the JUST-WRITTEN edge files — at this point the
     // new gen dir holds ONLY the (touched, under CoW) buckets, so the
     // distinct is one bucketed partition-local scan of exactly the data
     // whose node set can have changed, and its output KEEPS the scan's
     // HashPartitioning(src→id, buckets): the bucketed node write needs
     // no repartition (hash(id) ≡ hash(src) row-wise)
-    val nodes = spark.table(edgesTable(dataDir, gen))
+    val nodes = genEdges(spark, dataDir, gen, buckets)
       .select(col("src").as("id")).distinct()
-    writeBucketed(spark, nodes,
-      nodesTable(dataDir, gen), s"$genRoot/nodes", "id", buckets)
+    ArtifactStore.writeBucketed(nodes, s"$genRoot/nodes", "id", buckets)
     // no repartition before the ledger write either: the build ledger
     // rides its groupBy's HashPartitioning(l_orderkey, np) — task i holds
     // exactly ob=i (bucketOf uses the same Murmur3 pmod) — and a
@@ -394,10 +331,6 @@ object PageRankLayout {
       val prevRoot = s"$root/v=${c.prevGen}"
       carryBuckets(spark, s"$prevRoot/edges", s"$genRoot/edges", c.touched)
       carryBuckets(spark, s"$prevRoot/nodes", s"$genRoot/nodes", c.touched)
-      // carried files change the tables' file sets after their first
-      // listing above — invalidate this session's cached relations
-      spark.catalog.refreshTable(edgesTable(dataDir, gen))
-      spark.catalog.refreshTable(nodesTable(dataDir, gen))
       ArtifactStore.list(spark, s"$prevRoot/orderkeys")
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("ob="))
         .filter(st => !c.touchedObs.contains(
@@ -405,8 +338,9 @@ object PageRankLayout {
         .foreach(st => ArtifactStore.carryTree(spark, st.getPath.toString,
           s"$genRoot/orderkeys/${st.getPath.getName}"))
     }
-    // metadata-only count over the complete (written + carried) node set
-    val nodeCount = spark.table(nodesTable(dataDir, gen)).count()
+    // metadata-only count over the complete (written + carried) node set,
+    // listed after the carries
+    val nodeCount = genNodes(spark, dataDir, gen, buckets).count()
     // commit point: meta (fingerprint + pointer) lands only after every
     // generation table did — a crash before this line leaves the previous
     // generation committed and the half-written one invisible
@@ -416,7 +350,7 @@ object PageRankLayout {
       buckets, fpNew.xorFp, fpNew.sumFp.toString, gen, LayoutVer))
     // carried files survive their origin generation's GC: hardlinks share
     // the inode, copies are independent
-    ArtifactStore.gcBehind(spark, root, "v", gen)(dropGenTables(spark, dataDir, _))
+    ArtifactStore.gcBehind(spark, root, "v", gen)
   }
 
   /** One corpus-sized build pass over a CALLER-SUPPLIED (l_orderkey,
@@ -428,14 +362,16 @@ object PageRankLayout {
     * frame's fingerprint becomes the stored staleness contract, so
     * building from a subset (the incremental queries' old-snapshot phase)
     * is self-consistent. */
-  def buildLayoutFrom(spark: SparkSession, dataDir: String, li: DataFrame): Unit = {
-    val root = layoutRoot(dataDir)
-    // a rebuild starts the generation clock over: drop every declared
-    // generation table and clear the root
-    ArtifactStore.generations(spark, root, "v")
-      .foreach { case (g, _) => dropGenTables(spark, dataDir, g) }
-    ArtifactStore.delete(spark, root)
-    val buckets = layoutBuckets(spark, li)
+  def buildLayoutFrom(spark: SparkSession, dataDir: String, li: DataFrame): Unit =
+    buildLayoutFrom(spark, dataDir, li, BucketTargetBytes)
+
+  /** [[buildLayoutFrom]] at a caller-chosen per-bucket source-byte target
+    * (see [[layoutBuckets]]). */
+  private[graft] def buildLayoutFrom(spark: SparkSession, dataDir: String,
+      li: DataFrame, targetBytes: Long): Unit = {
+    // a rebuild starts the generation clock over
+    ArtifactStore.delete(spark, layoutRoot(dataDir))
+    val buckets = layoutBuckets(spark, li, targetBytes)
     val raw = Relational.coPurchaseEdgesFrom(li)
     val edges = raw.repartition(buckets, col("src"))
       .groupBy("src", "dst")
@@ -631,7 +567,7 @@ object PageRankLayout {
     // the bucketed layout's file-name bucket ids — the untouched buckets
     // are never read, never shuffled, never rewritten
     val prevEdgesDir = s"$root/v=$last/edges"
-    val touchedFiles = bucketFiles(spark, prevEdgesDir)
+    val touchedFiles = ArtifactStore.bucketFiles(spark, prevEdgesDir)
       .collect { case (b, p) if touched(b) => p }
     val storedTouched =
       (if (touchedFiles.isEmpty)
@@ -765,9 +701,7 @@ object PageRankLayout {
     * the live corpus AND its on-disk format version is current; otherwise
     * rebuild. One meta read; only a missing meta or an older format means
     * "stale" (anything else — a permissions fault, a concurrent writer —
-    * propagates instead of silently triggering a corpus-sized rebuild).
-    * Always leaves this session's catalog holding the current
-    * generation's declarations. */
+    * propagates instead of silently triggering a corpus-sized rebuild). */
   def ensureLayout(spark: SparkSession, dataDir: String): Unit = {
     ensuredLayoutMeta(spark, dataDir)
     ()
@@ -776,27 +710,10 @@ object PageRankLayout {
   /** [[ensureLayout]], returning the meta row it validated or the one its
     * rebuild wrote. */
   private def ensuredLayoutMeta(spark: SparkSession, dataDir: String): Row = {
-    val root = layoutRoot(dataDir)
     val li = liProjection(spark, dataDir)
-    val m = ArtifactStore.ensuredMeta(spark, layoutMetaSchema, root, "layout_ver",
+    ArtifactStore.ensuredMeta(spark, layoutMetaSchema, layoutRoot(dataDir), "layout_ver",
       LayoutVer, "lineitem_count")(liFingerprint(li))(buildLayoutFrom(spark, dataDir, li))
-    // a rebuild declared its tables; a trusted store from an earlier
-    // session may not be declared in this one yet
-    val gen = m.getAs[Long]("last_gen")
-    val buckets = m.getAs[Int]("buckets")
-    declare(spark, edgesTable(dataDir, gen), s"$root/v=$gen/edges",
-      edgesSchema, "src", buckets)
-    declare(spark, nodesTable(dataDir, gen), s"$root/v=$gen/nodes",
-      nodesSchema, "id", buckets)
-    m
   }
-
-  /** Write one iteration's rank vector bucketed by id — the zero-Exchange
-    * join feed AND the iteration's materialization barrier. */
-  private[graft] def writeRank(spark: SparkSession, r: DataFrame,
-      dataDir: String, side: String, buckets: Int): Unit =
-    writeBucketed(spark, r, rankTable(dataDir, side),
-      s"${layoutRoot(dataDir)}/rank_$side", "id", buckets)
 
   /** PageRank answered FROM the persisted layout — the query-many hot
     * path. Corpus-sized inputs touched per iteration: the bucketed edge
@@ -805,19 +722,19 @@ object PageRankLayout {
     * joins are Exchange-free: edges and nodes scan with the layout's
     * HashPartitioning, and each iteration's rank vector is an eagerly
     * materialized PERSIST, whose InMemoryRelation preserves that same
-    * partitioning into the next step — round 21: the a/b scratch TABLES
-    * this path previously rotated through cost a DROP TABLE + FS delete
-    * + saveAsTable job per iteration (O(#nodes) disk writes plus catalog
-    * churn) for state no reader outside the loop ever resolves, and a
+    * partitioning into the next step — round 21: the a/b scratch tables
+    * this path previously rotated through cost a delete + bucketed write
+    * job per iteration (O(#nodes) disk writes) for state no reader
+    * outside the loop ever resolves, and a
     * localCheckpoint instead would report unknown partitioning under AQE
     * and re-key the rank frame every join (the persist-vs-checkpoint
     * tradeoff pageRankRanks documents). Lineage grows with `iters` under
     * pure persist, so a 100×-scale run with many iterations passes
     * `checkpointDir` and gets reliable per-iteration file checkpoints
     * ([[graft.util.IterativeCheckpointer]]) at the price of the rank-side
-    * re-key. Only the FINAL vector is persisted to the dedicated `result`
-    * table, so the returned frame survives this session's later cache
-    * rotation — it stays valid until the next layout operation on the
+    * re-key. Only the FINAL vector is written, bucketed, to the layout's
+    * `rank_result` directory, so the returned frame survives this
+    * session's later cache rotation — it stays valid until the next layout operation on the
     * SAME corpus completes (each caller here consumes it immediately; a
     * concurrent-reader deployment would write versioned result snapshots
     * instead). */
@@ -827,8 +744,9 @@ object PageRankLayout {
     val cnt = meta.getAs[Long]("node_count")
     val buckets = meta.getAs[Int]("buckets")
     val gen = meta.getAs[Long]("last_gen")
-    val edgesN = spark.table(edgesTable(dataDir, gen))
-    val nodes = spark.table(nodesTable(dataDir, gen))
+    // each read lists its files once; every iteration reuses that listing
+    val edgesN = genEdges(spark, dataDir, gen, buckets)
+    val nodes = genNodes(spark, dataDir, gen, buckets)
     val ckpt = checkpointDir.map(d => graft.util.IterativeCheckpointer(Some(d)))
     def materialize(df: DataFrame): DataFrame = ckpt match {
       case Some(c) => c(df)
@@ -851,9 +769,10 @@ object PageRankLayout {
       supers += r
       r = next
     }
-    writeRank(spark, r, dataDir, "result", buckets)
+    val result = s"${layoutRoot(dataDir)}/rank_result"
+    ArtifactStore.writeBucketed(r, result, "id", buckets)
     (supers :+ r).foreach(free)
-    spark.table(rankTable(dataDir, "result"))
+    ArtifactStore.readBucketed(spark, result, rankSchema, "id", buckets)
   }
 
   /** The stored (src, dst, wn) edge derivation over a caller-chosen

@@ -1736,7 +1736,7 @@ object Similarity {
       (if (kept.isEmpty) Seq(genDir) else dropped.map(_._2))
         .foreach(st => ArtifactStore.delete(spark, st.getPath.toString))
     }
-    ArtifactStore.gcBehind(spark, s"$root/cells", "v", gen)(_ => ())
+    ArtifactStore.gcBehind(spark, s"$root/cells", "v", gen)
   }
 
   /** Rewrite the live cell set into ONE fresh generation and let the

@@ -2,8 +2,10 @@ package graft.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -81,12 +83,23 @@ import graft.util.CorpusFingerprint.Fp
   */
 object ArtifactStore {
 
-  /** Root under which both artifact stores live. Defaults to the local
-    * tmpdir; the `graft.artifacts.root` system property points it at any
-    * Hadoop-FS URI (`file:///…`, `hdfs://…`, `s3a://…`) — specs exercise
-    * an explicit `file:` URI through it. */
+  /** Root under which both artifact stores live. The
+    * `graft.artifacts.root` system property points it at any Hadoop-FS URI
+    * (`file:///…`, `hdfs://…`, `s3a://…`; StoreProtocolSpec runs the stores
+    * under an explicit `file:` URI) and is read on every call, so a caller
+    * may re-point it between runs. Unset, every process gets a temp
+    * directory of its own ([[processRoot]]): two local mains on one corpus
+    * then never read, or collect, each other's generations. */
   def artifactsRoot: String =
-    sys.props.getOrElse("graft.artifacts.root", sys.props("java.io.tmpdir"))
+    sys.props.getOrElse("graft.artifacts.root", processRoot)
+
+  /** This process's default artifacts root: created on first use under
+    * `java.io.tmpdir`, deleted when the JVM exits. */
+  private lazy val processRoot: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_artifacts")
+    sys.addShutdownHook(FileUtil.fullyDelete(root.toFile))
+    root.toString
+  }
 
   def conf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
@@ -212,14 +225,10 @@ object ArtifactStore {
       .flatMap(st => st.getPath.getName.stripPrefix(s"$prefix=").toLongOption.map(_ -> st))
 
   /** GC depth 2 after committing `gen`: delete every `prefix=G` directory
-    * under `dir` with G ≤ gen − 2, calling `drop(G)` first (a store drops
-    * its catalog declarations there). */
-  def gcBehind(spark: SparkSession, dir: String, prefix: String, gen: Long)(
-      drop: Long => Unit): Unit =
-    generations(spark, dir, prefix).filter(_._1 <= gen - 2).foreach { case (g, st) =>
-      drop(g)
-      delete(spark, st.getPath.toString)
-    }
+    * under `dir` with G ≤ gen − 2. */
+  def gcBehind(spark: SparkSession, dir: String, prefix: String, gen: Long): Unit =
+    generations(spark, dir, prefix).filter(_._1 <= gen - 2)
+      .foreach { case (_, st) => delete(spark, st.getPath.toString) }
 
   /** Recursive delete; quiet on a missing path. */
   def delete(spark: SparkSession, path: String): Unit = {
@@ -260,6 +269,52 @@ object ArtifactStore {
         throw new java.io.IOException(s"carry failed: $src -> $dst")
     }
   }
+
+  /** Overwrite `loc` with `df` as Parquet files bucketed (and sorted
+    * within each file) by `key` into `buckets` buckets — Spark's bucketed
+    * table write, addressed by path instead of a catalog table. The bucket
+    * layout is not recorded with the files: a reader repeats `key` and
+    * `buckets` to [[readBucketed]]. An input already hash-partitioned on
+    * `key` into `buckets` partitions lands one file per bucket (the bucket
+    * id is the same Murmur3 pmod as shuffle HashPartitioning). */
+  def writeBucketed(df: DataFrame, loc: String, key: String, buckets: Int): Unit = {
+    DataSource(df.sparkSession, "parquet", bucketSpec = Some(bucketSpec(key, buckets)),
+      options = Map("path" -> loc))
+      .writeAndRead(SaveMode.Overwrite, df.queryExecution.analyzed, df.columns.toSeq)
+    ()
+  }
+
+  /** The files [[writeBucketed]] wrote at `loc` with the same `key` and
+    * `buckets`, read through their declared `schema` (no inference job).
+    * The scan reports HashPartitioning(key, buckets), so a join on `key`
+    * with another such frame needs no Exchange. The files are listed once,
+    * when the frame is made. */
+  def readBucketed(spark: SparkSession, loc: String, schema: StructType,
+      key: String, buckets: Int): DataFrame =
+    spark.baseRelationToDataFrame(DataSource(spark, "parquet", paths = Seq(loc),
+      userSpecifiedSchema = Some(schema), bucketSpec = Some(bucketSpec(key, buckets)))
+      .resolveRelation(checkFilesExist = false))
+
+  private def bucketSpec(key: String, buckets: Int): BucketSpec =
+    BucketSpec(buckets, Seq(key), Seq(key))
+
+  // bucketed data files carry their bucket id as the trailing _NNNNN
+  // group of the file name (Spark's BucketingUtils contract)
+  private val BucketFileRe = """.*_(\d+)(?:\..*)?$""".r
+
+  /** (bucketId, absolutePath) of every bucketed data file in `dir`.
+    * Hidden/bookkeeping entries (`.…crc` checksum sidecars, `_SUCCESS`)
+    * are skipped explicitly — a local-FS `.part-….crc` would otherwise
+    * match [[BucketFileRe]] and be located/carried as if it were bucket
+    * data. */
+  def bucketFiles(spark: SparkSession, dir: String): Seq[(Int, String)] =
+    list(spark, dir).flatMap { st =>
+      st.getPath.getName match {
+        case n if n.startsWith(".") || n.startsWith("_") => None
+        case BucketFileRe(b) if st.isFile => Some(b.toInt -> st.getPath.toString)
+        case _ => None
+      }
+    }
 
   /** Carry every data file under `srcDir` (recursively) into `dstDir`,
     * preserving relative paths — used for whole-partition carries (e.g.

@@ -1,33 +1,85 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Registry-wide guards: every registered query must execute at the
   * smallest scale, rows-only queries must return rows (the driver's weaker
-  * check is vacuous on empty output), and results must be stable across
-  * repeated execution (the oracle hash compare demands determinism). */
+  * check is vacuous on empty output), results must be stable across
+  * repeated execution (the oracle hash compare demands determinism), and
+  * queries leave no state behind.
+  *
+  * Every query is built and collected once, in [[pass]]; the first four
+  * tests read what that pass recorded. */
 class RegistrySpec extends SparkSpec {
 
-  test("every registered query executes at sf0.001") {
-    val failures = Registry.defs.flatMap { q =>
-      try { q.fn(spark, sf).collect(); None }
-      catch { case e: Throwable => Some(s"${q.name}: ${e.getMessage}") }
+  /** The session state a query could leave behind: conf, injected
+    * optimizer rules, function registry and non-temporary catalog tables. */
+  private final case class Snapshot(conf: Map[String, String],
+      rules: Seq[Any], functions: Set[String], tables: Set[String])
+
+  private def snapshot(s: SparkSession): Snapshot = Snapshot(
+    s.conf.getAll, s.experimental.extraOptimizations,
+    s.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet,
+    s.catalog.listTables().collect().filterNot(_.isTemporary).map(_.name).toSet)
+
+  private val deterministicSample = Seq(
+    "c9_tpch_q1", "c18_knn_brute", "c17_minhash_lsh",
+    "c12_window_funcs", "c15_collect_list", "c19_winnow_fingerprint",
+    "c19_tfidf_topterms", "c19_zipf_slope")
+
+  /** What one collect of every registered query recorded: the session state
+    * before and after, each failure, the rows-only queries that returned no
+    * rows, and the rows of [[deterministicSample]]. */
+  private final case class Pass(before: Snapshot, after: Snapshot,
+      failures: Seq[String], emptyRowsOnly: Seq[String],
+      sampleRows: Map[String, Seq[String]])
+
+  private lazy val pass: Pass = {
+    // Tables.events sets its footer conf on each load: load every table
+    // once first, so that conf belongs to the baseline
+    Tables.names.foreach { n =>
+      if (n == "events") Tables.events(spark, sf) else Tables.load(spark, sf, n)
     }
-    assert(failures.isEmpty, failures.mkString("\n"))
+    val before = snapshot(spark)
+    val outcomes = Registry.defs.map { q =>
+      q -> (try Right(q.fn(spark, sf).collect())
+        catch { case e: Throwable => Left(s"${q.name}: ${e.getMessage}") })
+    }
+    Pass(before, snapshot(spark),
+      outcomes.collect { case (_, Left(f)) => f },
+      outcomes.collect { case (q, Right(rows)) if q.oracle.isEmpty && rows.isEmpty => q.name },
+      outcomes.collect { case (q, Right(rows)) if deterministicSample.contains(q.name) =>
+        q.name -> rows.map(_.toString).toSeq }.toMap)
+  }
+
+  test("every registered query executes at sf0.001") {
+    assert(pass.failures.isEmpty, pass.failures.mkString("\n"))
   }
 
   test("rows-only (no-oracle) queries return non-empty output") {
-    val empty = Registry.defs.filter(_.oracle.isEmpty).flatMap { q =>
-      if (q.fn(spark, sf).isEmpty) Some(q.name) else None
-    }
-    assert(empty.isEmpty, s"empty rows-only output: $empty")
+    assert(pass.emptyRowsOnly.isEmpty, s"empty rows-only output: ${pass.emptyRowsOnly}")
+  }
+
+  test("every registered query runs without changing the session, and the as-of idiom stays unrewritten") {
+    val (before, after) = (pass.before, pass.after)
+    assert(after.conf === before.conf,
+      s"conf changed: ${after.conf.toSet.diff(before.conf.toSet)} " +
+        s"(was ${before.conf.toSet.diff(after.conf.toSet)})")
+    assert(after.rules === before.rules)
+    assert(after.functions === before.functions,
+      s"functions added: ${after.functions -- before.functions}, " +
+        s"removed: ${before.functions -- after.functions}")
+    // the stores address their files by path: no query registers a table
+    assert(after.tables.isEmpty, s"non-temporary catalog tables left behind: ${after.tables}")
+    // c8_asof_rewrite ran above with AsofJoinRule on its own plan; the same
+    // idiom planned without the rule keeps its join + window form
+    val idiom = graft.queries.Relational.c8AsofIdiom(spark, sf)
+    assert(!idiom.queryExecution.optimizedPlan.toString.contains("_graft_asof"))
   }
 
   test("representative queries are run-to-run deterministic") {
-    val sample = Seq(
-      "c9_tpch_q1", "c18_knn_brute", "c17_minhash_lsh",
-      "c12_window_funcs", "c15_collect_list", "c19_winnow_fingerprint",
-      "c19_tfidf_topterms", "c19_zipf_slope")
-    sample.foreach { name =>
-      val a = Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq
+    deterministicSample.foreach { name =>
+      val a = pass.sampleRows(name)
       val b = Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq
       assert(a === b, s"$name nondeterministic")
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.ArtifactStore
 
 /** The scale-technique joins produce identical results to the naive plans
   * and the plan shapes they promise. */
@@ -82,33 +83,24 @@ class ScaleOpsSpec extends SparkSpec {
     val o = graft.Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice")
     val l = graft.Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    // clean any leftover state from a previous aborted run
-    Seq("b_orders", "b_lineitem").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
-    }
-    ScaleOps.BucketedTables.write(o, "b_orders", "o_orderkey", 8)
-    ScaleOps.BucketedTables.write(l, "b_lineitem", "o_orderkey", 8)
+    val dir = java.nio.file.Files.createTempDirectory("bucketed_join").toString
+    ArtifactStore.writeBucketed(o, s"$dir/orders", "o_orderkey", 8)
+    ArtifactStore.writeBucketed(l, s"$dir/lineitem", "o_orderkey", 8)
     // disable auto-broadcast: at real scale neither side broadcasts — the
     // point of bucketing is the shuffle that ISN'T there in the SMJ plan
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = ScaleOps.BucketedTables.join(spark, "b_orders", "b_lineitem", "o_orderkey")
+      val joined = ArtifactStore.readBucketed(spark, s"$dir/orders", o.schema, "o_orderkey", 8)
+        .join(ArtifactStore.readBucketed(spark, s"$dir/lineitem", l.schema, "o_orderkey", 8),
+          Seq("o_orderkey"))
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected shuffle-free bucketed join:\n$plan")
       assert(joined.count() === l.count()) // every lineitem has its order
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 

@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.ArtifactStore
 
 /** The persisted co-partitioned PageRank layout: parity with the in-query
   * path, the zero-Exchange iteration join the layout exists to provide,
@@ -11,12 +13,21 @@ import graft.SparkSpec
   * reader-stability across a concurrent append. */
 class PageRankLayoutSpec extends SparkSpec {
 
-  private def currentEdgesName(dataDir: String): String =
-    PageRankLayout.edgesTable(dataDir, PageRankLayout.currentGen(spark, dataDir))
-  private def currentNodesName(dataDir: String): String =
-    PageRankLayout.nodesTable(dataDir, PageRankLayout.currentGen(spark, dataDir))
   private def genRoot(dataDir: String): String =
     s"${PageRankLayout.layoutRoot(dataDir)}/v=${PageRankLayout.currentGen(spark, dataDir)}"
+  private def buckets(dataDir: String): Int =
+    spark.read.parquet(s"${PageRankLayout.layoutRoot(dataDir)}/meta").head().getAs[Int]("buckets")
+  // the current generation's tables and the last rank result, read as a
+  // reader outside the store reads them: by path, with meta's bucket count
+  private def currentEdges(dataDir: String, s: SparkSession = spark): DataFrame =
+    ArtifactStore.readBucketed(s, s"${genRoot(dataDir)}/edges",
+      PageRankLayout.edgesSchema, "src", buckets(dataDir))
+  private def currentNodes(dataDir: String): DataFrame =
+    ArtifactStore.readBucketed(spark, s"${genRoot(dataDir)}/nodes",
+      PageRankLayout.nodesSchema, "id", buckets(dataDir))
+  private def rankResult(dataDir: String, s: SparkSession = spark): DataFrame =
+    ArtifactStore.readBucketed(s, s"${PageRankLayout.layoutRoot(dataDir)}/rank_result",
+      PageRankLayout.rankSchema, "id", buckets(dataDir))
 
   test("from-layout ranks match the in-query pageRankRanks bit-for-bit") {
     val inQuery = Relational.pageRankRanks(
@@ -30,13 +41,13 @@ class PageRankLayoutSpec extends SparkSpec {
   test("iteration join over the layout runs with ZERO Exchange; the full " +
     "step's only Exchange is the inherent contribution shuffle") {
     PageRankLayout.ensureLayout(spark, sf)
-    // the rank tables exist after any from-layout run; make it explicit
+    // rank_result exists after any from-layout run; make it explicit
     PageRankLayout.fromLayoutRanks(spark, sf, iters = 1)
-    val edges = spark.table(currentEdgesName(sf))
-    val nodes = spark.table(currentNodesName(sf))
-    // round 21: iterations checkpoint in memory; `result` is the only
-    // persisted rank table — same bucketed layout the loop's vectors ride
-    val rank = spark.table(PageRankLayout.rankTable(sf, "result"))
+    val edges = currentEdges(sf)
+    val nodes = currentNodes(sf)
+    // round 21: iterations checkpoint in memory; `rank_result` is the only
+    // written rank vector — same bucketed layout the loop's vectors ride
+    val rank = rankResult(sf)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -69,8 +80,8 @@ class PageRankLayoutSpec extends SparkSpec {
     "now iterates on instead of scratch tables) keeps the step's only " +
     "Exchange the inherent contribution shuffle") {
     PageRankLayout.ensureLayout(spark, sf)
-    val edges = spark.table(currentEdgesName(sf))
-    val nodes = spark.table(currentNodesName(sf))
+    val edges = currentEdges(sf)
+    val nodes = currentNodes(sf)
     val meta = spark.read.parquet(s"${PageRankLayout.layoutRoot(sf)}/meta").head()
     val cnt = meta.getAs[Long]("node_count")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -99,7 +110,7 @@ class PageRankLayoutSpec extends SparkSpec {
   test("append ≡ from-scratch rebuild; only the delta touches raw lineitem") {
     // expectation: the full-corpus build (stored src,dst,w,wn)
     PageRankLayout.buildLayout(spark, sf)
-    val full = spark.table(currentEdgesName(sf))
+    val full = currentEdges(sf)
       .orderBy("src", "dst").collect().map(_.toString).toSeq
     // old snapshot: built from a DELETABLE lineitem copy under its own root
     val tmp = java.nio.file.Files.createTempDirectory("graft_pr_append").toFile
@@ -118,7 +129,7 @@ class PageRankLayoutSpec extends SparkSpec {
       spark.sparkContext.parallelize(batchRows, 2), li.schema)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(oldPath))
     PageRankLayout.appendLayout(spark, key, batch)
-    val appended = spark.table(currentEdgesName(key))
+    val appended = currentEdges(key)
       .orderBy("src", "dst").collect().map(_.toString).toSeq
     assert(appended === full,
       "append-maintained layout diverged from the from-scratch rebuild")
@@ -167,7 +178,7 @@ class PageRankLayoutSpec extends SparkSpec {
       new java.io.File(PageRankLayout.layoutRoot(expKey)))
     PageRankLayout.buildLayoutFrom(spark, expKey,
       li.where(pmod(col("l_orderkey"), lit(8)) =!= 0))
-    val expected = spark.table(currentEdgesName(expKey))
+    val expected = currentEdges(expKey)
       .orderBy("src", "dst").collect().map(_.toString).toSeq
     // the delete batch held in memory, then the corpus copy DELETED: the
     // delete path must derive everything from the batch + stored aggregates
@@ -195,7 +206,7 @@ class PageRankLayoutSpec extends SparkSpec {
     assert(e2.getMessage.contains("order-complete"))
     // the real order-complete delete lands bit-identical to the rebuild
     PageRankLayout.deleteLayout(spark, key, batch)
-    val deleted = spark.table(currentEdgesName(key))
+    val deleted = currentEdges(key)
       .orderBy("src", "dst").collect().map(_.toString).toSeq
     assert(deleted === expected,
       "delete-maintained layout diverged from the reduced-corpus rebuild")
@@ -232,8 +243,7 @@ class PageRankLayoutSpec extends SparkSpec {
     }
     val g0 = gen
     val build = dataFiles("edges", g0)
-    val buildRows = spark.table(
-      PageRankLayout.edgesTable(key, g0)).orderBy("src", "dst")
+    val buildRows = currentEdges(key).orderBy("src", "dst")
       .collect().map(_.toString).toSeq
     // ONE new order over 3 parts: the delta touches at most 3 src buckets
     val batch = Seq((999999001L, 1L), (999999001L, 2L), (999999001L, 3L))
@@ -277,8 +287,7 @@ class PageRankLayoutSpec extends SparkSpec {
       assert(java.nio.file.Files.isSameFile(appended(name), deleted(name)),
         s"carried edge bucket file $name was rewritten by the delete")
     }
-    val roundTrip = spark.table(
-      PageRankLayout.edgesTable(key, g2)).orderBy("src", "dst")
+    val roundTrip = currentEdges(key).orderBy("src", "dst")
       .collect().map(_.toString).toSeq
     assert(roundTrip === buildRows,
       "append-then-delete did not round-trip to the original layout")
@@ -303,10 +312,9 @@ class PageRankLayoutSpec extends SparkSpec {
     val srcBytes = src.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     val target = math.max(1L, (srcBytes / (np * 2)).toLong)
-    spark.conf.set("spark.graft.layout.bucketTargetBytes", target.toString)
     try {
-      assert(PageRankLayout.layoutBuckets(spark, src) === 2 * np)
-      PageRankLayout.buildLayoutFrom(spark, key, src)
+      assert(PageRankLayout.layoutBuckets(spark, src, target) === 2 * np)
+      PageRankLayout.buildLayoutFrom(spark, key, src, target)
       val root = PageRankLayout.layoutRoot(key)
       val meta = spark.read.parquet(s"$root/meta").head()
       val buckets = meta.getAs[Int]("buckets")
@@ -336,7 +344,7 @@ class PageRankLayoutSpec extends SparkSpec {
           s"${d.getName} holds ${files.length} files — ledger write no longer " +
             "lands one file per ob at a scaled bucket count")
       }
-      val buildRows = spark.table(PageRankLayout.edgesTable(key, gen))
+      val buildRows = currentEdges(key)
         .orderBy("src", "dst").collect().map(_.toString).toSeq
       // maintenance at the scaled count: a 3-src order touches ≤ 3 of the
       // 2·np buckets, everything else carries (same inode), and the
@@ -356,7 +364,7 @@ class PageRankLayoutSpec extends SparkSpec {
           s"carried bucket file $name was rewritten at the scaled count")
       }
       PageRankLayout.deleteLayout(spark, key, batch)
-      val roundTrip = spark.table(PageRankLayout.edgesTable(key, gen))
+      val roundTrip = currentEdges(key)
         .orderBy("src", "dst").collect().map(_.toString).toSeq
       assert(roundTrip === buildRows,
         "append-then-delete did not round-trip at the scaled bucket count")
@@ -369,10 +377,7 @@ class PageRankLayoutSpec extends SparkSpec {
         .collect().map(r => r.get(0) -> r.getDouble(1)).toMap
       assert(fromLayout === inQuery,
         "from-layout ranks diverged at a scaled bucket count")
-    } finally {
-      spark.conf.unset("spark.graft.layout.bucketTargetBytes")
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
   test("a frame resolved before an append keeps scanning after it " +
@@ -385,7 +390,7 @@ class PageRankLayoutSpec extends SparkSpec {
     PageRankLayout.buildLayoutFrom(spark, key,
       li.where(pmod(col("l_orderkey"), lit(4)) === 1))
     // resolve the generation-0 frame NOW — a concurrent reader mid-query
-    val resolved = spark.table(currentEdgesName(key))
+    val resolved = currentEdges(key)
     val before = resolved.count()
     assert(before > 0)
     // two appends land generations 1 and 2; gen 0 is GC'd at gen 2
@@ -436,7 +441,7 @@ class PageRankLayoutSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("fresh-catalog redeclaration over surviving files: no rebuild, zero-Exchange " +
+  test("a new session reads the surviving files: no rebuild, zero-Exchange " +
     "iteration join, bit-identical ranks") {
     PageRankLayout.ensureLayout(spark, sf)
     val before = PageRankLayout.fromLayoutRanks(spark, sf, iters = 3)
@@ -444,28 +449,24 @@ class PageRankLayoutSpec extends SparkSpec {
     def edgeListing: Set[String] =
       new java.io.File(s"${genRoot(sf)}/edges").listFiles().map(_.getName).toSet
     val files = edgeListing
-    // the fresh-JVM state: stored files survive, catalog declarations don't
-    spark.sql(s"DROP TABLE IF EXISTS ${currentEdgesName(sf)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${currentNodesName(sf)}")
-    PageRankLayout.ensureLayout(spark, sf)
+    // a new session shares the stored files and nothing else: its own
+    // conf, no relation resolved by the session that wrote them
+    val fresh = spark.newSession()
+    PageRankLayout.ensureLayout(fresh, sf)
     assert(edgeListing === files,
-      "redeclaration path rebuilt the layout instead of reusing the files")
-    // a wrong re-declared bucket count would silently reintroduce the
-    // Exchange — pin the join shape over the REDECLARED tables
-    val edges = spark.table(currentEdgesName(sf))
-    val rank = spark.table(PageRankLayout.rankTable(sf, "result"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = edges.join(rank.hint("shuffle_hash"), col("id") === col("src"))
-      j.collect()
-      val jPlan = j.queryExecution.executedPlan.toString
-      assert(!jPlan.contains("Exchange"),
-        s"redeclared tables lost the Exchange-free bucketed join:\n$jPlan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    val after = PageRankLayout.fromLayoutRanks(spark, sf, iters = 3)
+      "a new session rebuilt the layout instead of reading the files")
+    val after = PageRankLayout.fromLayoutRanks(fresh, sf, iters = 3)
       .collect().map(r => r.get(0) -> r.getDouble(1)).toMap
-    assert(after === before, "redeclared layout changed the ranks")
+    assert(after === before, "a new session's ranks differ over the same files")
+    // a wrong bucket count on read would silently reintroduce the
+    // Exchange — pin the join shape over the new session's reads
+    fresh.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val j = currentEdges(sf, fresh)
+      .join(rankResult(sf, fresh).hint("shuffle_hash"), col("id") === col("src"))
+    j.collect()
+    val jPlan = j.queryExecution.executedPlan.toString
+    assert(!jPlan.contains("Exchange"),
+      s"a new session's reads lost the Exchange-free bucketed join:\n$jPlan")
   }
 
   test("stale layout (corpus fingerprint mismatch) is rebuilt, fresh one reused") {

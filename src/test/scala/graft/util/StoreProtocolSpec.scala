@@ -11,7 +11,8 @@ import graft.similarity.Similarity
   * ([[ArtifactStore]]), checked on each store through its public streaming
   * entries: a CDC micro-batch with an op other than I or D is refused
   * before anything is written, and a streaming entry on a root with no
-  * committed meta fails loud instead of guessing. */
+  * committed meta fails loud instead of guessing. Both stores also run
+  * under a scheme-qualified root. */
 class StoreProtocolSpec extends SparkSpec {
 
   /** One store as the protocol sees it: the corpus table it derives from,
@@ -94,5 +95,46 @@ class StoreProtocolSpec extends SparkSpec {
         assert(new java.io.File(root).list().isEmpty, "a refused entry wrote into the root")
       }
     }
+  }
+
+  test("both stores build, append and read under an explicit file: URI root, " +
+    "with the same results as under the default root") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_protocol").toFile.getAbsolutePath
+    Seq("lineitem", "embeddings").foreach { t =>
+      Tables.load(spark, sf, t).write.parquet(s"$dir/$t.parquet")
+    }
+    /** build → append → read on each store; the read's rows, sorted */
+    def run(): (Seq[String], Seq[String]) = {
+      val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
+      PageRankLayout.buildLayoutFrom(spark, dir, li.where(pmod(col("l_orderkey"), lit(8)) =!= 0))
+      PageRankLayout.appendLayout(spark, dir, li.where(pmod(col("l_orderkey"), lit(8)) === 0))
+      val ranks = PageRankLayout.fromLayoutRanks(spark, dir, iters = 3).collect()
+      val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      Similarity.buildAnnIndexFrom(spark, dir, emb.where(pmod(col("vec_id"), lit(4)) =!= 3))
+      Similarity.appendAnnIndex(spark, dir, emb.where(pmod(col("vec_id"), lit(4)) === 3))
+      val knn = Similarity.ivfPqFromIndexRows(spark, dir, nQueries = 5, probes = 2, shortlist = 20)
+        .collect()
+      (ranks.map(_.toString).sorted.toSeq, knn.map(_.toString).sorted.toSeq)
+    }
+    val uriRoot = java.nio.file.Files.createTempDirectory("graft_uri_root").toFile
+    try {
+      val atDefault = run()
+      val prev = sys.props.get("graft.artifacts.root")
+      sys.props("graft.artifacts.root") = s"file://${uriRoot.getAbsolutePath}"
+      val atUri =
+        try {
+          assert(PageRankLayout.layoutRoot(dir).startsWith("file:///"))
+          run()
+        } finally prev match {
+          case Some(p) => sys.props("graft.artifacts.root") = p
+          case None => sys.props -= "graft.artifacts.root"
+        }
+      assert(Seq("graft_pr_layout", "graft_ann_index")
+        .forall(d => new java.io.File(uriRoot, d).isDirectory), "a store did not land under the file: root")
+      assert(atDefault._1.nonEmpty && atDefault._2.nonEmpty)
+      assert(atUri === atDefault, "the stores answer differently under a file: URI root")
+    } finally Seq(new java.io.File(dir), uriRoot, new java.io.File(PageRankLayout.layoutRoot(dir)),
+      new java.io.File(Similarity.annIndexRoot(dir)))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 }
