@@ -72,6 +72,19 @@ if grep -rnE "saveAsTable\(|spark\.table\(|\.catalog\.|CREATE TABLE" src/main/sc
   echo "[precommit] FAIL: a session-catalog table (write and read by path with ArtifactStore.writeBucketed/readBucketed)"
   exit 1
 fi
+# One integer IVF-PQ pipeline: the in-query twin and the persisted ANN
+# index both encode through Similarity.encode and answer through
+# Similarity.search, so the similarity module calls the PQ encoder and the
+# shortlist rerank exactly once each. A second call is a second copy of
+# the pipeline.
+echo "[precommit] one IVF-PQ encode and one search in graft/similarity..."
+for fn in intPqCodes intShortlistRerank; do
+  calls=$(grep -rhoE "(def +)?$fn\(" src/main/scala/graft/similarity | grep -cv "^def" || true)
+  if [ "$calls" -ne 1 ]; then
+    echo "[precommit] FAIL: $calls calls of $fn( under src/main/scala/graft/similarity, expected 1 (encode with Similarity.encode, query with Similarity.search)"
+    exit 1
+  fi
+done
 echo "[precommit] sbt Test/compile (compile gate for snapshot commits)..."
 sbt -batch Test/compile
 # The benchmark (perfbench/) is its own sbt build over the root's main
@@ -85,4 +98,4 @@ if [ -f "$repos" ]; then
   opts="$opts -Dsbt.override.build.repos=true -Dsbt.repository.config=$repos"
 fi
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$opts" sbt --batch -Dsbt.log.noformat=true compile)
-echo "[precommit] OK - listener, main, switch, session-state and catalog gates, main + test sources and the benchmark compile"
+echo "[precommit] OK - listener, main, switch, session-state, catalog and IVF-PQ gates, main + test sources and the benchmark compile"

@@ -55,6 +55,19 @@ object SkewBench {
   /** One variant's median wall and the runtime shape of its timed reps. */
   private final case class Measured(wallS: Double, p50Ms: Long, maxMs: Long, maxReduceMs: Long)
 
+  /** Fact-side multiplier (deterministic union of identical copies): at
+    * sf1 the hot key is ~12 MB ≈ 250 ms of reducer work, inside per-task
+    * noise — the first run of this bench proved wall AND max-task blind to
+    * the skew at mult=1 (both corpora identical, and salted's max task was
+    * its own dim-replication task). Eight copies put ~3.8 M rows on the
+    * hot reducer so the quantity under test dominates its stage, which is
+    * exactly the 100 TB shape: hot-key volume >> per-task constants. */
+  private val Mult = 8
+
+  /** Salt count of the salted variants (see the scaladoc above for why it
+    * must be several × the shuffle partition count). */
+  private val Salt = 64
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1skew"))
@@ -64,18 +77,9 @@ object SkewBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // fact-side multiplier (deterministic union of identical copies):
-    // at sf1 the hot key is ~12 MB ≈ 250 ms of reducer work, inside
-    // per-task noise — the first run of this bench proved wall AND
-    // max-task blind to the skew at mult=1 (both corpora identical, and
-    // salted's max task was its own dim-replication task). mult=8 puts
-    // ~3.8 M rows on the hot reducer so the quantity under test
-    // dominates its stage, which is exactly the 100 TB shape: hot-key
-    // volume >> per-task constants.
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SKEW_MULT", "8").toInt
     def orders0 = Tables.orders(spark, sfDir)
       .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-    def orders = (1 until mult).foldLeft(orders0)((d, _) => d.unionAll(orders0))
+    def orders = (1 until Mult).foldLeft(orders0)((d, _) => d.unionAll(orders0))
     def customer = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
     def aggAndSink(df: DataFrame): Unit =
@@ -93,14 +97,13 @@ object SkewBench {
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
 
-    val saltN = sys.env.getOrElse("SPARK_GRAFT_SKEW_SALT", "64").toInt
     def plainJoin = orders.join(customer, Seq("custkey"))
     def saltedJoin = graft.operators.ScaleOps.saltedJoin(
-      orders, customer, "custkey", salt = saltN)
+      orders, customer, "custkey", salt = Salt)
     // the production form: only DETECTED hot keys are salted (sample says
     // which), so salt can be large without replicating the whole dim
     def hotSaltedJoin = graft.operators.ScaleOps.hotSaltedJoin(
-      orders, customer, "custkey", salt = saltN,
+      orders, customer, "custkey", salt = Salt,
       sampleFraction = 0.01, minSampleCount = 1000L)
 
     // equal-work guard
@@ -133,7 +136,7 @@ object SkewBench {
         "sf" -> Timing.str(sfDir),
         count._1 -> count._2.toString,
         "reps" -> reps.toString,
-        "mult" -> mult.toString) ++
+        "mult" -> Mult.toString) ++
         variants.map { case (v, m) => s"${v}_s" -> Timing.num(m.wallS) } ++ Seq(
         "task_ms_p50" -> shape(_.p50Ms),
         "task_ms_max" -> shape(_.maxMs),

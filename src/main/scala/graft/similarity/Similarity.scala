@@ -764,19 +764,6 @@ object Similarity {
     cents.zipWithIndex.map { case (ct, k) => (k, ct) }.toSeq
   }
 
-  /** Quantized integer dims view shared by the integer-exact twins:
-    * (vec_id, d, q) with q = floor(v·1000) + 1024 (components sit in ±0.6,
-    * so the shift keeps every value positive and truncating vs flooring
-    * division agree between engines). Spread before the explode so the
-    * downstream joins run partition-parallel off a single-row-group scan,
-    * and materialized ONCE (localCheckpoint) for its multiple consumers. */
-  private def intDims(emb: DataFrame): DataFrame =
-    emb.spreadByKey(col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .select(col("vec_id"), col("d").cast(IntegerType).as("d"),
-        (floor(col("v").cast(DoubleType) * 1000).cast(LongType) + 1024).as("q"))
-      .localCheckpoint(false)
-
   /** The ONE bounded training collect of the integer twins (the quantized
     * mirror of [[collectSample]]'s contract): the maxTrain lowest vec_ids
     * of the vec_id % sampleMod == 0 subset, ≤ maxTrain × dim longs ≈ 2 MB
@@ -804,30 +791,6 @@ object Similarity {
       "centroid cell ids must be contiguous from 0")
     sorted.map(_._2.toSeq)
   }
-
-  /** Row-major codeword vectors (entry s·k + j) from the flat
-    * (s, j, i, val) book rows — the [[graft.functions.IntPqCodes]] shape. */
-  private def bookVectors(rows: Seq[(Int, Int, Int, Long)], m: Int,
-      k: Int): Seq[Seq[Long]] = {
-    val byCode = rows.groupBy(r => (r._1, r._2))
-    (0 until m).flatMap { s =>
-      (0 until k).map(j => byCode((s, j)).sortBy(_._3).map(_._4).toSeq)
-    }
-  }
-
-  /** Stored-model readback into the fused-expression shapes — bounded
-    * collects (C×dims and m×k×dsub rows, the same model the round-20 path
-    * broadcast per job). */
-  private def centVectorsFromDf(df: DataFrame): Seq[Seq[Long]] =
-    centVectors(df.collect()
-      .groupBy(_.getAs[Int]("c"))
-      .map { case (c, rows) =>
-        (c, rows.sortBy(_.getAs[Int]("d")).map(_.getAs[Long]("val")))
-      }.toSeq)
-
-  private def bookVectorsFromDf(df: DataFrame, m: Int, k: Int): Seq[Seq[Long]] =
-    bookVectors(df.collect().map(r => (r.getAs[Int]("s"), r.getAs[Int]("j"),
-      r.getAs[Int]("i"), r.getAs[Long]("val"))).toIndexedSeq, m, k)
 
   /** Driver-local L2 normalization (mirror of the [[graft.functions.L2Normalize]]
     * expression) for preparing PQ training sub-vectors. */
@@ -993,78 +956,124 @@ object Similarity {
     }
   }
 
-  /** The exact-integer IVF-PQ pipeline of [[annIvfPqMd5]]: coarse-quantize
-    * the corpus ([[ivfMd5Train]] — the IVF twin's trainer), PQ-encode it
-    * (integer-L2 argmin codeword per 8-dim subspace against the
-    * [[pqMd5Train]] codebooks), build per-query LUTs (all k integer-L2
-    * code distances per subspace), score the probed lists' candidates by
-    * ADC (m LUT lookups summed — a BIGINT, so the approximate score itself
-    * is hash-checkable), keep a bounded ADC shortlist per query, and
-    * rerank the shortlist exactly on refetched raw embeddings (1e-6-rounded
-    * fused cosine — the same exactness contract as [[annIvfPq]]).
+  /** The integer IVF-PQ model: the cell-ordered coarse centroid vectors
+    * (the [[graft.functions.IntNearestCells]] shape), the (s, j, i, val)
+    * codebook rows the query LUT joins, and the PQ shape `m` × `k`. It is
+    * the one model of the one pipeline — [[train]] makes it in memory for
+    * the in-query twin ([[ivfPqMd5Rows]]); the persisted index writes it as
+    * its `cents`/`books` tables ([[buildAnnIndexFrom]]) and reads it back
+    * through [[storedModel]]. Every encode is [[encode]], every query is
+    * [[search]]. */
+  private final case class IntPqModel(cents: Seq[Seq[Long]], books: DataFrame,
+      m: Int, k: Int) {
+    /** Row-major codeword vectors (entry s·k + j) — the
+      * [[graft.functions.IntPqCodes]] shape. A bounded collect of the
+      * m·k·dsub book rows, made only when something is encoded. */
+    lazy val codewords: Seq[Seq[Long]] = {
+      val byCode = books.collect().groupBy(r => (r.getAs[Int]("s"), r.getAs[Int]("j")))
+      (0 until m).flatMap { s =>
+        (0 until k).map(j =>
+          byCode((s, j)).sortBy(_.getAs[Int]("i")).map(_.getAs[Long]("val")).toSeq)
+      }
+    }
+  }
+
+  /** Train the model driver-locally over ONE bounded quantized sample
+    * ([[intSample]]): the coarse quantizer ([[ivfMd5Train]]) and the
+    * per-subspace codebooks ([[pqMd5Train]]) — 16×64 + 8×16×8 longs
+    * (~16 KB) at the index parameters. */
+  private def train(spark: SparkSession, sample: Array[(Long, Array[Long])],
+      c: Int, iters: Int, m: Int, k: Int): IntPqModel = {
+    import spark.implicits._
+    IntPqModel(centVectors(ivfMd5Train(sample, c, iters)),
+      pqMd5Train(sample, m, k, iters).toDF(booksSchema.fieldNames.toIndexedSeq: _*), m, k)
+  }
+
+  /** The one corpus-sized encode pass: per-row coarse cell and PQ codes as
+    * fused integer expressions ([[graft.functions.IntNearestCells]] /
+    * [[graft.functions.IntPqCodes]], bit-identical to the oracle's
+    * relational dims ⋈ model ⋈ argmin) — (vec_id, s, code, c_id), m rows per
+    * vector, with no dim explode and no join. */
+  private def encode(emb: DataFrame, model: IntPqModel): DataFrame =
+    emb.select(col("vec_id"),
+        element_at(graft.functions.VectorExprs.intNearestCells(
+          col("embedding"), model.cents, 1), 1).as("c_id"),
+        posexplode(graft.functions.VectorExprs.intPqCodes(
+          col("embedding"), model.codewords, model.m, model.k)).as(Seq("s", "code")))
+      .select(col("vec_id"), col("s"), col("code"), col("c_id"))
+
+  /** The one IVF-PQ search: answer the `nQueries` lowest vec_ids of `emb`
+    * over encoded `codes` (the [[encode]] columns; the stored index adds
+    * its `gen` partition column). Corpus-sized inputs touched: the probed
+    * cells' code rows and the rerank's raw-vector refetch; everything else
+    * is query-sized.
     *
-    * Plan economics mirror the float scale path at every stage: both
-    * models train driver-locally over ONE bounded sample collect and ride
-    * broadcast; the corpus-sized work is exactly two map-side joins +
-    * partial-aggregated groupBys (coarse assignment + PQ encode); the ADC
-    * stage's only corpus-sized input is the (vec_id, s, code) table —
-    * candidates and LUTs are broadcast; and the rerank refetches raw
-    * vectors for shortlist rows only, never shuffling the corpus. The
-    * twin's ADC metric is integer L2 (the Jégou et al. 2011 formulation);
-    * the float path's ADC is a dot-product over normalized sub-vectors —
-    * the anchor hash-checks the derivation machinery (codebook training,
-    * encoding, LUT build, ADC accumulation, shortlist cut, rerank), not
-    * the metric choice, which SimilaritySpec covers on the float path. */
-  def ivfPqMd5Rows(emb: DataFrame, c: Int, iters: Int, sampleMod: Int,
-      nQueries: Int, probes: Int, m: Int, k: Int, shortlist: Int,
-      maxTrain: Int = 4096): DataFrame = {
+    *  - The query dims are quantized once, off a vec_id-pushdown scan.
+    *  - The probed (q_id, c_id) pairs are a bounded driver collect
+    *    (≤ nQueries·probes rows, the fused per-row assignment against the
+    *    model's centroids); their cells are the `c_id IN` prune, which a
+    *    partitioned code table applies at the directory level.
+    *  - Candidates are the probed cells' members, read off the `s = 0`
+    *    code rows (one row per vector — a pushed filter, no distinct).
+    *  - Query LUTs hold all k integer-L2 code distances per (query,
+    *    subspace) — nQueries·m·k rows; the ADC sums m LUT lookups per
+    *    candidate (a BIGINT, so the approximate score is hash-checkable),
+    *    with candidates and LUTs broadcast onto the pruned codes.
+    *  - [[intShortlistRerank]] cuts the ADC shortlist and reranks it on
+    *    the exact 1e-6-rounded cosine. */
+  private def search(emb: DataFrame, codes: DataFrame, model: IntPqModel,
+      nQueries: Int, probes: Int, shortlist: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val sample = intSample(emb, sampleMod, maxTrain)
-    val dsub = sample(0)._2.length / m
-    // coarse quantizer: the IVF twin's bounded driver-local trainer. The
-    // CORPUS-sized passes (assignment + PQ encode) run as fused per-row
-    // expressions (round 21 — bit-identical integer arithmetic, see
-    // [[graft.functions.IntNearestCells]]); only the nQueries-sized LUT
-    // build keeps the relational (dims ⋈ books) form.
-    val coarse = ivfMd5Train(sample, c, iters)
-    val cents = centVectors(coarse)
-    val books = pqMd5Train(sample, m, k, iters)
-    val spread = emb.spreadByKey(col("vec_id"))
-    val finalAssign = spread.select(col("vec_id"),
-      element_at(graft.functions.VectorExprs.intNearestCells(
-        col("embedding"), cents, 1), 1).as("c"))
-    val probed = emb.where(col("vec_id") < nQueries)
+    val dsub = model.cents.head.length / model.m
+    val qdims = emb.where(col("vec_id") < nQueries)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
+      .select(col("vec_id"), col("d").cast(IntegerType).as("d"),
+        (floor(col("v").cast(DoubleType) * 1000).cast(LongType) + 1024).as("q"))
+    val probedPairs = emb.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
         explode(graft.functions.VectorExprs.intNearestCells(
-          col("embedding"), cents, probes)).as("c_id"))
-    val booksDf = broadcast(books.toDF("s", "j", "i", "val"))
-    val codes = spread.select(col("vec_id"),
-      posexplode(graft.functions.VectorExprs.intPqCodes(
-        col("embedding"), bookVectors(books, m, k), m, k)).as(Seq("s", "code")))
-    // query LUTs: ALL k distances per (query, subspace) — nQueries·m·k rows
-    val lut = intCodeDists(
-      intPdims(intDims(emb.where(col("vec_id") < nQueries)), dsub), booksDf)
-      .select(col("vec_id").as("q_id"), col("s"),
-        col("j").as("code"), col("dist"))
-    // candidates: probed lists' members — a query scores |corpus|·probes/c
-    // entries, never the corpus (the IVF economics)
-    val cand = finalAssign
-      .select(col("c").as("c_id"), col("vec_id").as("neighbor_id"))
-      .join(broadcast(probed), Seq("c_id"))
+          col("embedding"), model.cents, probes)).as("c_id"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val cells = probedPairs.map(_._2).distinct.sorted
+    val pruned = codes.where(col("c_id").isin(cells: _*))
+    val probedDf = broadcast(probedPairs.toDF("q_id", "c_id"))
+    val cand = pruned.where(col("s") === 0)
+      .select(col("c_id"), col("vec_id").as("neighbor_id"))
+      .join(probedDf, Seq("c_id"))
       .where(col("neighbor_id") =!= col("q_id"))
       .select(col("q_id"), col("neighbor_id"))
-    // ADC: m LUT lookups summed per candidate; the codes table is the only
-    // corpus-sized input — candidate pairs and LUTs ride broadcast
-    val adc = codes.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
+    val lut = intCodeDists(intPdims(qdims, dsub), broadcast(model.books))
+      .select(col("vec_id").as("q_id"), col("s"),
+        col("j").as("code"), col("dist"))
+    val adc = pruned.select(col("vec_id"), col("s"), col("code"))
+      .join(broadcast(cand), col("vec_id") === col("neighbor_id"))
       .join(broadcast(lut), Seq("q_id", "s", "code"))
       .groupBy(col("q_id"), col("neighbor_id"))
       .agg(sum(col("dist")).as("adc"))
     intShortlistRerank(emb, adc, nQueries, shortlist)
   }
 
-  /** Subspace view of the quantized dims (s = subspace, i = dim within it)
-    * shared by the IVF-PQ twin and the persisted-index build/query paths. */
+  /** The exact-integer IVF-PQ pipeline of [[annIvfPqMd5]], derived inside
+    * the query: [[train]] the model over one bounded sample collect,
+    * [[encode]] the corpus, [[search]] it. The result is row-identical to
+    * [[ivfPqFromIndexRows]] at the same parameters, which reads the stored
+    * model and codes instead of training and encoding. The twin's ADC
+    * metric is integer L2 (the Jégou et al. 2011 formulation); the float
+    * path's ADC is a dot-product over normalized sub-vectors — the anchor
+    * hash-checks the derivation machinery (codebook training, encoding,
+    * LUT build, ADC accumulation, shortlist cut, rerank), not the metric
+    * choice, which SimilaritySpec covers on the float path. */
+  def ivfPqMd5Rows(emb: DataFrame, c: Int, iters: Int, sampleMod: Int,
+      nQueries: Int, probes: Int, m: Int, k: Int, shortlist: Int,
+      maxTrain: Int = 4096): DataFrame = {
+    val model = train(emb.sparkSession, intSample(emb, sampleMod, maxTrain), c, iters, m, k)
+    search(emb, encode(emb.spreadByKey(col("vec_id")), model), model,
+      nQueries, probes, shortlist)
+  }
+
+  /** Subspace view of the quantized query dims (s = subspace, i = dim
+    * within it) — the LUT input of [[search]]. */
   private def intPdims(dims: DataFrame, dsub: Int): DataFrame =
     dims.selectExpr("vec_id", s"CAST(d DIV $dsub AS INT) AS s",
       s"CAST(d % $dsub AS INT) AS i", "q")
@@ -1078,9 +1087,9 @@ object Similarity {
       .agg(sum((col("q") - col("val")) * (col("q") - col("val"))).as("dist"))
 
   /** Bounded ADC shortlist (smallest integer L2 first) + exact 1e-6-rounded
-    * cosine rerank on refetched raw vectors — the tail shared by the IVF-PQ
-    * twin and the persisted-index query path. The shortlist is broadcast
-    * onto the corpus for the refetch, so the corpus is never shuffled. */
+    * cosine rerank on refetched raw vectors — the tail of [[search]]. The
+    * shortlist is broadcast onto the corpus for the refetch, so the corpus
+    * is never shuffled. */
   private def intShortlistRerank(emb: DataFrame, adc: DataFrame,
       nQueries: Int, shortlist: Int): DataFrame = {
     val wSl = Window.partitionBy("q_id").orderBy(col("adc"), col("neighbor_id"))
@@ -1252,18 +1261,19 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------
-  // Persisted ANN index (round 17): build-once / query-many split.
+  // Persisted ANN index: build once, query many times.
   //
-  // Every other ANN query in this file derives its index (quantizer,
-  // codebooks, assignments, codes) INSIDE the query — fine for a
-  // correctness anchor, but the one shape that does not survive 100 TB:
-  // a production pipeline builds the index once per corpus snapshot and
-  // answers thousands of queries from the stored artifact. The split
-  // below persists the integer IVF-PQ index (the md5-twin arithmetic, so
-  // the STORED index itself is hash-checkable) as parquet partitioned by
-  // coarse cell, and the query path scans ONLY the probed cells' code
-  // partitions plus the bounded rerank refetch — never re-training, never
-  // re-encoding, never touching unprobed cells.
+  // The in-query twin (ivfPqMd5Rows) trains and encodes inside every
+  // query — fine for a correctness anchor, but a production pipeline
+  // builds the index once per corpus snapshot and answers thousands of
+  // queries from the stored artifact. The store below is the same
+  // pipeline split at the model: the build runs train and encode and
+  // persists the model (`cents`, `books`) and the codes as parquet
+  // partitioned by coarse cell (the integer arithmetic, so the STORED
+  // index itself is hash-checkable); maintenance encodes its batches with
+  // the stored model; and a query reads the stored model and runs the
+  // same search, which scans ONLY the probed cells' code partitions plus
+  // the bounded rerank refetch — never re-training, never re-encoding.
   // ------------------------------------------------------------------
 
   /** Fixed index-model parameters — identical to [[annIvfPqMd5]]'s, so the
@@ -1367,9 +1377,9 @@ object Similarity {
     *  - `meta/`   (corpus_count, dims) — the staleness fingerprint
     *    [[ensureAnnIndex]] checks before trusting a stored index.
     *
-    * All arithmetic is the md5-twin integer pipeline ([[ivfMd5Train]] /
-    * [[pqMd5Train]] / [[graft.functions.IntPqCodes]]), so the persisted
-    * artifact is bit-deterministic and the build output is a full-oracle row
+    * All arithmetic is the integer pipeline the in-query twin runs
+    * ([[train]], [[encode]]), so the persisted artifact is
+    * bit-deterministic and the build output is a full-oracle row
     * ([[annIndexBuild]]). Model training collects the same bounded sample
     * as every other trainer here (≤ 4096 × 64 longs, corpus-independent). */
   def buildAnnIndex(spark: SparkSession, dataDir: String): String =
@@ -1383,41 +1393,23 @@ object Similarity {
     import spark.implicits._
     val root = annIndexRoot(dataDir)
     val sample = intSample(emb, IdxSampleMod, IdxMaxTrain)
-    val dims0 = sample(0)._2.length
-    val coarse = ivfMd5Train(sample, IdxC, IdxIters)
-    val books = pqMd5Train(sample, IdxM, IdxK, IdxIters)
-    // corpus-sized work: ONE fused map-side pass — per-row integer
-    // assignment + PQ encode ([[graft.functions.IntNearestCells]] /
-    // [[graft.functions.IntPqCodes]], bit-identical integer arithmetic to
-    // the relational formulation they replaced in round 21) — then ONE
-    // write clustered by coarse cell. The old shape exploded every vector
-    // into 64 dim rows, joined them against broadcast model tables (a
-    // C×/k× row multiplication), re-aggregated per vector, and paid a
-    // corpus-sized vec_id join to glue assignment to codes; the
-    // repartition by c_id below is now the build's only shuffle of any
-    // kind.
-    // gen=0 is the build generation; maintenance commits land as
+    val model = train(spark, sample, IdxC, IdxIters, IdxM, IdxK)
+    // corpus-sized work: the one [[encode]] pass, then ONE write clustered
+    // by coarse cell — the repartition by c_id is the build's only
+    // shuffle. gen=0 is the build generation; maintenance commits land as
     // gen=1,2,… partitions (nested under the same root, so c_id partition
     // pruning is unchanged) and the committed generation's cell manifest
     // gates which partitions readers trust
-    emb.spreadByKey(col("vec_id"))
-      .select(col("vec_id"),
-        element_at(graft.functions.VectorExprs.intNearestCells(
-          col("embedding"), centVectors(coarse), 1), 1).as("c_id"),
-        posexplode(graft.functions.VectorExprs.intPqCodes(
-          col("embedding"), bookVectors(books, IdxM, IdxK), IdxM, IdxK))
-          .as(Seq("s", "code")))
-      .select(col("vec_id"), col("s"), col("code"), col("c_id"))
+    encode(emb.spreadByKey(col("vec_id")), model)
       .withColumn("gen", lit(0L))
       .repartition(col("c_id"))
       .sortWithinPartitions("vec_id", "s")
       .write.mode("overwrite").partitionBy("gen", "c_id").parquet(s"$root/codes")
-    coarse.flatMap { case (c, vals) =>
+    model.cents.zipWithIndex.flatMap { case (vals, c) =>
       vals.zipWithIndex.map { case (v, d) => (c, d, v) }
     }.toDF(centsSchema.fieldNames.toIndexedSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$root/cents")
-    books.toDF(booksSchema.fieldNames.toIndexedSeq: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/books")
+    model.books.coalesce(1).write.mode("overwrite").parquet(s"$root/books")
     // a rebuild restarts the generation clock: drop stale manifests, then
     // record gen 0's live cells from the just-written partition listing
     graft.util.ArtifactStore.delete(spark, s"$root/cells")
@@ -1426,7 +1418,7 @@ object Similarity {
     writeCellManifest(spark, root, gen = 0L, builtCells.map(c => (0L, c)))
     // sample_n/sample_max pin WHICH rows trained the stored models — the
     // append guard's refusal boundary (see appendAnnIndex)
-    writeAnnMeta(spark, root, dims0, sample.length.toLong,
+    writeAnnMeta(spark, root, sample(0)._2.length, sample.length.toLong,
       sample.map(_._1).max, lastGen = 0L, embFingerprint(emb))
     root
   }
@@ -1439,10 +1431,23 @@ object Similarity {
     StructField("s", IntegerType), StructField("j", IntegerType),
     StructField("i", IntegerType), StructField("val", LongType)))
 
+  /** The model [[buildAnnIndexFrom]] stored under `root` — the one reader
+    * of the `cents`/`books` tables. The centroids are a bounded collect
+    * (C × dims rows); the codebook rows stay a scan, collected only if the
+    * caller encodes ([[IntPqModel.codewords]]). */
+  private def storedModel(spark: SparkSession, root: String): IntPqModel =
+    IntPqModel(
+      centVectors(spark.read.schema(centsSchema).parquet(s"$root/cents").collect()
+        .groupBy(_.getAs[Int]("c"))
+        .map { case (c, rows) =>
+          (c, rows.sortBy(_.getAs[Int]("d")).map(_.getAs[Long]("val")))
+        }.toSeq),
+      spark.read.schema(booksSchema).parquet(s"$root/books"), IdxM, IdxK)
+
   /** Fold an appended batch of embeddings into the stored index — the
     * incremental-maintenance path (round-18 verdict directive 1): the
-    * batch is encoded with the STORED models (no retraining — the fused
-    * per-row assignment/encode against the stored cents/books), its codes are
+    * batch is encoded with the STORED model (no retraining — [[encode]]
+    * against [[storedModel]]), its codes are
     * APPENDED to the cell-partitioned code table (new files inside the
     * existing c_id partitions — old files untouched), and the staleness
     * fingerprint is folded incrementally (stored fp ⊕ batch fp). The old
@@ -1671,25 +1676,10 @@ object Similarity {
       else Some(readCodes(spark, root, touched)
         .join(broadcast(delIds), Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("s"), col("code"), col("c_id")))
-    // append leg encoded with the stored models — the same fused per-row
-    // assignment+encode pass as the build (the stored model readback is a
-    // bounded collect, the same model rows the round-20 path broadcast),
+    // append leg encoded with the stored model — the build's encode pass,
     // so the batch is scanned ONCE with no dim explode and no vec_id join
     val appended: Option[DataFrame] =
-      if (nAdd == 0) None
-      else {
-        val cents = centVectorsFromDf(
-          spark.read.schema(centsSchema).parquet(s"$root/cents"))
-        val bookVs = bookVectorsFromDf(
-          spark.read.schema(booksSchema).parquet(s"$root/books"), IdxM, IdxK)
-        Some(add
-          .select(col("vec_id"),
-            element_at(graft.functions.VectorExprs.intNearestCells(
-              col("embedding"), cents, 1), 1).as("c_id"),
-            posexplode(graft.functions.VectorExprs.intPqCodes(
-              col("embedding"), bookVs, IdxM, IdxK)).as(Seq("s", "code")))
-          .select(col("vec_id"), col("s"), col("code"), col("c_id")))
-      }
+      if (nAdd == 0) None else Some(encode(add, storedModel(spark, root)))
     // the written-cell set is ONE bounded aggregate (collect_set ≤ live
     // cells) over the persisted combined frame — the aggregate's scan
     // populates the cache for the write below, so the survivors+appends
@@ -1878,70 +1868,20 @@ object Similarity {
     graft.util.ArtifactStore.ensuredMeta(spark, annMetaSchema, annIndexRoot(dataDir),
       "fmt", AnnFmt, "corpus_count")(embFingerprint(emb))(buildAnnIndexFrom(spark, dataDir, emb))
 
-  /** Answer IVF-PQ queries FROM the persisted index — the 100 TB hot path.
-    * Corpus-sized inputs touched: the probed cells' partitions of the
-    * stored code table (parquet partition pruning on c_id — the unprobed
-    * 14 of 16 cells are never read) and the rerank's raw-vector refetch
-    * (broadcast shortlist onto the corpus — map-side, no corpus shuffle).
-    * Everything else is query-sized: the stored models broadcast
-    * (16×64 + 8×16×8 integer rows), query dims come off a vec_id-pushdown
-    * scan, and the probed (q_id, c_id) pairs are a bounded driver collect
-    * (≤ nQueries·probes rows — the partition-pruning literals).
+  /** Answer IVF-PQ queries FROM the persisted index — the 100 TB hot path:
+    * ensure the index is fresh ([[ensuredAnnMeta]]), read the stored model
+    * ([[storedModel]]) and the committed codes ([[committedCodes]]), and
+    * run the one [[search]]. The probed cells prune the code table at the
+    * parquet-partition level (the unprobed 14 of 16 cells are never read).
     * No training, no corpus encode: identical rows to [[ivfPqMd5Rows]] at
     * the same params, enforced by the shared oracle + AnnIndexSpec parity. */
   def ivfPqFromIndexRows(spark: SparkSession, dataDir: String,
       nQueries: Int, probes: Int, shortlist: Int): DataFrame = {
-    import spark.implicits._
     val emb = Tables.embeddings(spark, dataDir).select(col("vec_id"), col("embedding"))
     val meta = ensuredAnnMeta(spark, dataDir, emb)
     val root = annIndexRoot(dataDir)
-    val dsub = meta.getAs[Int]("dims") / IdxM
-    val booksDf = broadcast(spark.read.schema(booksSchema).parquet(s"$root/books"))
-    // (vec_id, s, code) + (gen, c_id) partitions; only COMMITTED
-    // generations — an uncommitted gen left by a crashed append must
-    // never leak into answers (its replay will commit it)
-    val codes = committedCodes(spark, root, liveCells(spark, root, meta))
-    // query dims: ONLY the query vectors — vec_id pushdown reaches the scan
-    val qdims = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .select(col("vec_id"), col("d").cast(IntegerType).as("d"),
-        (floor(col("v").cast(DoubleType) * 1000).cast(LongType) + 1024).as("q"))
-    // probed (q_id, c_id) pairs: BOUNDED driver collect (nQueries·probes
-    // rows) — these literals drive the code-table partition pruning. The
-    // stored coarse model rides the fused per-row assignment expression
-    // ([[graft.functions.IntNearestCells]] — bit-identical integer
-    // arithmetic to the relational dims ⋈ cents ⋈ window argmin it
-    // replaced; round 22), so the probe assignment is ONE single-stage
-    // collect over the nQueries pushdown scan instead of an
-    // explode + broadcast-join + partial-agg + window chain.
-    val cents = centVectorsFromDf(spark.read.schema(centsSchema).parquet(s"$root/cents"))
-    val probedPairs = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"),
-        explode(graft.functions.VectorExprs.intNearestCells(
-          col("embedding"), cents, probes)).as("c_id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val cells = probedPairs.map(_._2).distinct.sorted
-    val pruned = codes.where(col("c_id").isin(cells: _*))
-    // candidates: the probed cells' member lists, read straight off the
-    // pruned index (s = 0 picks one row per vector — a pushed filter, no
-    // distinct shuffle)
-    val probedDf = broadcast(probedPairs.toDF("q_id", "c_id"))
-    val cand = pruned.where(col("s") === 0)
-      .select(col("c_id"), col("vec_id").as("neighbor_id"))
-      .join(probedDf, Seq("c_id"))
-      .where(col("neighbor_id") =!= col("q_id"))
-      .select(col("q_id"), col("neighbor_id"))
-    // query LUTs from the STORED books: nQueries·m·k rows
-    val lut = intCodeDists(intPdims(qdims, dsub), booksDf)
-      .select(col("vec_id").as("q_id"), col("s"),
-        col("j").as("code"), col("dist"))
-    // ADC over the pruned stored codes — same economics as [[ivfPqMd5Rows]]
-    val adc = pruned.select(col("vec_id"), col("s"), col("code"))
-      .join(broadcast(cand), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code"))
-      .groupBy(col("q_id"), col("neighbor_id"))
-      .agg(sum(col("dist")).as("adc"))
-    intShortlistRerank(emb, adc, nQueries, shortlist)
+    search(emb, committedCodes(spark, root, liveCells(spark, root, meta)),
+      storedModel(spark, root), nQueries, probes, shortlist)
   }
 
   /** Index build as a registered, full-oracle query: builds + persists the

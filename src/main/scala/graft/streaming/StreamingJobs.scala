@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
 
 import graft.etl.Purchases
 import graft.util.ArtifactStore
@@ -150,42 +150,20 @@ object StreamingJobs {
       .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
   }
 
-  // ---- custom state: flatMapGroupsWithState sessionization ---------------
+  // ---- custom state: transformWithState ------------------------------------
 
   case class Ev(user_id: Long, ts: java.sql.Timestamp, event_type: String)
   case class SessionAgg(user_id: Long, n_events: Long, n_purchases: Long)
 
-  /** C16 custom state (KeyValueGroupedDataset.mapGroupsWithState): running
-    * per-user totals with processing-time timeout — the hand-rolled
-    * stateful operator for semantics window aggs can't express. */
-  def perUserRunningTotals(events: Dataset[Ev]): Dataset[SessionAgg] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[SessionAgg, SessionAgg](GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[Ev], state: GroupState[SessionAgg]) =>
-          val prev = state.getOption.getOrElse(SessionAgg(user, 0L, 0L))
-          var n = prev.n_events
-          var p = prev.n_purchases
-          evs.foreach { e =>
-            n += 1
-            if (e.event_type == "purchase") p += 1
-          }
-          val next = SessionAgg(user, n, p)
-          state.update(next)
-          next
-      }
-  }
-
-  /** C16 custom state, arbitrary-state-v2 form: the same per-user running
-    * totals as [[perUserRunningTotals]] but through the
+  /** C16 custom state, the processor of [[perUserRunningTotals]]: per-user
+    * running totals (events and purchases so far) through the
     * `transformWithState` / [[StatefulProcessor]] API — typed named state
     * variables ([[ValueState]] here; ListState/MapState/timers/TTL are the
     * same handle) held in the configured state store. With the RocksDB
     * provider (exercised in StreamingSpec) state lives off-heap and spills
     * to disk, so per-key state survives far past executor-memory scale —
     * the 100 TB/day formulation of hand-rolled streaming state. State is
-    * partitioned by the groupByKey hash exactly like the v1 operator. */
+    * partitioned by the groupByKey hash. */
   class RunningTotalsProcessor extends StatefulProcessor[Long, Ev, SessionAgg] {
     @transient private var totals: ValueState[SessionAgg] = _
 
@@ -208,7 +186,9 @@ object StreamingJobs {
     }
   }
 
-  def perUserRunningTotalsV2(events: Dataset[Ev]): Dataset[SessionAgg] = {
+  /** C16 custom state: per-user running totals, one output row per user
+    * per micro-batch ([[RunningTotalsProcessor]], update mode). */
+  def perUserRunningTotals(events: Dataset[Ev]): Dataset[SessionAgg] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -20,8 +23,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh temp directory, deleted when the test JVM exits. */
+  def tempDir(prefix: String): Path = SparkSpec.tempDir(prefix)
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; stopped by the JVM exiting
     super.afterAll()
+  }
+}
+
+object SparkSpec {
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(made.forEach(dir => FileUtil.fullyDelete(dir)))
+
+  /** A fresh temp directory under `java.io.tmpdir`: every one made in
+    * this JVM is deleted, with its contents, by one shutdown hook. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    made.add(dir.toFile)
+    dir
   }
 }

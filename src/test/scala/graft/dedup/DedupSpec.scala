@@ -178,7 +178,7 @@ class DedupSpec extends SparkSpec {
 
   test("connected components under a reliable checkpoint dir: same labels, files written") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
+    val dir = tempDir("cc_ckpt").toString
     val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L), (100L, 200L))
       .toDF("doc_a", "doc_b")
     val out = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -33,7 +32,7 @@ class EtlPropertySpec extends SparkSpec {
 
   test("CSV -> transform round trip is 1:1 on valid input and hash-deterministic") {
     sampleSeeds(3, 77L).foreach { seed =>
-      val dir = Files.createTempDirectory("prop_csv").toFile.getAbsolutePath + "/gen"
+      val dir = tempDir("prop_csv").toFile.getAbsolutePath + "/gen"
       val rows = Purchases.generate(seed, java.time.LocalDateTime.of(2021, 3, 21, 10, 0))
       Purchases.writeGeneratedCsv(spark, rows, dir)
       val out = Purchases.etl(spark, dir).collect()

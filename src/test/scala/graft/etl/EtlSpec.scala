@@ -116,7 +116,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A7 (documented intent): permissive mode drops malformed rows, keeps good ones") {
-    val dir = Files.createTempDirectory("etl_perm").toFile
+    val dir = tempDir("etl_perm").toFile
     val f = new java.io.File(dir, "bad.csv")
     val w = new java.io.PrintWriter(f)
     w.println("alice@example.com,100,2,50,2021-03-21T11:00:00")
@@ -130,7 +130,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A8 (reference-actual): strict mode aborts the batch on garbage fields") {
-    val dir = Files.createTempDirectory("etl_strict").toFile
+    val dir = tempDir("etl_strict").toFile
     val f = new java.io.File(dir, "bad.csv")
     val w = new java.io.PrintWriter(f)
     w.println("alice@example.com,100,2,50,2021-03-21T11:00:00")
@@ -142,7 +142,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A11: error-tolerant sink routes failures to dead-letter files, not the driver") {
-    val dlDir = Files.createTempDirectory("dead_letter").toFile.getAbsolutePath
+    val dlDir = tempDir("dead_letter").toFile.getAbsolutePath
     val df = Purchases.etl(spark, exampleDir).limit(100)
     // pass a file: URI — the sink resolves it through the Hadoop FS API,
     // the same code path a cluster uses for hdfs:// or s3a:// dead letters
@@ -168,7 +168,7 @@ class EtlSpec extends SparkSpec {
     // per-row dead-letter catch and kills the task attempt itself
     // (retried because SparkSpec runs local[4, 2]).
     import spark.implicits._
-    val dlDir = Files.createTempDirectory("dead_letter_retry").toFile.getAbsolutePath
+    val dlDir = tempDir("dead_letter_retry").toFile.getAbsolutePath
     SinkRetryFault.reset()
     // 2 deterministic partitions: 0..9 and 10..19, in order
     val df = spark.sparkContext.parallelize(0L until 20L, 2).toDF("id")
@@ -204,7 +204,7 @@ class EtlSpec extends SparkSpec {
   test("A12 scale path: hour-partitioned ordered write keeps per-partition order") {
     // three generated hourly files, rows shuffled so the sort has work
     val (landing, batches) = HourlyBatches.landing(0 until 3)
-    val out = Files.createTempDirectory("purch_part").resolve("t")
+    val out = tempDir("purch_part").resolve("t")
     Purchases.writeOrderedPartitioned(Purchases.etl(spark, landing.toString), out.toString)
     val back = spark.read.parquet(out.toString)
     assert(back.count() === batches.map(_.size).sum.toLong)
@@ -231,7 +231,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A13/A14: DDL + the published query run verbatim over the loaded table") {
-    val loc = Files.createTempDirectory("purch_table").toFile.getAbsolutePath + "/purchases"
+    val loc = tempDir("purch_table").toFile.getAbsolutePath + "/purchases"
     Purchases.etl(spark, exampleDir)
       .write.mode("overwrite").parquet(loc)
     spark.sql("DROP TABLE IF EXISTS purchases")
@@ -259,7 +259,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("JSON-lines source format produces identical results to the CSV path") {
-    val dir = Files.createTempDirectory("etl_jsonl").toFile
+    val dir = tempDir("etl_jsonl").toFile
     val w = new java.io.PrintWriter(new java.io.File(dir, "batch.jsonl"))
     w.println("""{"email":"alice@example.com","item_id":"100","quantity":"2","price":"50","purchase_date":"2021-03-21T11:00:00"}""")
     w.println("""{"email":"bob@example.com","item_id":"101","quantity":"1","price":"60","purchase_date":"2021-03-21T11:01:00"}""")
@@ -273,7 +273,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("ORC warehouse round-trip preserves the purchases schema and rows") {
-    val loc = Files.createTempDirectory("purch_orc").toFile.getAbsolutePath + "/t"
+    val loc = tempDir("purch_orc").toFile.getAbsolutePath + "/t"
     val df = Purchases.etl(spark, exampleDir)
     df.write.mode("overwrite").orc(loc)
     val back = spark.read.orc(loc)
@@ -283,7 +283,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("the committed example CSVs are byte for byte what the generator writes") {
-    val dir = Files.createTempDirectory("example_regen")
+    val dir = tempDir("example_regen")
     val written = HourlyBatches.exampleHours.map(h =>
       HourlyBatches.write(dir, HourlyBatches.name(h), HourlyBatches.rows(h)))
     assert(HourlyBatches.exampleFiles.map(_.getFileName.toString) ===
@@ -295,7 +295,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("A17: generated CSV round-trips through the pipeline") {
-    val dir = Files.createTempDirectory("gen_csv").toFile.getAbsolutePath + "/out"
+    val dir = tempDir("gen_csv").toFile.getAbsolutePath + "/out"
     val rows = Purchases.generate(3L, java.time.LocalDateTime.of(2021, 3, 21, 12, 0))
     Purchases.writeGeneratedCsv(spark, rows, dir)
     val back = Purchases.etl(spark, dir)

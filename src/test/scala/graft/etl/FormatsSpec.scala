@@ -12,7 +12,7 @@ class FormatsSpec extends SparkSpec {
 
   test("ORC roundtrip preserves schema, rows, and values vs the parquet source") {
     val docs = graft.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
     assert(back.schema === docs.schema)
@@ -23,7 +23,7 @@ class FormatsSpec extends SparkSpec {
 
   test("ORC scans push filters down like parquet") {
     val docs = graft.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_pd").toString
+    val dir = tempDir("graft_orc_pd").toString
     docs.write.mode("overwrite").orc(dir)
     val q = spark.read.orc(dir).where(col("lang") === "en").select("doc_id", "lang")
     val plan = q.queryExecution.executedPlan.toString
@@ -32,7 +32,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("text source reads a raw line corpus with one row per line") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text").toString
+    val dir = tempDir("graft_text").toString
     val docs = graft.Tables.documents(spark, sf).select("text")
     docs.write.mode("overwrite").text(dir)
     val back = spark.read.text(dir)

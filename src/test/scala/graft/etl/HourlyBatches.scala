@@ -56,7 +56,7 @@ object HourlyBatches {
   /** A fresh landing directory holding one shuffled CSV per hour of
     * `hours`; returns it with the rows of each file. */
   def landing(hours: Seq[Int]): (Path, Seq[Seq[Row]]) = {
-    val dir = Files.createTempDirectory("landing")
+    val dir = graft.SparkSpec.tempDir("landing")
     val batches = hours.map { h =>
       val rs = shuffled(rows(h), h.toLong)
       write(dir, name(h), rs)

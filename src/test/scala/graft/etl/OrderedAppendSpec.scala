@@ -66,14 +66,14 @@ class OrderedAppendSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** One file of shuffled rows through `etlOf` and `writeOrdered`, appended
     * after an earlier batch: one job, no range shuffle, one new part file. */
   private def assertOneJobAppend(ext: String, etlOf: String => DataFrame): Unit = {
-    val table = Files.createTempDirectory("ordered_append").resolve("purchases")
-    val earlier = Files.createTempDirectory("landing")
+    val table = tempDir("ordered_append").resolve("purchases")
+    val earlier = tempDir("landing")
     HourlyBatches.write(earlier, HourlyBatches.name(0, ext), HourlyBatches.rows(0))
     append(etlOf(earlier.toString), table)
 
     val rows = HourlyBatches.shuffled(HourlyBatches.rows(1), 7L)
     assert(rows.map(_._5) !== rows.map(_._5).sorted, "input must be out of order")
-    val landing = Files.createTempDirectory("landing")
+    val landing = tempDir("landing")
     HourlyBatches.write(landing, HourlyBatches.name(1, ext), rows)
     val df = etlOf(landing.toString)
     assert(Purchases.readsOneSplit(df))
@@ -98,7 +98,7 @@ class OrderedAppendSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * files that give a total order when read in name order. */
   private def assertGlobalSort(df: DataFrame, input: Seq[Row]): Unit = {
     assert(!Purchases.readsOneSplit(df))
-    val a = append(df, Files.createTempDirectory("ordered_append").resolve("purchases"))
+    val a = append(df, tempDir("ordered_append").resolve("purchases"))
     assert(a.rangeShuffles === 1)
     assert(a.jobs > 1)
     assert(a.newFiles.nonEmpty)

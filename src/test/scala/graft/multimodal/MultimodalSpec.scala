@@ -106,7 +106,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("mm_frames").toString
+    val tmp = tempDir("mm_frames").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Multimodal.frameSample.fn(spark, tmp).collect()
       .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getLong(1)).toSeq.sorted }
@@ -127,7 +127,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("mm_sig").toString
+    val tmp = tempDir("mm_sig").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val rows = Multimodal.brightnessSig.fn(spark, tmp).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))

@@ -83,7 +83,7 @@ class ScaleOpsSpec extends SparkSpec {
     val o = graft.Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice")
     val l = graft.Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    val dir = java.nio.file.Files.createTempDirectory("bucketed_join").toString
+    val dir = tempDir("bucketed_join").toString
     ArtifactStore.writeBucketed(o, s"$dir/orders", "o_orderkey", 8)
     ArtifactStore.writeBucketed(l, s"$dir/lineitem", "o_orderkey", 8)
     // disable auto-broadcast: at real scale neither side broadcasts — the
@@ -106,7 +106,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("partitioned table: partition-column predicate prunes at planning time") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = java.nio.file.Files.createTempDirectory("part_events").toString
+    val dir = tempDir("part_events").toString
     val events = graft.Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
     ScaleOps.PartitionedTables.write(events, dir, "day")
@@ -333,8 +333,8 @@ class ScaleOpsSpec extends SparkSpec {
     val grid = spark.range(65536)
       .select((col("id") % 256).cast("int").as("x"),
         (col("id") / 256).cast("int").as("y"))
-    val linDir = java.nio.file.Files.createTempDirectory("zorder_lin").toString
-    val zDir = java.nio.file.Files.createTempDirectory("zorder_z").toString
+    val linDir = tempDir("zorder_lin").toString
+    val zDir = tempDir("zorder_z").toString
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(linDir)
     ScaleOps.writeZOrdered(grid, zDir, "x", "y", files = 16)

@@ -24,7 +24,7 @@ class GraphSpec extends SparkSpec {
 
   test("pagerank under a reliable checkpoint dir matches the local-checkpoint ranks") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pr_ckpt").toString
+    val dir = tempDir("pr_ckpt").toString
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
       .toDF("src", "dst")
     val local = Relational.pageRankRanks(edges, iters = 3)

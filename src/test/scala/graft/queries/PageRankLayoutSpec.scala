@@ -113,7 +113,7 @@ class PageRankLayoutSpec extends SparkSpec {
     val full = currentEdges(sf)
       .orderBy("src", "dst").collect().map(_.toString).toSeq
     // old snapshot: built from a DELETABLE lineitem copy under its own root
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pr_append").toFile
+    val tmp = tempDir("graft_pr_append").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(key)))
@@ -163,7 +163,7 @@ class PageRankLayoutSpec extends SparkSpec {
 
   test("delete ≡ from-scratch rebuild over the reduced corpus; guards " +
     "refuse partial or unknown orders") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pr_delete").toFile
+    val tmp = tempDir("graft_pr_delete").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(key)))
@@ -172,7 +172,7 @@ class PageRankLayoutSpec extends SparkSpec {
     li.write.parquet(liPath)
     PageRankLayout.buildLayoutFrom(spark, key, spark.read.parquet(liPath))
     // expectation: a from-scratch build over the reduced corpus
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft_pr_delete_exp").toFile
+    val tmp2 = tempDir("graft_pr_delete_exp").toFile
     val expKey = tmp2.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(expKey)))
@@ -224,7 +224,7 @@ class PageRankLayoutSpec extends SparkSpec {
   test("maintenance commits are COPY-ON-WRITE: untouched bucket files are " +
     "reused (same inode), only delta-touched buckets are rewritten") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pr_cow").toFile
+    val tmp = tempDir("graft_pr_cow").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(key)))
@@ -299,7 +299,7 @@ class PageRankLayoutSpec extends SparkSpec {
     "bucket and per ob, and maintenance + from-layout parity hold at the " +
     "scaled count") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pr_scale").toFile
+    val tmp = tempDir("graft_pr_scale").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(key)))
@@ -382,7 +382,7 @@ class PageRankLayoutSpec extends SparkSpec {
 
   test("a frame resolved before an append keeps scanning after it " +
     "(versioned generations retain the predecessor)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pr_rdr").toFile
+    val tmp = tempDir("graft_pr_rdr").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(key)))
@@ -410,7 +410,7 @@ class PageRankLayoutSpec extends SparkSpec {
   }
 
   test("a same-count content change triggers a layout rebuild; an unchanged corpus does not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_mut").toFile.getAbsolutePath
+    val dir = tempDir("graft_pr_mut").toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(dir)))
     val src = graft.Tables.lineitem(spark, sf)

@@ -48,7 +48,7 @@ class PrLifecycleFuzzSpec extends SparkSpec {
   test(s"persisted-layout lifecycle stays parity-green over $draws random " +
     s"mutate/append/delete/touch/upsert/replay draws (seed $seed)") {
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_fuzz")
+    val dir = tempDir("graft_pr_fuzz")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(dir)))

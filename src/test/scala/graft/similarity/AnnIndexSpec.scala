@@ -106,7 +106,7 @@ class AnnIndexSpec extends SparkSpec {
     freshIndex()
     val full = Similarity.annIndexBuild.fn(spark, sf).collect().map(_.toString).toSeq
     // old snapshot: written to a DELETABLE copy, keyed by its own index root
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_append").toFile
+    val tmp = tempDir("graft_ann_append").toFile
     val corpusKey = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(corpusKey)))
@@ -141,7 +141,7 @@ class AnnIndexSpec extends SparkSpec {
     "generation — same rows, same fingerprint, manifest bounded by the " +
     "cell count; an already-compact index is a no-op") {
     import graft.Tables
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_compact").toFile
+    val tmp = tempDir("graft_ann_compact").toFile
     val key = tmp.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(key)))
@@ -223,7 +223,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("a same-count content change triggers a rebuild; an unchanged corpus does not") {
     import graft.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_mut").toFile.getAbsolutePath
+    val dir = tempDir("graft_ann_mut").toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(dir)))
     val src = Tables.embeddings(spark, sf)

@@ -53,7 +53,7 @@ class AnnLifecycleFuzzSpec extends SparkSpec {
   test(s"persisted-index lifecycle stays parity-green over $draws random " +
     s"mutate/append/touch/delete/upsert/replay draws (seed $seed)") {
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_fuzz")
+    val dir = tempDir("graft_ann_fuzz")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(dir)))

@@ -46,7 +46,7 @@ class SinkFuzzSpec extends SparkSpec {
     import graft.similarity.Similarity
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_sinkfuzz")
+    val dir = tempDir("graft_ann_sinkfuzz")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(dir)))
@@ -63,7 +63,7 @@ class SinkFuzzSpec extends SparkSpec {
     val dims = src.head().getAs[scala.collection.Seq[Float]]("embedding").length
     import spark.implicits._
     val in = MemoryStream[(String, Long, Array[Float])]
-    val ckpt = java.nio.file.Files.createTempDirectory("ann_sinkfuzz_ckpt").toString
+    val ckpt = tempDir("ann_sinkfuzz_ckpt").toString
     def startSink() = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("op", "vec_id", "embedding"), ckpt)(
       (b, id) => Similarity.mergeAnnCdcBatch(b.sparkSession, dir, b, id))
@@ -154,7 +154,7 @@ class SinkFuzzSpec extends SparkSpec {
     import graft.queries.{PageRankLayout, Relational}
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_sinkfuzz")
+    val dir = tempDir("graft_pr_sinkfuzz")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(dir)))
@@ -172,7 +172,7 @@ class SinkFuzzSpec extends SparkSpec {
     var nextOrder = corpus.agg(max("l_orderkey")).head().getLong(0) + 1
     import spark.implicits._
     val in = MemoryStream[(String, Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("pr_sinkfuzz_ckpt").toString
+    val ckpt = tempDir("pr_sinkfuzz_ckpt").toString
     def startSink() = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("op", "l_orderkey", "l_partkey"), ckpt)(
       (b, id) => PageRankLayout.mergeLayoutCdcBatch(b.sparkSession, dir, b, id))

@@ -21,7 +21,7 @@ class StreamingSpec extends SparkSpec {
     val q = df.writeStream
       .format("memory").queryName(name).outputMode(mode)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString)
+        tempDir(s"ckpt_$name").toString)
       .start()
     q.processAllAvailable()
     q.stop()
@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSpec {
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString)
+          tempDir(s"ckpt_$name").toString)
         .start()
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       q.stop()
@@ -219,7 +219,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingJobs.dedupWithinWatermark(events).writeStream
       .format("memory").queryName("dedup_bounded").outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_dedup_bounded").toString)
+        tempDir("ckpt_dedup_bounded").toString)
       .start()
     val k = 50
     val nBatches = 8
@@ -242,7 +242,7 @@ class StreamingSpec extends SparkSpec {
 
   test("C16 transformWithState state is O(live keys), not O(events), " +
     "across event-heavy batches on RocksDB") {
-    // perUserRunningTotalsV2 keeps ONE ValueState row per user; 6 batches
+    // perUserRunningTotals keeps ONE ValueState row per user; 6 batches
     // x 200 events over the same 20 users must leave exactly 20 state
     // rows — state scales with the key space, never with the feed volume
     import spark.implicits._
@@ -252,10 +252,10 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[Ev]
-      val q = StreamingJobs.perUserRunningTotalsV2(in.toDS()).writeStream
+      val q = StreamingJobs.perUserRunningTotals(in.toDS()).writeStream
         .format("memory").queryName("totals_bounded").outputMode(OutputMode.Update())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt_totals_bounded").toString)
+          tempDir("ckpt_totals_bounded").toString)
         .start()
       val users = 20
       val sizes = (0 until 6).map { _ =>
@@ -323,28 +323,6 @@ class StreamingSpec extends SparkSpec {
     assert(out === Seq(1L))
   }
 
-  test("C16 custom state: mapGroupsWithState accumulates per-user totals") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    in.addData(
-      Ev(1L, ts("2024-01-01 10:00:00"), "click"),
-      Ev(1L, ts("2024-01-01 10:01:00"), "purchase"),
-      Ev(2L, ts("2024-01-01 10:02:00"), "view"))
-    val out = StreamingJobs.perUserRunningTotals(in.toDS())
-    val q = out.writeStream
-      .format("memory").queryName("totals").outputMode(OutputMode.Update())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_totals").toString)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("totals")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows.contains((1L, 2L, 1L)))
-    assert(rows.contains((2L, 1L, 0L)))
-  }
-
   test("C16 custom state: transformWithState accumulates across batches on RocksDB") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -353,11 +331,11 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[Ev]
-      val out = StreamingJobs.perUserRunningTotalsV2(in.toDS())
+      val out = StreamingJobs.perUserRunningTotals(in.toDS())
       val q = out.writeStream
         .format("memory").queryName("totals_v2").outputMode(OutputMode.Update())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt_totals_v2").toString)
+          tempDir("ckpt_totals_v2").toString)
         .start()
       in.addData(
         Ev(1L, ts("2024-01-01 10:00:00"), "click"),
@@ -393,7 +371,7 @@ class StreamingSpec extends SparkSpec {
       val q = out.writeStream
         .format("memory").queryName("sessions_expired").outputMode(OutputMode.Append())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt_sess_exp").toString)
+          tempDir("ckpt_sess_exp").toString)
         .start()
       // batch 1: user 1 has two events, user 2 one — all sessions open
       in.addData(
@@ -433,8 +411,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("B4 end-to-end: streamed CSVs land in an hour-partitioned parquet table") {
-    val inDir = java.nio.file.Files.createTempDirectory("stream_in2").toFile
-    val outDir = java.nio.file.Files.createTempDirectory("stream_out").toString + "/purchases"
+    val inDir = tempDir("stream_in2").toFile
+    val outDir = tempDir("stream_out").toString + "/purchases"
     val w = new java.io.PrintWriter(new java.io.File(inDir, "2021-03-21T11.csv"))
     w.println("alice@example.com,100,2,50,2021-03-21T11:00:00")
     w.println("bob@example.com,101,1,60,2021-03-21T12:30:00")
@@ -445,7 +423,7 @@ class StreamingSpec extends SparkSpec {
       .partitionBy("hour")
       .option("path", outDir)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_e2e").toString)
+        tempDir("ckpt_e2e").toString)
       .outputMode(OutputMode.Append())
       .start()
     q.processAllAvailable()
@@ -456,7 +434,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("B4 file-stream analogue of the GCS trigger processes dropped CSVs") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_in").toFile
+    val dir = tempDir("stream_in").toFile
     val w = new java.io.PrintWriter(new java.io.File(dir, "2021-03-21T11.csv"))
     w.println("alice@example.com,100,2,50,2021-03-21T11:00:00")
     w.println("bob@example.com,101,1,60,2021-03-21T11:01:00")
@@ -464,7 +442,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingJobs.purchaseFileStream(spark, dir.getAbsolutePath)
       .writeStream.format("memory").queryName("purch").outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_purch").toString)
+        tempDir("ckpt_purch").toString)
       .start()
     q.processAllAvailable()
     q.stop()
@@ -481,7 +459,7 @@ class StreamingSpec extends SparkSpec {
     val q = enriched.writeStream.format("memory").queryName("enriched")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_enrich").toString)
+        tempDir("ckpt_enrich").toString)
       .start()
     in.addData((1L, 10.0), (2L, 5.0), (3L, 7.0)) // 3 has no dim row
     q.processAllAvailable()
@@ -494,8 +472,8 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch rollup maintenance: state equals the one-pass aggregate, replay-safe") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val state = java.nio.file.Files.createTempDirectory("roll_state").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("roll_ckpt").toString
+    val state = tempDir("roll_state").toString
+    val ckpt = tempDir("roll_ckpt").toString
     val in = MemoryStream[(String, Int, Double)]
     val q = StreamingJobs.rollupMaintenanceSink(
       in.toDF().toDF("event_type", "h", "value"), state, ckpt)
@@ -543,7 +521,7 @@ class StreamingSpec extends SparkSpec {
     }.toMap
     val Seq(ka, kb) = pool.combinations(2)
       .find { case Seq(a, b) => bucketOf(a) != bucketOf(b) }.get
-    val state = java.nio.file.Files.createTempDirectory("roll_bkt").toString
+    val state = tempDir("roll_bkt").toString
     StreamingJobs.mergeRollupBatch(
       Seq((ka, 1, 1.0), (kb, 1, 2.0)).toDF("event_type", "h", "value"),
       batchId = 0L, stateDir = state)
@@ -569,7 +547,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rollup readers never see a torn generation ahead of the commit marker") {
     import spark.implicits._
-    val state = java.nio.file.Files.createTempDirectory("roll_torn").toString
+    val state = tempDir("roll_torn").toString
     StreamingJobs.mergeRollupBatch(
       Seq(("click", 1, 1.0)).toDF("event_type", "h", "value"),
       batchId = 0L, stateDir = state)
@@ -612,7 +590,7 @@ class StreamingSpec extends SparkSpec {
       val nBatches = 2 + rnd.nextInt(4)
       val cuts = rows.zipWithIndex.groupBy(_._2 % nBatches).toSeq.sortBy(_._1)
         .map(_._2.map(_._1))
-      val state = java.nio.file.Files.createTempDirectory(s"roll_prop$seed").toString
+      val state = tempDir(s"roll_prop$seed").toString
       cuts.zipWithIndex.foreach { case (batch, id) =>
         StreamingJobs.mergeRollupBatch(
           batch.toDF("event_type", "h", "value"), batchId = id.toLong, stateDir = state)
@@ -642,14 +620,14 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(("click", 1, 1.0)).toDF("event_type", "h", "value")
     // state wiped (or repointed) under a surviving checkpoint: the stream
     // resumes at batchId 5 but the fresh directory has no _LATEST marker
-    val fresh = java.nio.file.Files.createTempDirectory("roll_fresh").toString
+    val fresh = tempDir("roll_fresh").toString
     val e1 = intercept[IllegalStateException] {
       StreamingJobs.mergeRollupBatch(batch, batchId = 5L, stateDir = fresh)
     }
     assert(e1.getMessage.contains("wiped"))
     // checkpoint recreated over surviving state: the stream restarts at
     // batchId 0 while the state is already at generation 1
-    val state = java.nio.file.Files.createTempDirectory("roll_div").toString
+    val state = tempDir("roll_div").toString
     StreamingJobs.mergeRollupBatch(batch, batchId = 0L, stateDir = state)
     StreamingJobs.mergeRollupBatch(batch, batchId = 1L, stateDir = state)
     val e2 = intercept[IllegalStateException] {
@@ -668,8 +646,8 @@ class StreamingSpec extends SparkSpec {
   test("idempotent foreachBatch sink: batch replay rewrites, never duplicates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("idem_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("idem_ckpt").toString
+    val out = tempDir("idem_out").toString
+    val ckpt = tempDir("idem_ckpt").toString
     val in = MemoryStream[(Long, String)]
     val q = StreamingJobs.idempotentParquetSink(
       in.toDF().toDF("id", "v"), out, ckpt)
@@ -698,7 +676,7 @@ class StreamingSpec extends SparkSpec {
     // by the restored state, and nothing already committed re-emits.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_dedup_restart").toString
+    val ckpt = tempDir("ckpt_dedup_restart").toString
     val in = MemoryStream[(Long, Timestamp)]
     val plan = StreamingJobs.dedupWithinWatermark(in.toDF().toDF("event_id", "ts"))
     // the memory sink refuses checkpoint recovery; foreachBatch is the
@@ -742,9 +720,9 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("ckpt_totals_restart").toString
+      val ckpt = tempDir("ckpt_totals_restart").toString
       val in = MemoryStream[Ev]
-      val plan = StreamingJobs.perUserRunningTotalsV2(in.toDS())
+      val plan = StreamingJobs.perUserRunningTotals(in.toDS())
       val emitted = new scala.collection.mutable.ArrayBuffer[(Long, (Long, Long, Long))]()
       def start() = plan.writeStream
         .outputMode(OutputMode.Update())
@@ -802,7 +780,7 @@ class StreamingSpec extends SparkSpec {
     import graft.similarity.Similarity
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ann_sink").toFile.getAbsolutePath
+    val dir = tempDir("ann_sink").toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(dir)))
     val emb = graft.Tables.embeddings(spark, sf)
@@ -817,7 +795,7 @@ class StreamingSpec extends SparkSpec {
     val b0 = rowsOf(emb.where(pmod(col("vec_id"), lit(8)) === 3))
     val b1 = rowsOf(emb.where(pmod(col("vec_id"), lit(8)) === 7))
     val in = MemoryStream[(Long, Array[Float])]
-    val ckpt = java.nio.file.Files.createTempDirectory("ann_sink_ckpt").toString
+    val ckpt = tempDir("ann_sink_ckpt").toString
     val q = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("vec_id", "embedding"), ckpt)(
       (b, id) => Similarity.mergeAnnIndexBatch(b.sparkSession, dir, b, id))
@@ -833,7 +811,7 @@ class StreamingSpec extends SparkSpec {
     }
     // state after the stream ≡ a one-shot build over the full corpus
     val streamed = committedCodeRows
-    val oneShotKey = java.nio.file.Files.createTempDirectory("ann_oneshot")
+    val oneShotKey = tempDir("ann_oneshot")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(oneShotKey)))
@@ -868,7 +846,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.PageRankLayout
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pr_sink").toFile.getAbsolutePath
+    val dir = tempDir("pr_sink").toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(dir)))
     val li = graft.Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
@@ -879,7 +857,7 @@ class StreamingSpec extends SparkSpec {
     val b0 = rowsOf(li.where(pmod(col("l_orderkey"), lit(8)) === 0))
     val b1 = rowsOf(li.where(pmod(col("l_orderkey"), lit(8)) === 4))
     val in = MemoryStream[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("pr_sink_ckpt").toString
+    val ckpt = tempDir("pr_sink_ckpt").toString
     val q = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("l_orderkey", "l_partkey"), ckpt)(
       (b, id) => PageRankLayout.mergeLayoutBatch(b.sparkSession, dir, b, id))
@@ -893,7 +871,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(s"$r/v=$g/edges")
         .select("src", "dst", "w", "wn").collect().map(_.toString).sorted.toSeq
     }
-    val oneShotKey = java.nio.file.Files.createTempDirectory("pr_oneshot")
+    val oneShotKey = tempDir("pr_oneshot")
       .toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(PageRankLayout.layoutRoot(oneShotKey)))
@@ -925,7 +903,7 @@ class StreamingSpec extends SparkSpec {
     import graft.similarity.Similarity
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ann_cdc").toFile.getAbsolutePath
+    val dir = tempDir("ann_cdc").toFile.getAbsolutePath
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(Similarity.annIndexRoot(dir)))
     val emb = graft.Tables.embeddings(spark, sf)
@@ -946,7 +924,7 @@ class StreamingSpec extends SparkSpec {
     val bIns = cdcRows(bDf, "I")
     val bDel = cdcRows(bDf, "D")
     val in = MemoryStream[(String, Long, Array[Float])]
-    val ckpt = java.nio.file.Files.createTempDirectory("ann_cdc_ckpt").toString
+    val ckpt = tempDir("ann_cdc_ckpt").toString
     val q = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("op", "vec_id", "embedding"), ckpt)(
       (b, id) => Similarity.mergeAnnCdcBatch(b.sparkSession, dir, b, id))
@@ -973,7 +951,7 @@ class StreamingSpec extends SparkSpec {
     // net corpus after the CDC feed: base ∪ A-reversed (B came and went)
     val net = emb.where(!pmod(col("vec_id"), lit(8)).isin(3, 7))
       .unionByName(aDf.withColumn("embedding", reverse(col("embedding"))))
-    val oneShotKey = java.nio.file.Files.createTempDirectory("ann_cdc_oneshot")
+    val oneShotKey = tempDir("ann_cdc_oneshot")
       .toFile.getAbsolutePath
     val osRoot = Similarity.buildAnnIndexFrom(spark, oneShotKey, net)
     val oneShot = spark.read.parquet(s"$osRoot/codes")
@@ -1006,7 +984,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.PageRankLayout
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pr_cdc").toFile.getAbsolutePath
+    val dir = tempDir("pr_cdc").toFile.getAbsolutePath
     val li = graft.Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
     val s0 = li.where(pmod(col("l_orderkey"), lit(8)) === 0)
     val s4 = li.where(pmod(col("l_orderkey"), lit(8)) === 4)
@@ -1017,7 +995,7 @@ class StreamingSpec extends SparkSpec {
     def cdcRows(df: org.apache.spark.sql.DataFrame, op: String): Seq[(String, Long, Long)] =
       df.collect().map(r => (op, r.getLong(0), r.getLong(1))).toSeq
     val in = MemoryStream[(String, Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("pr_cdc_ckpt").toString
+    val ckpt = tempDir("pr_cdc_ckpt").toString
     val q = StreamingJobs.foreachBatchSink(
       in.toDF().toDF("op", "l_orderkey", "l_partkey"), ckpt)(
       (b, id) => PageRankLayout.mergeLayoutCdcBatch(b.sparkSession, dir, b, id))
@@ -1036,7 +1014,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(s"$r/v=$g/edges")
         .select("src", "dst", "w", "wn").collect().map(_.toString).sorted.toSeq
     }
-    val oneShotKey = java.nio.file.Files.createTempDirectory("pr_cdc_oneshot")
+    val oneShotKey = tempDir("pr_cdc_oneshot")
       .toFile.getAbsolutePath
     PageRankLayout.buildLayoutFrom(spark, oneShotKey,
       li.where(!pmod(col("l_orderkey"), lit(8)).isin(0, 4)).unionByName(s0Fixed))
@@ -1074,8 +1052,8 @@ class StreamingSpec extends SparkSpec {
     val p2 = Seq((1L, ts("2024-01-01 10:00:00"), 9003L),
       (3L, ts("2024-01-01 09:55:00"), 9004L))
     val in = MemoryStream[(Long, Timestamp, Long)]
-    val out = java.nio.file.Files.createTempDirectory("asof_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("asof_ckpt").toString
+    val out = tempDir("asof_out").toString
+    val ckpt = tempDir("asof_ckpt").toString
     val payload = Seq("event_id" -> "last_click_id", "ts" -> "last_click_ts")
     val q = StreamingJobs.asofEnrichmentSink(
       in.toDF().toDF("user_id", "ts", "purchase_id"), dim,

@@ -40,7 +40,7 @@ class StoreProtocolSpec extends SparkSpec {
   /** Runs `f` over a private copy of `table`, so no store another spec
     * builds over `sf` is touched; deletes the copy and its store after. */
   private def withCorpus(st: Store)(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_protocol").toFile.getAbsolutePath
+    val dir = tempDir("graft_protocol").toFile.getAbsolutePath
     Tables.load(spark, sf, st.table).write.parquet(s"$dir/${st.table}.parquet")
     try f(dir)
     finally Seq(dir, st.root(dir))
@@ -99,7 +99,7 @@ class StoreProtocolSpec extends SparkSpec {
 
   test("both stores build, append and read under an explicit file: URI root, " +
     "with the same results as under the default root") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_protocol").toFile.getAbsolutePath
+    val dir = tempDir("graft_protocol").toFile.getAbsolutePath
     Seq("lineitem", "embeddings").foreach { t =>
       Tables.load(spark, sf, t).write.parquet(s"$dir/$t.parquet")
     }
@@ -116,7 +116,7 @@ class StoreProtocolSpec extends SparkSpec {
         .collect()
       (ranks.map(_.toString).sorted.toSeq, knn.map(_.toString).sorted.toSeq)
     }
-    val uriRoot = java.nio.file.Files.createTempDirectory("graft_uri_root").toFile
+    val uriRoot = tempDir("graft_uri_root").toFile
     try {
       val atDefault = run()
       val prev = sys.props.get("graft.artifacts.root")

@@ -20,7 +20,7 @@ class StoreSchemaSpec extends SparkSpec {
     * and tampered metas never touch the store other specs build over `sf`;
     * deletes the copy and its stores afterwards. */
   private def withCorpus(table: String)(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_schema_$table")
+    val dir = tempDir(s"graft_schema_$table")
       .toFile.getAbsolutePath
     Tables.load(spark, sf, table).write.parquet(s"$dir/$table.parquet")
     try f(dir)
